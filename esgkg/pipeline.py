@@ -1,33 +1,40 @@
-"""End-to-end KG-construction pipeline (SURVEY.md §3.1 Spark redesign):
+"""End-to-end KG-construction pipeline (SURVEY.md §3.1 Spark redesign).
 
-pages →(extract: F2∘F1 pandas UDF)→ text →(P3)→ sections
-      →(U1 UDTF)→ raw_triples →(U5 link)→ linked_triples
-      →(C1-C4)→ canonical triples →(J3)→ nodes/edges
-      →(U3)→ predicted_links
+`build_kg` runs one stage list in both of its modes:
 
-Each stage commits to the manifest (idempotent resume). `run(...)` is the
-flagship entry used by __spark_entry__.entry, the bench harness, and the
-scaling-efficiency measurement.
+    pages →(F2∘F1)→ text →(U1)→ raw_triples                 side outputs
+    pages →(fused F2∘F1∘U1∘U5 map)→ linked_triples          (subj, pred, obj, pid)
+          → surface_stats →(C1-C4)→ canon_map → triples (canonical rewrite)
+          →(J3)→ nodes ∥ edges →(U3)→ predicted_links
+
+Every named output goes through `keep`, the one materialization step:
+
+* bench mode (no `base_dir`): each output is lazy, an eager
+  localCheckpoint, or a parquet round-trip through RAM scratch — chosen per
+  stage below; results are memoized per session.
+* manifest mode (`base_dir` set, `python -m esgkg --out`): every output is
+  written to the catalog and committed to the manifest, so a rerun resumes
+  each committed stage instead of recomputing it.
+
+`linked_triples` is stored narrow in both modes and widened (url,
+confidence) after the read, so the stored format is the same everywhere.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import session, vocab
 from .io import ParquetCatalog
 from .stages import canon, complete, corpus, graph, manifest, nlp
 
 
 _MEMO: dict[tuple, dict[str, DataFrame]] = {}
 _CLEANUP_REGISTERED: set[str] = set()
-
-# stage-name → wall seconds of the most recent build (bench-mode forcing
-# points only); populated when ESGKG_STAGE_TIMING=1 — the scaling-efficiency
-# profiler reads this to find constant-size tails
-LAST_TIMINGS: list[tuple[str, float]] = []
 
 
 def _register_scratch_cleanup(path: str) -> None:
@@ -42,6 +49,13 @@ def _register_scratch_cleanup(path: str) -> None:
     atexit.register(shutil.rmtree, path, True)
 
 
+def fingerprint(n_pages: int, seed: int) -> str:
+    """Manifest input fingerprint of a synthetic build. It carries the
+    package digest, so a catalog committed by different code never
+    resumes."""
+    return f"synth:{seed}:{n_pages}:{session.pkg_digest()}"
+
+
 def build_kg(
     spark: SparkSession,
     n_pages: int,
@@ -51,9 +65,9 @@ def build_kg(
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns the named output DataFrames.
 
-    With base_dir set, every stage is manifest-checkpointed (resume support);
-    without it the lineage stays lazy in one DAG (bench mode). Ephemeral
-    (no-base_dir) results are memoized per session so several queries over
+    With base_dir set, every output stage is manifest-checkpointed (resume
+    support); without it the lineage stays in one DAG (bench mode).
+    Bench-mode results are memoized per session so several queries over
     the same build don't re-run the CC fixpoint."""
     memo_key = None
     if base_dir is None:
@@ -61,211 +75,114 @@ def build_kg(
         hit = _MEMO.get(memo_key)
         if hit is not None:
             return hit
-    fp = f"synth:{seed}:{n_pages}"
-    runner = None
+    runner = fp = None
     if base_dir is not None:
         runner = manifest.Runner(spark, ParquetCatalog(base_dir))
-
-    # Only fan-out boundaries are materialized eagerly in bench mode:
-    # `linked_triples` (feeds LSH, rewrite, and surface extraction — via the
-    # _BIG parquet round-trip below) and `canon_map` (feeds the lazy rewrite
-    # consumed by nodes, edges, and AA). text/raw form a linear chain into
-    # linked and fuse into its single map job; cheap derived stages stay
-    # lazily persisted. Eager points at fan-outs prevent concurrent
-    # consumers racing to compute the same UDF chain (observed 2-4x
-    # recompute); minimizing them keeps the job count (pure driver latency
-    # at high core counts) down. `triples` stays fully lazy in bench mode
-    # (a broadcast join per consumer — see the rewrite comment below), and
-    # nodes/edges are built by the concurrent thread-pool path, so none of
-    # the three routes through stage() here.
-    _EAGER = {"surface_stats", "canon_map"}
-    # Row-count-heavy stages round-trip through parquet scratch instead of
-    # localCheckpoint: checkpointed DataFrames hold deserialized row objects
-    # on the JVM heap (gigabytes at millions of triples -> GC thrash that
-    # got worse with more cores), while a parquet write+read keeps the data
-    # columnar/compressed and the scan off-heap. /dev/shm makes it RAM-speed.
-    _BIG = {"linked_triples"}
+        fp = fingerprint(n_pages, seed)
     scratch = f"/dev/shm/esgkg-bench-{os.getpid()}" if os.path.isdir(
         "/dev/shm"
     ) else f"/tmp/esgkg-bench-{os.getpid()}"
     _register_scratch_cleanup(scratch)
 
-    timing = os.environ.get("ESGKG_STAGE_TIMING") == "1"
+    def keep(name: str, make, how: str, partition_by=None) -> DataFrame:
+        """Materialize one output stage. Manifest mode: produce-or-resume
+        through the catalog. Bench mode, by `how`:
 
-    def stage(name: str, make, partition_by=None, widen=None) -> DataFrame:
-        """`widen`: optional lazy projection applied AFTER the
-        materialization point (bench mode), so columns that are pure
-        functions of stored ones (e.g. the linked url) are recomputed by
-        codegen on each scan instead of being stored/shipped."""
-        import time as _time
-
-        t0 = _time.time() if timing else 0.0
-        if runner is None:
-            df = make()
-            if name in _BIG:
-                path = f"{scratch}/{name}"
-                df.write.mode("overwrite").parquet(path)
-                out = spark.read.parquet(path)
-            elif name in _EAGER:
-                out = df.localCheckpoint(eager=True)
-            else:
-                out = df.persist()
-        else:
-            out = runner.run_stage(name, fp, make, partition_by=partition_by)
-        if widen is not None:
-            out = widen(out)
-        if timing:
-            LAST_TIMINGS.append((name, round(_time.time() - t0, 3)))
-        return out
+        * "lazy" — the plan as made; consumers re-derive it.
+        * "checkpoint" — eager localCheckpoint, for a small table at a
+          fan-out (concurrent consumers would otherwise race to compute
+          the same chain; observed 2-4x recompute).
+        * "scratch" — parquet write+read on RAM scratch, for row-heavy
+          tables: a checkpoint holds deserialized rows on the JVM heap
+          (GC thrash at millions of triples), parquet stays columnar."""
+        if runner is not None:
+            return runner.run_stage(name, fp, make, partition_by=partition_by)
+        df = make()
+        if how == "scratch":
+            path = f"{scratch}/{name}"
+            df.write.mode("overwrite").parquet(path)
+            return spark.read.parquet(path)
+        if how == "checkpoint":
+            return df.localCheckpoint(eager=True)
+        return df
 
     pages = corpus.synth_pages(spark, n_pages, seed)
-    if runner is None:
-        # bench/lazy mode: fused single-pass map chain (same rows as the
-        # modular stages below — tested equivalent — 4x less JVM<->python
-        # socket traffic); text/raw stay available as lazy views
-        text = stage("text", lambda: corpus.extract_text(pages))
-        raw = stage("raw_triples", lambda: nlp.extract_triples(text))
-        # narrow rows (subj, pred, obj, pid) cross the Arrow boundary and
-        # land in the parquet scratch; url/confidence are reattached as a
-        # lazy JVM projection on the scan side (nlp.widen_linked) — the
-        # byte-identical full TRIPLES_SCHEMA rows, minus ~35 B/row of url
-        # string through Arrow, the write, and every downstream scan
-        linked = stage(
-            "linked_triples",
-            lambda: nlp.synth_linked_narrow(spark, n_pages, seed),
-            widen=nlp.widen_linked,
-        )
-        # Explicit full GC after the map phase: the fused extraction job
-        # leaves the (shared local-mode) JVM heap full of dead shuffle and
-        # Arrow-batch garbage, and the FIRST downstream job then pays the
-        # collection inline — measured 52 s for a tail that runs in 13-17 s
-        # on a clean heap (8c/3M; a 3 s System.gc() here bought the
-        # difference). On a real cluster this is a driver-only no-op;
-        # executors size their own heaps per stage.
-        if n_pages >= 500_000:
-            spark.sparkContext._jvm.System.gc()
-    else:
-        text = stage("text", lambda: corpus.extract_text(pages))
-        raw = stage("raw_triples", lambda: nlp.extract_triples(text))
-        linked = stage("linked_triples", lambda: nlp.link_triples(raw))
-
-    from . import vocab
+    # the modular chain's intermediate tables; the linked stream below is
+    # the fused map (same rows — pytest asserts), which ships the corpus
+    # JVM<->python once instead of once per hop
+    text = keep("text", lambda: corpus.extract_text(pages), "lazy")
+    raw = keep("raw_triples", lambda: nlp.extract_triples(text), "lazy")
+    # narrow rows (subj, pred, obj, pid) cross the Arrow boundary and are
+    # stored; url/confidence are reattached as a lazy JVM projection on the
+    # read side — ~35 B/row of url string stay out of Arrow, the write, and
+    # every downstream scan
+    linked = nlp.widen_linked(keep(
+        "linked_triples",
+        lambda: nlp.synth_linked_narrow(spark, n_pages, seed),
+        "scratch",
+    ))
+    # Explicit full GC after the map phase: the fused extraction job
+    # leaves the (shared local-mode) JVM heap full of dead shuffle and
+    # Arrow-batch garbage, and the FIRST downstream job then pays the
+    # collection inline — measured 52 s for a tail that runs in 13-17 s
+    # on a clean heap (8c/3M; a 3 s System.gc() here bought the
+    # difference). On a real cluster this is a driver-only no-op;
+    # executors size their own heaps per stage.
+    if n_pages >= 500_000:
+        spark.sparkContext._jvm.System.gc()
 
     protected = sorted(set(vocab.all_concept_surfaces().values())) + [
         "Organization"
     ]
-    if runner is None:
-        # bench mode: ONE corpus-sized explode+groupBy (surface_stats)
-        # feeds both canonicalization (whose distinct-surface pool is
-        # exactly this key set — its internal distinct becomes a no-op
-        # over the vocabulary) and the node build below. Before round 4
-        # the canon stage and the node build each re-scanned the corpus.
-        stats = stage("surface_stats", lambda: graph.surface_stats(linked))
-        # assume_distinct: stats is a groupBy output (one row per surface by
-        # construction) and already checkpointed — canonical_map skips its
-        # own distinct+localCheckpoint plus the banding/recovery dedup
-        # shuffles (~7 s of fixed vocabulary-shuffle latency per run)
-        cmap = stage(
-            "canon_map",
-            lambda: canon.canonical_map(
-                stats.select(F.col("name").alias("surface")),
-                exclude_exact=protected,
-                assume_distinct=True,
-            ),
+    # ONE corpus-sized explode+groupBy feeds both canonicalization (whose
+    # distinct-surface pool is exactly this key set) and the node build.
+    # Not an output table: persisted (lazily — a resumed run computes it
+    # only if canon_map or nodes must be rebuilt), never committed, and
+    # released once its two consumers are materialized.
+    stats = graph.surface_stats(linked).persist()
+    # assume_distinct: stats is a groupBy output (one row per surface by
+    # construction) — canonical_map skips its own distinct+localCheckpoint
+    # plus the banding/recovery dedup shuffles
+    cmap = keep(
+        "canon_map",
+        lambda: canon.canonical_map(
+            stats.select(F.col("name").alias("surface")),
+            exclude_exact=protected,
+            assume_distinct=True,
+        ),
+        "checkpoint",
+    )
+    # No dropDuplicates: the extractor dedups (s, p, o) per page, and the
+    # edges table dedups (src, dst, relation) anyway. Lazy in bench mode: a
+    # broadcast join against the checkpointed map over the linked scratch,
+    # re-derived per consumer as one codegen'd scan+join — materializing it
+    # was a second full-width write whose cost did not scale with cores.
+    triples = keep(
+        "triples",
+        lambda: canon.rewrite_triples(linked, cmap),
+        "lazy",
+        partition_by=["pred"],
+    )
+
+    # Nodes are a vocabulary-sized join chain over surface_stats (pytest-
+    # asserted equal to materialize_nodes(triples)); with assume_closed the
+    # edge plan does not depend on them. Two driver threads let the
+    # scheduler backfill each job's scheduling gaps with the other's tasks.
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_nodes = pool.submit(
+            keep, "nodes",
+            lambda: graph.materialize_nodes_from_stats(stats, cmap, spark),
+            "lazy",
         )
-    else:
-        stats = None
-
-        def make_canon() -> DataFrame:
-            # one scan of the triple stream (explode), not a union of two
-            surfaces = linked.select(
-                F.explode(F.array("subj", "obj")).alias("surface")
-            )
-            return canon.canonical_map(surfaces, exclude_exact=protected)
-
-        cmap = stage("canon_map", make_canon)
-    # no dropDuplicates here: the extractor dedups (s, p, o) per page
-    # (kernel.extract_triples), so rows are unique by construction and a
-    # full-width shuffle of the triple stream would be pure cost. Rewriting
-    # through the canonical map cannot introduce (s,p,o,url) collisions
-    # except when two surfaces in ONE page map to the same canonical form —
-    # the downstream edges table dedups (src, dst, relation) anyway.
-    if runner is None:
-        # bench mode: the canonical rewrite stays LAZY — it is a broadcast
-        # join against the (checkpointed) canonical map over the linked
-        # parquet scratch, so each consumer re-derives it as one codegen'd
-        # scan+join. Materializing it was a second full-width parquet write
-        # whose cost was flat across core counts (memory-bandwidth-bound on
-        # tmpfs) — pure scaling-tail; two extra scans parallelize, the write
-        # did not. Row count is provably preserved (left join on the map's
-        # unique surface key — pytest asserts), so consumers needing only
-        # the count can read the linked parquet footer instead.
-        triples = canon.rewrite_triples(linked, cmap)
-    else:
-        triples = stage(
-            "triples",
-            lambda: canon.rewrite_triples(linked, cmap),
-            partition_by=["pred"],
+        f_edges = pool.submit(
+            keep, "edges",
+            lambda: graph.materialize_edges(triples, spark, assume_closed=True),
+            "scratch", ["relation"],
         )
-
-    if runner is None:
-        # bench mode (round 4): the corpus-sized work for nodes already
-        # happened in surface_stats, so the node build is a vocabulary-sized
-        # join chain (milliseconds; pytest-asserted equal to the generic
-        # materialize_nodes(rewrite(...)) path). Edges keep the classic
-        # rewrite-join + id-hash + id-key groupBy plan: the raw-string-key
-        # pre-aggregation variant (graph.materialize_edges_preagg) measured
-        # warm-equal (11.0 vs 9.7 s at 8c/3M) but its scaled plan shape is
-        # NOT warmed by the 20k-page warmup run (52 s first execution), so
-        # the classic path is strictly better under the bench protocol.
-        # The two plans are independent — two driver threads let the
-        # scheduler backfill each job's scheduling gaps with the other's
-        # tasks.
-        import time as _time
-        from concurrent.futures import ThreadPoolExecutor
-
-        t0 = _time.time()
-
-        def make_nodes() -> DataFrame:
-            return graph.materialize_nodes_from_stats(stats, cmap, spark)
-
-        def make_edges() -> DataFrame:
-            # parquet round-trip, not localCheckpoint: 1.6M+ checkpointed
-            # rows live deserialized on the JVM heap (measured ~2x the cost
-            # of a columnar write at bench scale); /dev/shm keeps it RAM-speed
-            e = graph.materialize_edges(triples, spark, assume_closed=True)
-            path = f"{scratch}/edges"
-            e.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_nodes = pool.submit(make_nodes)
-            f_edges = pool.submit(make_edges)
-            nodes, edges = f_nodes.result(), f_edges.result()
-        if timing:
-            LAST_TIMINGS.append(("nodes_edges", round(_time.time() - t0, 3)))
-    else:
-        nodes_edges: dict[str, DataFrame] = {}
-
-        def make_nodes() -> DataFrame:
-            n, e = graph.materialize(triples, spark)
-            nodes_edges["edges"] = e
-            return n
-
-        nodes = stage("nodes", make_nodes)
-        edges = stage(
-            "edges",
-            lambda: nodes_edges.get("edges")
-            if nodes_edges.get("edges") is not None
-            else graph.materialize(triples, spark)[1],
-            partition_by=["relation"],
-        )
-    # checkpoint_und stays True: the lazy-und variant re-derives the
-    # undirected distinct (a real 2x|edges|-row shuffle, not job latency)
-    # inside both the nbrs build and the final job — measured ~1.2 s SLOWER
-    # at 8c/3M than paying the checkpoint once (round-5 micro-bench)
-    predicted = stage(
-        "predicted_links", lambda: complete.adamic_adar(edges, top_k)
+        nodes, edges = f_nodes.result(), f_edges.result()
+    stats.unpersist()
+    predicted = keep(
+        "predicted_links", lambda: complete.adamic_adar(edges, top_k), "lazy"
     )
     result = {
         "pages": pages,

@@ -17,13 +17,9 @@ from pyspark.sql import SparkSession
 _PKG_DIR = Path(__file__).resolve().parent
 
 
-def build_pkg_zip() -> str:
-    """Zip the esgkg package so spark.sparkContext.addPyFile can ship it to
-    python workers (cloudpickle references module functions by name, so
-    workers must be able to ``import esgkg``). The archive name is
-    content-addressed so re-adding after a source change never collides
-    with a previously registered file (e.g. one shipped via
-    ``spark-submit --py-files``)."""
+def _pkg_blobs() -> tuple[str, list[tuple[str, bytes]]]:
+    """(content digest, [(archive name, source bytes)]) of the esgkg
+    package's .py files."""
     import hashlib
 
     blobs = []
@@ -32,6 +28,22 @@ def build_pkg_zip() -> str:
     digest = hashlib.blake2b(
         b"".join(name.encode() + b for name, b in blobs), digest_size=8
     ).hexdigest()
+    return digest, blobs
+
+
+def pkg_digest() -> str:
+    """Content digest of the esgkg sources: changes with any code change."""
+    return _pkg_blobs()[0]
+
+
+def build_pkg_zip() -> str:
+    """Zip the esgkg package so spark.sparkContext.addPyFile can ship it to
+    python workers (cloudpickle references module functions by name, so
+    workers must be able to ``import esgkg``). The archive name is
+    content-addressed so re-adding after a source change never collides
+    with a previously registered file (e.g. one shipped via
+    ``spark-submit --py-files``)."""
+    digest, blobs = _pkg_blobs()
     path = f"/tmp/esgkg_pyfiles_{digest}.zip"
     if not Path(path).exists():
         with zipfile.ZipFile(path, "w") as zf:

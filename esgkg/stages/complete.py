@@ -34,8 +34,7 @@ def undirected(edges: DataFrame) -> DataFrame:
 
 def adamic_adar(edges: DataFrame, top_k: int = 10,
                 max_degree: int = 1000,
-                broadcast_threshold: int = 2_000_000,
-                checkpoint_und: bool = True) -> DataFrame:
+                broadcast_threshold: int = 2_000_000) -> DataFrame:
     """(src, dst, common_neighbors, aa_score, prob, rank) — proposed links.
 
     Size-gated join strategy: below `broadcast_threshold` neighbor rows the
@@ -51,14 +50,7 @@ def adamic_adar(edges: DataFrame, top_k: int = 10,
     # by the ContextCleaner as soon as the result DataFrame is unreachable,
     # so repeated calls in a long-lived session don't accumulate executor
     # storage the way never-unpersisted caches do.
-    # `checkpoint_und=False` (pipeline bench mode, where `edges` is a cheap
-    # columnar parquet scan): keep und LAZY instead — its recomputes fuse
-    # into the consumer jobs as parallel scan+distinct stages, trading a
-    # little parallelizable shuffle work for one fewer serial driver job of
-    # fixed latency (the graph tail's currency; pytest asserts equal output)
-    und = undirected(edges)
-    if checkpoint_und:
-        und = und.localCheckpoint(eager=True)
+    und = undirected(edges).localCheckpoint(eager=True)
     deg = und.groupBy(F.col("a").alias("z")).agg(F.count("*").alias("deg"))
     # neighbor lists keyed by the shared vertex z
     nbrs = und.select(F.col("b").alias("z"), F.col("a").alias("n"))

@@ -214,94 +214,6 @@ def materialize_nodes_from_stats(stats: DataFrame, cmap: DataFrame,
     )
 
 
-def edges_raw_preagg(linked: DataFrame) -> DataFrame:
-    """Phase 1 of the pre-aggregated edge build: collapse the corpus to its
-    distinct raw (subj, obj, pred) keys (max confidence / min url partial
-    aggregates). Depends only on the linked triple stream — NOT on the
-    canonical map — so in principle it can run concurrently with
-    canonicalization (guide §2.6). The round-6 pipeline TRIED exactly that
-    and reverted after measurement: this pass shuffles raw surface STRINGS
-    for the whole corpus (53 s at 8c/3M vs 20 s for the classic broadcast-
-    rewrite + 8-byte-id groupBy it would replace), and while running it
-    starved the concurrent surface_stats job 8.8 → 46.7 s — the string
-    shuffle costs more than the overlap hides. Kept split from
-    `edges_resolve_preagg` for inputs with heavy duplicate raw keys, where
-    the collapse genuinely shrinks the shuffle."""
-    return linked.groupBy(
-        F.col("subj").alias("src_name"),
-        F.col("obj").alias("dst_name"),
-        F.col("pred").alias("relation"),
-    ).agg(
-        F.max("confidence").alias("confidence"),
-        F.min("url").alias("url"),
-    )
-
-
-def edges_resolve_preagg(raw: DataFrame, cmap: DataFrame,
-                         spark: SparkSession,
-                         broadcast_threshold: int = 2_000_000
-                         ) -> DataFrame:
-    """Phase 2 of the pre-aggregated edge build: union the ontology seed,
-    resolve the canonical lookup + deterministic ids, re-aggregate. Touches
-    only distinct-raw-key-scale rows (~2.3M at bench scale vs the 22M-row
-    corpus phase 1 already collapsed)."""
-    _session.ensure_shipped(spark)
-    _, seed_edges = seed_graph(spark)
-    allr = raw.unionByName(
-        seed_edges.withColumn("confidence", F.lit(1.0)).withColumn(
-            "url", F.lit("seed://ontology")
-        )
-    )
-    resolved = (
-        allr.join(
-            _canon_lookup(cmap, "src_name", "src_canon", broadcast_threshold),
-            "src_name",
-            "left",
-        )
-        .join(
-            _canon_lookup(cmap, "dst_name", "dst_canon", broadcast_threshold),
-            "dst_name",
-            "left",
-        )
-        .select(
-            _name_id(F.coalesce("src_canon", "src_name")).alias("src"),
-            _name_id(F.coalesce("dst_canon", "dst_name")).alias("dst"),
-            "relation",
-            "confidence",
-            "url",
-        )
-    )
-    return (
-        resolved.groupBy("src", "dst", "relation")
-        .agg(F.max("confidence").alias("confidence"), F.min("url").alias("url"))
-        .select("src", "dst", "relation", "confidence", "url")
-    )
-
-
-def materialize_edges_preagg(linked: DataFrame, cmap: DataFrame,
-                             spark: SparkSession,
-                             broadcast_threshold: int = 2_000_000
-                             ) -> DataFrame:
-    """Edge build with the canonical rewrite pushed BELOW a raw-key partial
-    aggregation: `edges_raw_preagg` (corpus → distinct raw triple keys)
-    composed with `edges_resolve_preagg` (canonical lookup + ids +
-    re-aggregation on the collapsed rows). max-of-max / min-of-min
-    associativity makes this provably equal to
-    materialize_edges(rewrite_triples(linked, cmap), assume_closed=True)
-    (pytest asserts equality).
-
-    Round-5 measurement: warm-EQUAL to the classic path when run
-    sequentially (11.0 vs 9.7 s, 8 cores / 3M pages). Round 6 split the
-    phases and ran phase 1 UNDER canonicalization on a second driver
-    thread — measured WORSE and reverted (see edges_raw_preagg: the
-    string-keyed corpus shuffle costs more than the overlap hides). The
-    bench pipeline uses the classic materialize_edges(assume_closed) path;
-    this variant remains for duplicate-heavy inputs."""
-    return edges_resolve_preagg(
-        edges_raw_preagg(linked), cmap, spark, broadcast_threshold
-    )
-
-
 def materialize_edges(
     triples: DataFrame, spark: SparkSession,
     nodes: DataFrame | None = None,

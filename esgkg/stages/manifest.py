@@ -16,6 +16,7 @@ is an append-only parquet table through the same catalog adapter.
 from __future__ import annotations
 
 import json
+import threading
 import time
 from collections.abc import Callable
 
@@ -31,6 +32,10 @@ class Runner:
     def __init__(self, spark: SparkSession, catalog: ParquetCatalog):
         self.spark = spark
         self.catalog = catalog
+        # stages may commit from concurrent driver threads, and two Spark
+        # appends to one table in one application share its
+        # `_temporary/0` staging dir — serialize the manifest appends
+        self._commit_lock = threading.Lock()
 
     def _committed(self, stage: str, fingerprint: str) -> bool:
         """True iff the MOST RECENT manifest commit for `stage` carries this
@@ -73,7 +78,8 @@ class Runner:
             "stage string, input_fingerprint string, row_count long, "
             "partition_counts string, metrics string, committed_at double",
         )
-        self.catalog.write(row, MANIFEST, mode="append")
+        with self._commit_lock:
+            self.catalog.write(row, MANIFEST, mode="append")
 
     def run_stage(
         self,

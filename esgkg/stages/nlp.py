@@ -95,6 +95,34 @@ def extract_triples(text_df: DataFrame) -> DataFrame:
     return text_df.select("url", "text").mapInPandas(run, schema=TRIPLES_SCHEMA)
 
 
+def _make_linker():
+    """Surface → canonical concept name, as a plain function (call it once
+    per python worker iterator). Exact/alias hits resolve via the concept
+    dictionary; misses fall back to hash-embedding cosine vs the
+    seed-concept matrix (≥ 0.75), else keep the original surface (it then
+    flows into canonicalization). Misses are memoized per worker."""
+    from esgkg import kernel, vocab
+
+    surfaces = vocab.all_concept_surfaces()
+    concepts = sorted(set(surfaces.values()))
+    mat = np.stack([kernel.hash_embed(c) for c in concepts])
+    cache: dict[str, str] = {}
+
+    def link(s: str) -> str:
+        hit = surfaces.get(s)
+        if hit is not None:
+            return hit
+        hit = cache.get(s)
+        if hit is None:
+            sims = mat @ kernel.hash_embed(s)
+            i = int(np.argmax(sims))
+            hit = concepts[i] if sims[i] >= 0.75 else s
+            cache[s] = hit
+        return hit
+
+    return link
+
+
 NARROW_TRIPLES_SCHEMA = T.StructType(
     [
         T.StructField("subj", T.StringType(), True),
@@ -107,7 +135,7 @@ NARROW_TRIPLES_SCHEMA = T.StructType(
 
 def synth_linked_narrow(spark, n: int, seed: int = 42,
                         partitions: int | None = None) -> DataFrame:
-    """Narrow half of the fused bench map chain: page synthesis → HTML→text
+    """Narrow half of the fused map chain: page synthesis → HTML→text
     extraction → triple extraction → dictionary linking in ONE Arrow pass,
     emitting (subj, pred, obj, pid). The synthetic url and confidence
     columns of the full TRIPLES_SCHEMA are pure functions of the page id
@@ -115,7 +143,7 @@ def synth_linked_narrow(spark, n: int, seed: int = 42,
     by `widen_linked` as JVM codegen instead of crossing the Arrow boundary
     as per-row python strings (guide §2.3/§4.1: shuffle/ship keys, not
     payloads you can recompute) — ~35 bytes/row of url string stay out of
-    the python→JVM transfer and, in bench mode, out of the parquet scratch."""
+    the python→JVM transfer and out of the stored `linked_triples` table."""
     _session.ensure_shipped(spark)
     parts = partitions or spark.sparkContext.defaultParallelism
     from esgkg import synth as _synth
@@ -123,26 +151,9 @@ def synth_linked_narrow(spark, n: int, seed: int = 42,
     n_groups = _synth.default_groups(n)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from esgkg import kernel, synth, vocab
+        from esgkg import kernel, synth
 
-        surfaces = vocab.all_concept_surfaces()
-        concepts = sorted(set(surfaces.values()))
-        mat = np.stack([kernel.hash_embed(c) for c in concepts])
-        cache: dict[str, str] = {}
-
-        def link(s: str) -> str:
-            hit = surfaces.get(s)
-            if hit is not None:
-                return hit
-            hit = cache.get(s)
-            if hit is None:
-                v = kernel.hash_embed(s)
-                sims = mat @ v
-                i = int(np.argmax(sims))
-                hit = concepts[i] if sims[i] >= 0.75 else s
-                cache[s] = hit
-            return hit
-
+        link = _make_linker()
         for pdf in batches:
             # column lists, not row tuples: pd.DataFrame(dict-of-lists)
             # skips the object-array transpose of the row-tuple constructor
@@ -193,7 +204,7 @@ def widen_linked(narrow: DataFrame) -> DataFrame:
 
 def synth_linked_triples(spark, n: int, seed: int = 42,
                          partitions: int | None = None) -> DataFrame:
-    """Fused map chain for the bench/throughput path: page synthesis →
+    """Fused map chain with full TRIPLES_SCHEMA rows: page synthesis →
     HTML→text extraction → triple extraction → dictionary linking in ONE
     Arrow pass. The modular stages (corpus.synth_pages → corpus.extract_text
     → extract_triples → link_triples) compute exactly the same rows — pytest
@@ -205,45 +216,6 @@ def synth_linked_triples(spark, n: int, seed: int = 42,
     return widen_linked(synth_linked_narrow(spark, n, seed, partitions))
 
 
-def link_surfaces(df: DataFrame, col: str, out_col: str,
-                  threshold: float = 0.75) -> DataFrame:
-    """Map a surface-form column to canonical concept names.
-
-    Exact/alias hits resolve via the broadcast dictionary; misses fall back
-    to hash-embedding cosine vs the seed-concept matrix (≥ threshold), else
-    keep the original surface (it then flows into canonicalization)."""
-    _session.ensure_shipped(df.sparkSession)
-    schema = T.StructType(df.schema.fields + [T.StructField(out_col, T.StringType(), True)])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from esgkg import kernel, vocab
-
-        surfaces = vocab.all_concept_surfaces()
-        concepts = sorted(set(surfaces.values()))
-        mat = np.stack([kernel.hash_embed(c) for c in concepts])  # (C, dim)
-        cache: dict[str, str] = {}
-
-        def link(s: str) -> str:
-            if s in surfaces:
-                return surfaces[s]
-            hit = cache.get(s)
-            if hit is not None:
-                return hit
-            v = kernel.hash_embed(s)
-            sims = mat @ v
-            i = int(np.argmax(sims))
-            out = concepts[i] if sims[i] >= threshold else s
-            cache[s] = out
-            return out
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [link(s) if isinstance(s, str) else s for s in pdf[col]]
-            yield pdf
-
-    return df.mapInPandas(run, schema=schema)
-
-
 def link_triples(triples: DataFrame) -> DataFrame:
     """Canonicalize subj and obj of raw triples against the concept
     dictionary in one Arrow pass (single python-worker stage)."""
@@ -251,32 +223,12 @@ def link_triples(triples: DataFrame) -> DataFrame:
     schema = triples.schema
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from esgkg import kernel, vocab
-
-        surfaces = vocab.all_concept_surfaces()
-        concepts = sorted(set(surfaces.values()))
-        mat = np.stack([kernel.hash_embed(c) for c in concepts])
-        cache: dict[str, str] = {}
-
-        def link(s):
-            if not isinstance(s, str):
-                return s
-            hit = surfaces.get(s)
-            if hit is not None:
-                return hit
-            hit = cache.get(s)
-            if hit is None:
-                v = kernel.hash_embed(s)
-                sims = mat @ v
-                i = int(np.argmax(sims))
-                hit = concepts[i] if sims[i] >= 0.75 else s
-                cache[s] = hit
-            return hit
-
+        link = _make_linker()
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["subj"] = [link(s) for s in pdf["subj"]]
-            pdf["obj"] = [link(s) for s in pdf["obj"]]
+            for col in ("subj", "obj"):
+                pdf[col] = [link(s) if isinstance(s, str) else s
+                            for s in pdf[col]]
             yield pdf
 
     return triples.mapInPandas(run, schema=schema)

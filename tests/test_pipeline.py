@@ -81,16 +81,14 @@ def test_canonicalization_purity_and_bridged_completeness(spark, text_df):
 
 def test_fused_equals_modular(spark, text_df):
     """The fused bench stage (synth→extract→nlp→link in one Arrow pass) must
-    produce exactly the modular stages' rows."""
-    modular = {
-        tuple(r)
-        for r in nlp.link_triples(nlp.extract_triples(text_df)).collect()
-    }
-    fused = {
-        tuple(r)
-        for r in nlp.synth_linked_triples(text_df.sparkSession, N).collect()
-    }
-    assert fused == modular
+    produce exactly the modular stages' rows, multiplicity included."""
+    modular = sorted(
+        map(tuple, nlp.link_triples(nlp.extract_triples(text_df)).collect())
+    )
+    fused = sorted(
+        map(tuple, nlp.synth_linked_triples(text_df.sparkSession, N).collect())
+    )
+    assert fused == modular and fused
 
 
 def test_narrow_widen_roundtrip_equals_fused(spark, text_df, tmp_path):
@@ -105,12 +103,11 @@ def test_narrow_widen_roundtrip_equals_fused(spark, text_df, tmp_path):
     assert [f.name for f in widened.schema.fields] == [
         "subj", "pred", "obj", "url", "confidence"
     ]
-    got = {tuple(r) for r in widened.collect()}
-    want = {
-        tuple(r)
-        for r in nlp.link_triples(nlp.extract_triples(text_df)).collect()
-    }
-    assert got == want
+    got = sorted(map(tuple, widened.collect()))
+    want = sorted(
+        map(tuple, nlp.link_triples(nlp.extract_triples(text_df)).collect())
+    )
+    assert got == want and got
 
 
 def test_canonical_map_local_equals_distributed(spark, text_df):
@@ -264,7 +261,7 @@ def test_manifest_resume_after_partial_run(spark):
     base = tempfile.mkdtemp(prefix="esgkg_partial_")
     try:
         runner = manifest.Runner(spark, ParquetCatalog(base))
-        fp = "synth:42:60"
+        fp = pipeline.fingerprint(60, 42)
         # simulate a run killed after the first two stages committed
         pages = corpus.synth_pages(spark, 60)
         text = runner.run_stage("text", fp, lambda: corpus.extract_text(pages))
@@ -315,4 +312,67 @@ def test_manifest_resume_idempotent(spark):
         # exactly one commit per stage (no duplicate work on resume)
         assert m.count() == len(stages)
     finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _sorted_rows(df, cols):
+    """Rows of `df` projected to `cols`, maps as sorted item tuples, sorted."""
+    return sorted(
+        tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v
+              for v in r)
+        for r in df.select(*cols).collect()
+    )
+
+
+def test_manifest_mode_equals_bench_mode(spark):
+    """One stage list, two materializations: the manifest-mode catalog
+    tables equal the bench-mode DataFrames row for row (multiplicity
+    included), and each output table is committed exactly once
+    (surface_stats is not an output table)."""
+    tables = ("text", "raw_triples", "linked_triples", "canon_map",
+              "triples", "nodes", "edges", "predicted_links")
+    bench = pipeline.build_kg(spark, 60)
+    base = tempfile.mkdtemp(prefix="esgkg_modes_")
+    try:
+        stored = pipeline.build_kg(spark, 60, base_dir=base)
+        for name in tables:
+            # catalog reads move partition columns last: compare by name
+            cols = bench[name].columns
+            want = _sorted_rows(bench[name], cols)
+            assert _sorted_rows(stored[name], cols) == want and want, name
+        m = spark.read.parquet(f"{base}/_manifest")
+        commits = {r.stage: r["count"]
+                   for r in m.groupBy("stage").count().collect()}
+        assert commits == dict.fromkeys(tables, 1)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_manifest_concurrent_commits(spark):
+    """Stages committed from concurrent driver threads (build_kg commits
+    nodes and edges from two) each land exactly one manifest row."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from esgkg.io import ParquetCatalog
+    from esgkg.stages import manifest
+
+    base = tempfile.mkdtemp(prefix="esgkg_commits_")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        runner = manifest.Runner(spark, ParquetCatalog(base))
+        names = [f"s{i:02d}" for i in range(16)]
+        with ThreadPoolExecutor(max_workers=len(names)) as pool:
+            futs = [
+                pool.submit(runner.run_stage, n, "fp",
+                            lambda: spark.range(3))
+                for n in names
+            ]
+            for f in futs:
+                assert f.result(timeout=300).count() == 3
+        m = spark.read.parquet(f"{base}/_manifest")
+        assert sorted(r.stage for r in m.collect()) == names
+    finally:
+        sys.setswitchinterval(interval)
         shutil.rmtree(base, ignore_errors=True)

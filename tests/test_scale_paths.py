@@ -481,10 +481,11 @@ def test_knn_join_probe_side_size_guard(spark):
 
 
 def test_preagg_nodes_edges_equal_generic(spark):
-    """The round-4 bench path (surface_stats → nodes-from-stats, raw-key
-    pre-aggregated edges) must produce byte-identical nodes and edges to the
-    generic materialize(rewrite_triples(...)) path, on both the broadcast
-    and the shuffle join rungs."""
+    """The pipeline's node path (surface_stats → nodes-from-stats) must
+    produce byte-identical nodes to the generic
+    materialize_nodes(rewrite_triples(...)) path, on both the broadcast and
+    the shuffle join rungs, and its canonical map must equal the one-scan
+    explode map."""
     from esgkg import vocab
 
     linked = _triples(spark, 100)
@@ -505,38 +506,13 @@ def test_preagg_nodes_edges_equal_generic(spark):
     )
     triples = canon.rewrite_triples(linked, cmap)
     n1 = graph.materialize_nodes(triples, spark)
-    e1 = graph.materialize_edges(triples, spark, assume_closed=True)
     for thr in (2_000_000, 0):  # broadcast rung, shuffle rung
         n2 = graph.materialize_nodes_from_stats(
             stats, cmap, spark, broadcast_threshold=thr
         )
-        e2 = graph.materialize_edges_preagg(
-            linked, cmap, spark, broadcast_threshold=thr
-        )
         assert sorted(map(tuple, n1.collect())) == sorted(
             map(tuple, n2.collect())
         )
-        assert sorted(map(tuple, e1.collect())) == sorted(
-            map(tuple, e2.collect())
-        )
-
-
-def test_adamic_adar_lazy_und_equals_checkpointed(spark):
-    """checkpoint_und=False (the pipeline bench fold: und stays a lazy
-    scan+distinct fused into consumer jobs) must be row-identical to the
-    checkpointed default."""
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (2, 5), (5, 6), (6, 1)],
-        "src long, dst long",
-    )
-    a = complete.adamic_adar(edges, top_k=5)
-    b = complete.adamic_adar(edges, top_k=5, checkpoint_und=False)
-    key = lambda r: (r.src, r.dst)
-    got_a = {key(r): (r.common_neighbors, round(r.aa_score, 9), r.rank)
-             for r in a.collect()}
-    got_b = {key(r): (r.common_neighbors, round(r.aa_score, 9), r.rank)
-             for r in b.collect()}
-    assert got_a == got_b and got_a
 
 
 def test_canonical_map_assume_distinct_equals_default(spark):
