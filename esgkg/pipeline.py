@@ -71,7 +71,9 @@ def build_kg(
     the same build don't re-run the CC fixpoint."""
     memo_key = None
     if base_dir is None:
-        memo_key = (id(spark), n_pages, seed, top_k)
+        # keyed by application: a new session can reuse a stopped one's
+        # id(), and the stopped one's DataFrames are bound to a dead context
+        memo_key = (spark.sparkContext.applicationId, n_pages, seed, top_k)
         hit = _MEMO.get(memo_key)
         if hit is not None:
             return hit
@@ -84,9 +86,11 @@ def build_kg(
     ) else f"/tmp/esgkg-bench-{os.getpid()}"
     _register_scratch_cleanup(scratch)
 
-    def keep(name: str, make, how: str, partition_by=None) -> DataFrame:
+    def keep(name: str, make, how: str, partition_by=None,
+             params: str = "") -> DataFrame:
         """Materialize one output stage. Manifest mode: produce-or-resume
-        through the catalog. Bench mode, by `how`:
+        through the catalog, under the build fingerprint extended by the
+        stage's own `params`. Bench mode, by `how`:
 
         * "lazy" — the plan as made; consumers re-derive it.
         * "checkpoint" — eager localCheckpoint, for a small table at a
@@ -96,7 +100,8 @@ def build_kg(
           tables: a checkpoint holds deserialized rows on the JVM heap
           (GC thrash at millions of triples), parquet stays columnar."""
         if runner is not None:
-            return runner.run_stage(name, fp, make, partition_by=partition_by)
+            return runner.run_stage(name, f"{fp}:{params}" if params else fp,
+                                    make, partition_by=partition_by)
         df = make()
         if how == "scratch":
             path = f"{scratch}/{name}"
@@ -182,7 +187,8 @@ def build_kg(
         nodes, edges = f_nodes.result(), f_edges.result()
     stats.unpersist()
     predicted = keep(
-        "predicted_links", lambda: complete.adamic_adar(edges, top_k), "lazy"
+        "predicted_links", lambda: complete.adamic_adar(edges, top_k), "lazy",
+        params=f"top_k={top_k}",
     )
     result = {
         "pages": pages,

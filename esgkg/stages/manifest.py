@@ -3,83 +3,90 @@
 The reference has no incremental machinery beyond the embedding cache
 (/root/reference/src/rag/graph_rag.py:142-148) and Neo4j MERGE upserts. The
 build target mandates per-partition lineage: every pipeline stage commits
-``(stage, input_fingerprint, row_count, per-partition counts, metrics)`` to a
+``(stage, input_fingerprint, row_count, per-file counts, metrics)`` to a
 manifest table after its output table lands; on restart, a stage whose
-(stage, fingerprint) is already committed is skipped and its output read
-back. Kill-between-stages therefore resumes exactly; kill-mid-stage rewrites
-the stage output atomically (directory overwrite) and re-commits.
+latest commit carries the same fingerprint and lists exactly the data files
+its table holds, and whose table holds Spark's job-commit marker, is skipped
+and its output read back.
 
-The manifest itself is the Iceberg ``manifest`` table in production; here it
-is an append-only parquet table through the same catalog adapter.
+What is atomic is the manifest commit: one small parquet file that the
+driver writes under a hidden name and renames into ``_manifest/``, so a
+killed process leaves either the whole commit or none of it. A stage table
+itself is overwritten in place. A run killed mid-write leaves it without
+its ``_SUCCESS`` marker; one killed between the write and its commit leaves
+data files (named by Spark per write job) that the latest commit does not
+list. Either way the next run produces the table again.
+
+Manifest bookkeeping runs no Spark job: the manifest is read once per
+``Runner`` on the driver, and a commit's counts come from the parquet
+footers of the files just written (Iceberg's per-data-file
+``record_count``; the manifest is the Iceberg ``manifest`` table in
+production). A catalog has one writer at a time: a ``Runner`` does not see
+commits that another process makes after it loaded the manifest.
 """
 
 from __future__ import annotations
 
 import json
-import threading
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..io import ParquetCatalog
 
 MANIFEST = "_manifest"
+SCHEMA = pa.schema([
+    ("stage", pa.string()),
+    ("input_fingerprint", pa.string()),
+    ("row_count", pa.int64()),
+    ("partition_counts", pa.string()),
+    ("metrics", pa.string()),
+    ("committed_at", pa.float64()),
+])
 
 
 class Runner:
     def __init__(self, spark: SparkSession, catalog: ParquetCatalog):
         self.spark = spark
         self.catalog = catalog
-        # stages may commit from concurrent driver threads, and two Spark
-        # appends to one table in one application share its
-        # `_temporary/0` staging dir — serialize the manifest appends
-        self._commit_lock = threading.Lock()
+        rows = catalog.read_rows(MANIFEST, [
+            "stage", "input_fingerprint", "partition_counts", "committed_at"
+        ])
+        # stage -> (input fingerprint, data files) of its latest commit
+        self._latest: dict[str, tuple[str, set[str]]] = {
+            r["stage"]: (r["input_fingerprint"],
+                         set(json.loads(r["partition_counts"])))
+            for r in sorted(rows, key=lambda r: r["committed_at"])
+        }
 
     def _committed(self, stage: str, fingerprint: str) -> bool:
         """True iff the MOST RECENT manifest commit for `stage` carries this
-        fingerprint. The stage output path is keyed by stage name only, so an
-        older matching commit does NOT prove the current table contents match
-        (run A→B→A on the same base_dir would otherwise resume B's output
-        under A's fingerprint — the round-1 stale-resume bug)."""
-        if not self.catalog.exists(self.spark, MANIFEST):
-            return False
-        m = self.catalog.read(self.spark, MANIFEST)
-        last = (
-            m.filter(F.col("stage") == stage)
-            .orderBy(F.desc("committed_at"))
-            .select("input_fingerprint")
-            .limit(1)
-            .collect()
+        fingerprint and lists the table's data files. The stage output path
+        is keyed by stage name only, so an older matching commit does NOT
+        prove the current table contents match (run A→B→A on the same
+        base_dir would otherwise resume B's output under A's fingerprint —
+        the round-1 stale-resume bug); nor does a matching commit whose
+        table was rewritten since, by a run killed before its commit."""
+        return self._latest.get(stage) == (
+            fingerprint, set(self.catalog.files(stage))
         )
-        return bool(last) and last[0][0] == fingerprint
 
-    def _commit(self, stage: str, fingerprint: str, out: DataFrame,
+    def _commit(self, stage: str, fingerprint: str,
                 metrics: dict | None = None) -> None:
-        # per-partition lineage: row count per physical partition
-        per_part = (
-            out.withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .count()
-            .collect()
-        )
-        row = self.spark.createDataFrame(
-            [
-                (
-                    stage,
-                    fingerprint,
-                    sum(r["count"] for r in per_part),
-                    json.dumps({str(r["pid"]): r["count"] for r in per_part}),
-                    json.dumps(metrics or {}),
-                    float(time.time()),
-                )
-            ],
-            "stage string, input_fingerprint string, row_count long, "
-            "partition_counts string, metrics string, committed_at double",
-        )
-        with self._commit_lock:
-            self.catalog.write(row, MANIFEST, mode="append")
+        """Commit the table `stage` as just written: its row count and
+        per-data-file counts come from the parquet footers."""
+        per_file = self.catalog.data_files(stage)
+        self.catalog.append_rows(MANIFEST, [{
+            "stage": stage,
+            "input_fingerprint": fingerprint,
+            "row_count": sum(per_file.values()),
+            "partition_counts": json.dumps(per_file, sort_keys=True),
+            "metrics": json.dumps(metrics or {}),
+            "committed_at": time.time(),
+        }], SCHEMA)
+        self._latest[stage] = (fingerprint, set(per_file))
 
     def run_stage(
         self,
@@ -94,8 +101,6 @@ class Runner:
             self.spark, stage
         ):
             return self.catalog.read(self.spark, stage)
-        out = produce()
-        self.catalog.write(out, stage, partition_by=partition_by)
-        persisted = self.catalog.read(self.spark, stage)
-        self._commit(stage, fingerprint, persisted, metrics)
-        return persisted
+        self.catalog.write(produce(), stage, partition_by=partition_by)
+        self._commit(stage, fingerprint, metrics)
+        return self.catalog.read(self.spark, stage)

@@ -9,6 +9,8 @@
 6. idempotent manifest resume.
 """
 
+import json
+import os
 import shutil
 import tempfile
 
@@ -253,8 +255,6 @@ def test_manifest_resume_after_partial_run(spark):
     """Kill-between-stages semantics: commit only the first stages, then run
     the full pipeline — committed stages must be skipped (their output files
     untouched) and the final tables must equal a from-scratch run."""
-    import os
-
     from esgkg.io import ParquetCatalog
     from esgkg.stages import corpus, manifest, nlp
 
@@ -344,6 +344,16 @@ def test_manifest_mode_equals_bench_mode(spark):
         commits = {r.stage: r["count"]
                    for r in m.groupBy("stage").count().collect()}
         assert commits == dict.fromkeys(tables, 1)
+        # footer counts: row_count is the table's, and the per-data-file
+        # counts (keyed by path under the table) add up to it
+        for r in m.collect():
+            per_file = json.loads(r.partition_counts)
+            assert r.row_count == stored[r.stage].count() > 0, r.stage
+            assert sum(per_file.values()) == r.row_count, r.stage
+            assert all(os.path.isfile(os.path.join(base, r.stage, f))
+                       for f in per_file), r.stage
+            if r.stage == "triples":  # partitioned by pred
+                assert all(f.startswith("pred=") for f in per_file)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -375,4 +385,128 @@ def test_manifest_concurrent_commits(spark):
         assert sorted(r.stage for r in m.collect()) == names
     finally:
         sys.setswitchinterval(interval)
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _jobs_of(spark, group, fn):
+    """(fn(), ids of the Spark jobs fn launched on this thread)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_manifest_bookkeeping_runs_no_spark_job(spark):
+    """Loading the manifest and committing to it run on the driver: a
+    resumed stage launches at most the one job of its catalog read, and a
+    commit launches none."""
+    from esgkg.io import ParquetCatalog
+    from esgkg.stages import manifest
+
+    base = tempfile.mkdtemp(prefix="esgkg_jobs_")
+    try:
+        cat = ParquetCatalog(base)
+        manifest.Runner(spark, cat).run_stage(
+            "t", "fp", lambda: spark.range(50).repartition(3)
+        )
+        runner, jobs = _jobs_of(spark, "esgkg-load",
+                                lambda: manifest.Runner(spark, cat))
+        assert jobs == []
+
+        def fail():
+            raise AssertionError("a committed stage was produced again")
+
+        out, jobs = _jobs_of(spark, "esgkg-resume",
+                             lambda: runner.run_stage("t", "fp", fail))
+        assert len(jobs) <= 1
+        assert out.count() == 50
+        _, jobs = _jobs_of(spark, "esgkg-commit",
+                           lambda: runner._commit("t", "fp2"))
+        assert jobs == []
+        assert runner._committed("t", "fp2")
+        assert manifest.Runner(spark, cat)._committed("t", "fp2")
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_manifest_skips_stray_tmp_and_reads_mixed_writers(spark):
+    """`_manifest` may hold Spark-written files (catalogs committed by
+    older code) next to driver-written ones, and a `.tmp-*` file left by a
+    commit killed before its rename. The Runner and spark.read.parquet both
+    read every committed file and neither reads the stray one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from esgkg.io import ParquetCatalog
+    from esgkg.stages import manifest
+
+    base = tempfile.mkdtemp(prefix="esgkg_mixed_")
+    try:
+        cat = ParquetCatalog(base)
+        mpath = cat.path(manifest.MANIFEST)
+        spark.createDataFrame(
+            [("old", "fp-old", 1, "{}", "{}", 1.0)],
+            "stage string, input_fingerprint string, row_count long, "
+            "partition_counts string, metrics string, committed_at double",
+        ).write.mode("append").parquet(mpath)
+        runner = manifest.Runner(spark, cat)
+        runner.run_stage("t", "fp", lambda: spark.range(4))
+        # a newer commit that never landed: if read, "t" would not resume
+        pq.write_table(
+            pa.Table.from_pylist([{
+                "stage": "t", "input_fingerprint": "fp-stray", "row_count": 0,
+                "partition_counts": "{}", "metrics": "{}",
+                "committed_at": float("inf"),
+            }], schema=manifest.SCHEMA),
+            os.path.join(mpath, ".tmp-stray.parquet"),
+        )
+        again = manifest.Runner(spark, cat)
+        assert again._committed("old", "fp-old")
+        assert again._committed("t", "fp")
+        rows = spark.read.parquet(mpath).collect()
+        assert sorted((r.stage, r.input_fingerprint) for r in rows) == [
+            ("old", "fp-old"), ("t", "fp")
+        ]
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_manifest_reproduces_uncommitted_table(spark):
+    """A committed stage is produced again, not served, when its directory
+    holds part files but no `_SUCCESS` (a rewrite killed before its job
+    commit), or a complete table the commit does not list (a rewrite by
+    another build killed before its manifest commit)."""
+    from esgkg.io import ParquetCatalog
+    from esgkg.stages import manifest
+
+    base = tempfile.mkdtemp(prefix="esgkg_partial_table_")
+    try:
+        cat = ParquetCatalog(base)
+        manifest.Runner(spark, cat).run_stage(
+            "t", "fp", lambda: spark.range(10)
+        )
+        os.remove(os.path.join(cat.path("t"), "_SUCCESS"))
+        assert any(f.endswith(".parquet") for f in os.listdir(cat.path("t")))
+        assert not cat.exists(spark, "t")
+        calls = []
+
+        def produce():
+            calls.append(1)
+            return spark.range(7)
+
+        out = manifest.Runner(spark, cat).run_stage("t", "fp", produce)
+        assert calls == [1]
+        assert out.count() == 7 and cat.exists(spark, "t")
+        cat.write(spark.range(3), "t")
+        out = manifest.Runner(spark, cat).run_stage("t", "fp", produce)
+        assert calls == [1, 1]
+        assert out.count() == 7
+        m = spark.read.parquet(cat.path(manifest.MANIFEST))
+        assert sorted(r.row_count for r in m.collect()) == [7, 7, 10]
+    finally:
         shutil.rmtree(base, ignore_errors=True)

@@ -117,6 +117,31 @@ def test_manifest_rejects_stale_resume(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_manifest_top_k_change_recomputes_links(spark):
+    """top_k is part of the predicted_links fingerprint: rebuilding a
+    top_k=10 catalog with top_k=2 recomputes the links (at most 2 per
+    source) and resumes the other 7 stages."""
+    base = tempfile.mkdtemp(prefix="esgkg_topk_")
+
+    def most_per_source(df):
+        return df.groupBy("src").count().agg(F.max("count")).first()[0]
+
+    try:
+        out10 = pipeline.build_kg(spark, 60, base_dir=base, top_k=10)
+        assert most_per_source(out10["predicted_links"]) > 2
+        out2 = pipeline.build_kg(spark, 60, base_dir=base, top_k=2)
+        assert 0 < most_per_source(out2["predicted_links"]) <= 2
+        m = spark.read.parquet(f"{base}/_manifest")
+        commits = {r.stage: r["count"]
+                   for r in m.groupBy("stage").count().collect()}
+        assert commits.pop("predicted_links") == 2
+        assert commits == dict.fromkeys(
+            ("text", "raw_triples", "linked_triples", "canon_map", "triples",
+             "nodes", "edges"), 1)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_simhash_bucket_cap_bounds_blowup(spark):
     """A boilerplate-skewed corpus (one dominant near-identical template)
     must not produce a quadratic pair set: with the cap, the hot band bucket
