@@ -408,11 +408,13 @@ def _q21_top_third_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q22_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # E1-E3 — Hits@k / MRR / MAP as window+agg ops
+    # E1-E3 — Hits@k / MRR / MAP through complete.hits_mrr_map
     # (/root/reference/src/evaluation/metrics.py:140-180). Deterministic
     # fixture: per customer, "predicted" = parts ranked by total spend,
     # "gold" = parts with total quantity >= 60.
     from pyspark.sql import Window
+
+    from esgkg.stages import complete
 
     o = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
@@ -430,38 +432,18 @@ def _q22_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("cust").orderBy(F.desc("spend"), F.asc("part"))
-    ranked = cp.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    ranked = cp.select(
+        F.col("cust").alias("src"),
+        F.col("part").alias("dst"),
+        F.row_number().over(w).alias("rank"),
     )
-    hit = ranked.withColumn(
-        "hit", F.when(F.col("qty") >= 60, 1).otherwise(0)
+    gold = cp.filter(F.col("qty") >= 60).select(
+        F.col("cust").alias("src"), F.col("part").alias("dst")
     )
-    run_w = (
-        Window.partitionBy("cust")
-        .orderBy("rank")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    hit = hit.withColumn("cum", F.sum("hit").over(run_w)).withColumn(
-        "ap_term",
-        F.when(F.col("hit") == 1, F.col("cum") / F.col("rank")).otherwise(0.0),
-    )
-    per = hit.groupBy("cust").agg(
-        (F.sum("hit") / F.lit(k)).alias("hits_at_k"),
-        F.max(
-            F.when(F.col("hit") == 1, 1.0 / F.col("rank")).otherwise(0.0)
-        ).alias("rr"),
-        F.sum("hit").alias("n_hits"),
-        F.sum("ap_term").alias("ap_sum"),
-    )
-    per = per.withColumn(
-        "ap",
-        F.when(F.col("n_hits") > 0, F.col("ap_sum") / F.col("n_hits")).otherwise(0.0),
-    )
-    return per.agg(
-        F.round(F.avg("hits_at_k"), 6).alias("hits_at_k"),
-        F.round(F.avg("rr"), 6).alias("mrr"),
-        F.round(F.avg("ap"), 6).alias("map"),
-        F.count("*").alias("n_queries"),
+    m = complete.hits_mrr_map(ranked, gold, k=k)
+    return m.select(
+        *(F.round(c, 6).alias(c) for c in ("hits_at_k", "mrr", "map")),
+        "n_queries",
     )
 
 

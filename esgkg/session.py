@@ -83,10 +83,7 @@ def get_spark(
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("ESGKG_ARROW_BATCH", "2048"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: every block is process-local, so any locality wait is
         # pure scheduler stall — measured 3x slowdown on cached/checkpointed

@@ -12,17 +12,21 @@ target upgrades this to surface-form merging at web scale:
    `max_bucket` (oversized buckets are dropped and counted — hub surfaces
    like boilerplate strings would otherwise produce quadratic pair blowup),
    and the pair self-join runs under AQE skew-join.
-2. **C2 verify** — exact char-3gram Jaccard on candidate pairs (vectorized
-   pandas UDF), threshold filter.
-3. **C3 connected components** — min-label propagation as a DataFrame
-   self-join fixpoint, localCheckpoint every `checkpoint_every` rounds to cut
-   lineage, early-exit when no label changes.
+2. **C2 verify** — exact char-3gram Jaccard AND edit similarity on
+   candidate pairs (vectorized pandas UDF), threshold filter.
+3. **C3 connected components** — driver union-find for a small pair graph,
+   else min-label propagation as a DataFrame self-join fixpoint run until no
+   label changes, localCheckpoint every CHECKPOINT_EVERY rounds to cut
+   lineage.
 4. **C4 rewrite** — triples joined against the canonical map on subj and obj
    (broadcast when the map is small, shuffle hash otherwise).
 """
 
 from __future__ import annotations
 
+import itertools
+import re
+from collections import defaultdict
 from collections.abc import Iterator
 
 import pandas as pd
@@ -47,6 +51,19 @@ LAST_STRATEGY: str | None = None
 # ("distributed")
 LAST_CC_STRATEGY: str | None = None
 
+# LSH and verification parameters. MinHash signature length, LSH bands and
+# shingle width fix the candidate recall curve; the conjunctive verify
+# thresholds fix purity. Every rung (driver and distributed) uses these same
+# values, so the rungs stay byte-equal.
+K = 32
+BANDS = 16
+NGRAM = 3
+JACCARD_THRESHOLD = 0.5
+EDIT_THRESHOLD = 0.88
+# distributed CC fixpoint: cut lineage and test for convergence every
+# CHECKPOINT_EVERY rounds
+CHECKPOINT_EVERY = 3
+
 _BANDS_SCHEMA = T.StructType(
     [
         T.StructField("surface", T.StringType(), False),
@@ -56,49 +73,43 @@ _BANDS_SCHEMA = T.StructType(
 )
 
 
-def band_rows(surfaces: DataFrame, col: str = "surface",
-              k: int = 32, bands: int = 16, ngram: int = 3,
-              assume_distinct: bool = False) -> DataFrame:
-    """distinct surfaces → (surface, band_id, band_hash) LSH bucket rows.
+def _min_label_components(pairs) -> dict[str, str]:
+    """Union-find over (a, b) edges: every vertex that occurs maps to the
+    smallest vertex of its component (min-label union keeps the
+    deterministic representative). The driver-side CC of both
+    `connected_components` and `canonical_map_local`."""
+    parent: dict[str, str] = {}
 
-    `assume_distinct` skips the dedup shuffle when the caller guarantees the
-    input is already one row per surface (e.g. a groupBy output) — each
-    distinct over the vocabulary is a full shuffle job of fixed latency."""
-    _session.ensure_shipped(surfaces.sparkSession)
+    def find(x: str) -> str:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from esgkg import kernel
-
-        for pdf in batches:
-            ss = [s for s in pdf[col] if s]
-            # batch-vectorized signatures (pytest-asserted byte-identical
-            # to the scalar kernel) — the banding hot path
-            sigs = kernel.minhash_signatures_batch(ss, k=k, ngram=ngram)
-            rows = []
-            for s, sig in zip(ss, sigs):
-                for bi, bh in enumerate(kernel.band_hashes(sig, bands)):
-                    rows.append((s, bi, bh))
-            yield pd.DataFrame(rows, columns=["surface", "band_id", "band_hash"])
-
-    # explicit repartition: AQE coalesces the (byte-tiny) distinct output to
-    # ~1 partition, but the minhash kernel is CPU-heavy per row — spread it
-    # across all cores regardless of byte size
-    par = surfaces.sparkSession.sparkContext.defaultParallelism
-    pool = surfaces.select(F.col(col).alias("surface"))
-    if not assume_distinct:
-        pool = pool.distinct()
-    return pool.repartition(par).mapInPandas(run, schema=_BANDS_SCHEMA)
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for n in parent}
 
 
-def candidate_pairs(surfaces: DataFrame, col: str = "surface",
-                    k: int = 32, bands: int = 16, ngram: int = 3,
-                    max_bucket: int = 64,
-                    edit_prefilter: float | None = None,
-                    recover_exact: bool = True,
+def candidate_pairs(surfaces: DataFrame, max_bucket: int = 64,
                     assume_distinct: bool = False) -> DataFrame:
-    """LSH candidate pairs (a < b). Oversized buckets are excluded (skew
-    guard); `recover_exact` diverts what the cap would lose that is still
-    O(n)-recoverable: a whitespace-normalized EXACT pass over the whole
+    """LSH candidate pairs (a < b) over the `surface` column, already
+    filtered by edit similarity ≥ EDIT_THRESHOLD.
+
+    Banding: per-surface MinHash signatures split into BANDS band hashes
+    (mapInPandas over the batch-vectorized kernel). One shuffle then groups
+    band rows into buckets (collect_list), the size cap drops buckets over
+    `max_bucket` (skew guard), and pairs are emitted MAP-SIDE from each
+    bucket array with higher-order functions — no band self-join, no second
+    pass over the band table (the round-1 shape needed a size-histogram
+    groupBy + a join + a sort-merge self-join over the same rows, three
+    shuffles of fixed latency that dominated wall time at vocabulary scale).
+
+    Exact recovery: what the cap would lose that is still O(n)-recoverable
+    is diverted through a whitespace-normalized EXACT pass over the whole
     surface pool (one extra groupBy on the tiny distinct-surface set, no
     dependency on the band table, so the lazy banding chain still evaluates
     once). Surfaces equal after whitespace stripping pair to the group's
@@ -111,21 +122,39 @@ def candidate_pairs(surfaces: DataFrame, col: str = "surface",
     by normalized surface rather than content hash because the surface pool
     is already distinct (an exact-duplicate pass would recover nothing).
 
-    One shuffle: band rows group into buckets (collect_list), the size cap
-    filters oversized buckets, and pairs are emitted MAP-SIDE from each
-    bucket array with higher-order functions — no band self-join, no second
-    pass over the band table (the round-1 shape needed a size-histogram
-    groupBy + a join + a sort-merge self-join over the same rows, three
-    shuffles of fixed latency that dominated wall time at vocabulary scale).
-    The distinct() that dedups a pair colliding in several bands is a
-    shuffle of the (small) candidate set itself.
+    The JVM edit-similarity filter runs BEFORE the dedup shuffle: a pair
+    colliding in several bands is exploded several times, but only
+    survivors reach the distinct, and it drops the ~99% of candidates that
+    share a legal-suffix shingle but nothing else before any python verify.
 
-    `assume_distinct` (forwarded to band_rows and honored by the recovery
-    pass) skips BOTH per-surface dedup shuffles when the caller guarantees
-    one row per surface — e.g. the pipeline's surface_stats groupBy output,
-    where each redundant distinct is a full vocabulary shuffle job of fixed
-    latency."""
-    b = band_rows(surfaces, col, k, bands, ngram, assume_distinct)
+    `assume_distinct` skips the per-surface dedup shuffle (shared by the
+    banding and recovery passes) when the caller guarantees one row per
+    surface — e.g. the pipeline's surface_stats groupBy output, where a
+    redundant distinct is a full vocabulary shuffle job of fixed latency."""
+    _session.ensure_shipped(surfaces.sparkSession)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from esgkg import kernel
+
+        for pdf in batches:
+            ss = [s for s in pdf["surface"] if s]
+            # batch-vectorized signatures (pytest-asserted byte-identical
+            # to the scalar kernel) — the banding hot path
+            sigs = kernel.minhash_signatures_batch(ss, k=K, ngram=NGRAM)
+            rows = []
+            for s, sig in zip(ss, sigs):
+                for bi, bh in enumerate(kernel.band_hashes(sig, BANDS)):
+                    rows.append((s, bi, bh))
+            yield pd.DataFrame(rows, columns=["surface", "band_id", "band_hash"])
+
+    pool = surfaces.select("surface")
+    if not assume_distinct:
+        pool = pool.distinct()
+    # explicit repartition: AQE coalesces the (byte-tiny) distinct output to
+    # ~1 partition, but the minhash kernel is CPU-heavy per row — spread it
+    # across all cores regardless of byte size
+    par = surfaces.sparkSession.sparkContext.defaultParallelism
+    b = pool.repartition(par).mapInPandas(run, schema=_BANDS_SCHEMA)
     buckets = (
         b.groupBy("band_id", "band_hash")
         .agg(F.sort_array(F.collect_list("surface")).alias("ms"))
@@ -139,66 +168,37 @@ def candidate_pairs(surfaces: DataFrame, col: str = "surface",
             lambda y: F.struct(x.alias("a"), y.alias("b")),
         ),
     )
-    out = (
+    lsh = (
         buckets.select(F.explode(F.flatten(pair_arrays)).alias("p"))
         .select("p.a", "p.b")
     )
-    if recover_exact:
-        rec_pool = surfaces.select(F.col(col).alias("surface"))
-        if not assume_distinct:
-            rec_pool = rec_pool.distinct()
-        norm_groups = (
-            rec_pool
-            .groupBy(
-                F.regexp_replace(F.col("surface"), WS_CLASS, "").alias("nk")
-            )
-            .agg(F.sort_array(F.collect_list("surface")).alias("ms"))
-            .filter(F.size("ms") >= 2)
-        )
-        rec = norm_groups.select(
-            F.col("ms")[0].alias("a"),
-            F.explode(F.slice(F.col("ms"), 2, F.size(F.col("ms")))).alias("b"),
-        )
-        out = out.unionByName(rec)
-    if edit_prefilter is not None:
-        # JVM levenshtein BEFORE the dedup shuffle: a pair colliding in
-        # several bands is exploded several times, but only survivors reach
-        # the distinct — the shuffle carries verified-scale rows, not
-        # candidate-scale ones
-        out = out.filter(
-            (
-                F.lit(1.0)
-                - F.levenshtein(F.col("a"), F.col("b"))
-                / F.greatest(F.length("a"), F.length("b"), F.lit(1))
-            )
-            >= edit_prefilter
-        )
-    return out.distinct()
+    norm_groups = (
+        pool
+        .groupBy(F.regexp_replace(F.col("surface"), WS_CLASS, "").alias("nk"))
+        .agg(F.sort_array(F.collect_list("surface")).alias("ms"))
+        .filter(F.size("ms") >= 2)
+    )
+    rec = norm_groups.select(
+        F.col("ms")[0].alias("a"),
+        F.explode(F.slice(F.col("ms"), 2, F.size(F.col("ms")))).alias("b"),
+    )
+    # JVM levenshtein counts UTF-16 code units, equal to the kernel's DP
+    # for BMP text
+    edit_sim = F.lit(1.0) - F.levenshtein(F.col("a"), F.col("b")) / F.greatest(
+        F.length("a"), F.length("b"), F.lit(1)
+    )
+    return lsh.unionByName(rec).filter(edit_sim >= EDIT_THRESHOLD).distinct()
 
 
-def verify_pairs(pairs: DataFrame, threshold: float = 0.5,
-                 edit_threshold: float = 0.88, ngram: int = 3) -> DataFrame:
+def verify_pairs(pairs: DataFrame) -> DataFrame:
     """C2 — conjunctive pair verification: exact char-ngram Jaccard (recall
     side, confirms the LSH estimate) AND edit similarity (precision side,
     rejects lookalikes that share shingles but differ structurally, e.g.
-    same-sector company names whose stems overlap).
-
-    The edit-similarity criterion is evaluated twice: first as a JVM
-    whole-stage-codegen prefilter (F.levenshtein — identical to the kernel's
-    DP for BMP text since both count code units), which drops the ~99% of
-    LSH candidates that share a legal-suffix shingle but nothing else, then
-    exactly in the python kernel on the survivors (shared source of truth
-    with the driver-local rung). Python therefore touches only the
-    verified-scale row count, not the candidate-scale one."""
+    same-sector company names whose stems overlap), both in the python
+    kernel (shared source of truth with the driver-local rung).
+    `candidate_pairs` already applied the edit threshold as a JVM filter, so
+    python touches only the verified-scale row count."""
     _session.ensure_shipped(pairs.sparkSession)
-    pairs = pairs.filter(
-        (
-            F.lit(1.0)
-            - F.levenshtein(F.col("a"), F.col("b"))
-            / F.greatest(F.length("a"), F.length("b"), F.lit(1))
-        )
-        >= edit_threshold
-    )
     schema = T.StructType(
         [
             T.StructField("a", T.StringType(), False),
@@ -214,7 +214,7 @@ def verify_pairs(pairs: DataFrame, threshold: float = 0.5,
         for pdf in batches:
             out = pdf.copy()
             out["sim"] = [
-                kernel.jaccard(a, b, ngram) for a, b in zip(pdf["a"], pdf["b"])
+                kernel.jaccard(a, b, NGRAM) for a, b in zip(pdf["a"], pdf["b"])
             ]
             out["edit_sim"] = [
                 kernel.edit_similarity(a, b)
@@ -222,78 +222,39 @@ def verify_pairs(pairs: DataFrame, threshold: float = 0.5,
             ]
             yield out[["a", "b", "sim", "edit_sim"]]
 
-    # repartition for the same reason as band_rows: the candidate-pair set
+    # repartition for the same reason as the banding: the candidate-pair set
     # is byte-tiny (AQE → 1 partition) but the edit-distance DP is O(len²)
     # CPU per row
     par = pairs.sparkSession.sparkContext.defaultParallelism
     return pairs.repartition(par).mapInPandas(run, schema=schema).filter(
-        (F.col("sim") >= threshold) & (F.col("edit_sim") >= edit_threshold)
+        (F.col("sim") >= JACCARD_THRESHOLD)
+        & (F.col("edit_sim") >= EDIT_THRESHOLD)
     )
 
 
-def connected_components(pairs: DataFrame, vertices: DataFrame | None = None,
-                         max_iter: int = 20,
-                         checkpoint_every: int = 3,
+def connected_components(pairs: DataFrame,
                          small_threshold: int = 200_000) -> DataFrame:
-    """Min-label propagation fixpoint → (surface, canonical).
+    """Min-label propagation over (a, b) edges → (surface, canonical).
 
     canonical = lexicographically smallest surface in the component
-    (deterministic representative). Each round is one join + one groupBy
-    (both on the node key, so AQE reuses the partitioning); convergence is
-    detected by counting changed labels (G7).
+    (deterministic representative).
 
     Scale-adaptive: a verified near-dup pair graph is usually orders of
     magnitude smaller than the corpus, so when it fits comfortably on the
-    driver (≤ small_threshold edges) we run exact union-find locally and
-    broadcast the result — identical output, none of the iterative-join
-    latency. The distributed fixpoint is the ≥threshold path. BOTH driver
-    collects are probed with limit(threshold+1) — an over-threshold
-    `vertices` frame routes to the distributed path the same way an
-    over-threshold pair graph does, so no caller input can trigger an
-    unbounded collect."""
+    driver (≤ small_threshold edges, probed with limit(threshold+1)) we run
+    exact union-find locally — none of the iterative-join latency. Above it
+    the distributed fixpoint runs: each round is one join + one groupBy
+    (both on the node key, so AQE reuses the partitioning), labels move one
+    hop per round, and the loop runs until a round changes no label (G7),
+    with a localCheckpoint every CHECKPOINT_EVERY rounds to cut lineage."""
     global LAST_CC_STRATEGY
     spark = pairs.sparkSession
     # single job: grab up to threshold+1 rows; only fall back to the
     # distributed fixpoint when the pair graph is genuinely large
     head = pairs.limit(small_threshold + 1).collect()
-    vhead: list | None = None
-    if vertices is not None and len(head) <= small_threshold:
-        # the local rung also collects the vertex frame (for singleton
-        # identity rows) — probe its size the same way instead of an
-        # unguarded full collect, so an unexpectedly huge vertex set routes
-        # to the distributed fixpoint by construction
-        vcol0 = vertices.columns[0]
-        vhead = (
-            vertices.select(vcol0).distinct().limit(small_threshold + 1).collect()
-        )
-    if len(head) <= small_threshold and (
-        vhead is None or len(vhead) <= small_threshold
-    ):
+    if len(head) <= small_threshold:
         LAST_CC_STRATEGY = "local"
-        rows = head
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for r in rows:
-            ra, rb = find(r[0]), find(r[1])
-            if ra != rb:
-                # min-label union keeps the deterministic representative
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        out = sorted((n, find(n)) for n in parent)
-        if vhead is not None:
-            have = set(parent)
-            extra = [
-                (r[0], r[0]) for r in vhead if r[0] not in have
-            ]
-            out = sorted(out + extra)
-        if not out:
-            return spark.createDataFrame([], "surface string, canonical string")
+        out = sorted(_min_label_components(head).items())
         return spark.createDataFrame(out, "surface string, canonical string")
     LAST_CC_STRATEGY = "distributed"
     edges = (
@@ -303,13 +264,8 @@ def connected_components(pairs: DataFrame, vertices: DataFrame | None = None,
         .localCheckpoint(eager=True)
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    if vertices is not None:
-        nodes = nodes.union(
-            vertices.select(F.col(vertices.columns[0]).alias("node"))
-        ).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
-
-    for it in range(max_iter):
+    for rounds in itertools.count(1):
         nbr = (
             edges.join(labels, edges.dst == labels.node)
             .select(F.col("src").alias("node"), "label")
@@ -317,7 +273,7 @@ def connected_components(pairs: DataFrame, vertices: DataFrame | None = None,
         new_labels = (
             labels.union(nbr).groupBy("node").agg(F.min("label").alias("label"))
         )
-        if (it + 1) % checkpoint_every == 0 or it == max_iter - 1:
+        if rounds % CHECKPOINT_EVERY == 0:
             new_labels = new_labels.localCheckpoint(eager=True)
             changed = (
                 new_labels.alias("n")
@@ -336,82 +292,46 @@ def connected_components(pairs: DataFrame, vertices: DataFrame | None = None,
 
 
 def canonical_map_local(surfaces: list[str],
-                        jaccard_threshold: float = 0.5,
-                        edit_threshold: float = 0.88,
-                        max_bucket: int = 64,
-                        ngram: int = 3, k: int = 32,
-                        bands: int = 16) -> dict[str, str]:
+                        max_bucket: int = 64) -> dict[str, str]:
     """Driver-side canonical map over a small distinct-surface set — the
-    exact same LSH banding + conjunctive verification + union-find the
-    distributed path computes, byte-for-byte (shared kernel functions).
-    Used by `canonical_map` below when the surface set fits on the driver."""
-    from collections import defaultdict
-
+    exact same LSH banding + whitespace recovery + conjunctive verification
+    + min-label union-find the distributed path computes, byte-for-byte
+    (shared kernel functions). Used by `canonical_map` below when the
+    surface set fits on the driver."""
     from .. import kernel
 
-    buckets: dict[tuple[int, int], list[str]] = defaultdict(list)
     pool = [s for s in surfaces if s]
-    sigs = kernel.minhash_signatures_batch(pool, k=k, ngram=ngram)
+    buckets: dict[tuple[int, int], list[str]] = defaultdict(list)
+    sigs = kernel.minhash_signatures_batch(pool, k=K, ngram=NGRAM)
     for s, sig in zip(pool, sigs):
-        for bi, bh in enumerate(kernel.band_hashes(sig, bands)):
+        for bi, bh in enumerate(kernel.band_hashes(sig, BANDS)):
             buckets[(bi, bh)].append(s)
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def try_merge(x: str, y: str, seen: set[tuple[str, str]]) -> None:
-        pair = (x, y)
-        if pair in seen:
-            return
-        seen.add(pair)
-        if (
-            kernel.jaccard(x, y, ngram) >= jaccard_threshold
-            and kernel.edit_similarity(x, y) >= edit_threshold
-        ):
-            ra, rb = find(x), find(y)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-
-    seen_pairs: set[tuple[str, str]] = set()
+    cands: set[tuple[str, str]] = set()
     for members in buckets.values():
-        if len(members) > max_bucket:
-            continue
-        ms = sorted(set(members))
-        for i in range(len(ms)):
-            for j in range(i + 1, len(ms)):
-                try_merge(ms[i], ms[j], seen_pairs)
-    # whitespace-normalized exact recovery — byte-identical semantics to the
-    # distributed path's `recover_exact` branch (candidate_pairs): members of
-    # a dropped oversized bucket that are equal after whitespace stripping
-    # still pair to the group's min surface and pass the same verification
-    import re as _re
-    from collections import defaultdict as _dd
-
-    norm_groups: dict[str, list[str]] = _dd(list)
-    for s in surfaces:
-        if s:
-            norm_groups[_re.sub(WS_CLASS, "", s)].append(s)
+        if len(members) <= max_bucket:
+            cands.update(itertools.combinations(sorted(set(members)), 2))
+    # whitespace-normalized exact recovery, as in candidate_pairs
+    norm_groups: dict[str, list[str]] = defaultdict(list)
+    for s in pool:
+        norm_groups[re.sub(WS_CLASS, "", s)].append(s)
     for members in norm_groups.values():
         ms = sorted(set(members))
-        for m in ms[1:]:
-            try_merge(ms[0], m, seen_pairs)
-    return {s: find(s) if s in parent else s for s in surfaces}
+        cands.update((ms[0], m) for m in ms[1:])
+    comp = _min_label_components(
+        (x, y) for x, y in cands
+        if kernel.jaccard(x, y, NGRAM) >= JACCARD_THRESHOLD
+        and kernel.edit_similarity(x, y) >= EDIT_THRESHOLD
+    )
+    return {s: comp.get(s, s) for s in surfaces}
 
 
-def canonical_map(surfaces: DataFrame, col: str = "surface",
-                  jaccard_threshold: float = 0.5,
-                  edit_threshold: float = 0.88,
-                  max_bucket: int = 64,
+def canonical_map(surfaces: DataFrame, max_bucket: int = 64,
                   exclude_exact: list[str] | None = None,
                   driver_threshold: int = 4_096,
                   pair_threshold: int = 200_000,
                   assume_distinct: bool = False) -> DataFrame:
-    """surface → canonical for every input surface (identity for singletons).
+    """`surface` column → (surface, canonical) for every input surface
+    (identity for singletons).
 
     Merging is the transitive closure over verified pairs: two variants that
     are each similar to a bridging surface merge through it, but two distant
@@ -424,7 +344,7 @@ def canonical_map(surfaces: DataFrame, col: str = "surface",
     distinct but textually close concepts (e.g. コンプライアンス vs
     コンプライアンス体制) are never merged.
 
-    Strategy ladder (scale-adaptive, every rung tested equal):
+    Strategy ladder (scale-adaptive):
     1. ≤ `driver_threshold` distinct surfaces → everything on the driver
        (collect + local LSH/verify/union-find). Test/seed scale only; the
        LSH hashing is single-threaded here, so this rung must stay tiny —
@@ -442,13 +362,12 @@ def canonical_map(surfaces: DataFrame, col: str = "surface",
     distinct+localCheckpoint — at bench scale that pair of vocabulary-wide
     shuffle jobs is ~7 s of fixed latency paid identically at every core
     count — and forwards the guarantee to candidate_pairs, whose banding
-    and whitespace-recovery passes each drop one more dedup shuffle.
-    Rung-equality on distinct inputs is pytest-asserted."""
+    and whitespace-recovery passes drop their dedup shuffle."""
     # one distinct over the (large) surface stream feeds both the LSH pool
     # and the identity join — computed once, reused (skipped entirely when
     # the caller already holds the distinct, materialized pool)
     global LAST_STRATEGY
-    all_s = surfaces.select(F.col(col).alias("surface"))
+    all_s = surfaces.select("surface")
     if not assume_distinct:
         all_s = all_s.distinct().localCheckpoint(eager=True)
     spark = surfaces.sparkSession
@@ -457,19 +376,11 @@ def canonical_map(surfaces: DataFrame, col: str = "surface",
         LAST_STRATEGY = "driver"
         excl = set(exclude_exact or ())
         pool_local = [r[0] for r in head if r[0] and r[0] not in excl]
-        cm = canonical_map_local(
-            pool_local, jaccard_threshold, edit_threshold, max_bucket
-        )
+        cm = canonical_map_local(pool_local, max_bucket)
         rows = sorted(
             (s, cm.get(s, s)) for s in (r[0] for r in head) if s is not None
         )
-        if not rows:
-            return spark.createDataFrame(
-                [], "surface string, canonical string"
-            )
-        return spark.createDataFrame(
-            rows, "surface string, canonical string"
-        )
+        return spark.createDataFrame(rows, "surface string, canonical string")
     pool = all_s
     if exclude_exact:
         pool = pool.filter(~F.col("surface").isin(exclude_exact))
@@ -479,11 +390,8 @@ def canonical_map(surfaces: DataFrame, col: str = "surface",
     # dist_pairs rung (the common one). Only the rare dist_cc rung
     # (> pair_threshold verified pairs) re-evaluates the chain.
     pairs = verify_pairs(
-        candidate_pairs(pool, "surface", max_bucket=max_bucket,
-                        edit_prefilter=edit_threshold,
-                        assume_distinct=assume_distinct),
-        threshold=jaccard_threshold,
-        edit_threshold=edit_threshold,
+        candidate_pairs(pool, max_bucket=max_bucket,
+                        assume_distinct=assume_distinct)
     ).select("a", "b")
     comp = connected_components(pairs, small_threshold=pair_threshold)
     local_cc = LAST_CC_STRATEGY == "local"

@@ -232,7 +232,9 @@ def bipartite_adamic_adar(edges: DataFrame, left: str, right: str,
 
 def hits_mrr_map(predicted: DataFrame, gold: DataFrame, k: int = 10) -> DataFrame:
     """predicted(src, dst, rank) vs gold(src, dst) → one row of
-    (hits_at_k, mrr, map) averaged over sources that have gold links."""
+    (hits_at_k, mrr, map, n_queries), averaged over every source with a
+    prediction at rank ≤ k (n_queries of them); a source none of whose
+    predictions is a gold link scores 0."""
     hit = (
         predicted.filter(F.col("rank") <= k)
         .join(gold.withColumn("hit", F.lit(1)), ["src", "dst"], "left")
@@ -267,6 +269,7 @@ def hits_mrr_map(predicted: DataFrame, gold: DataFrame, k: int = 10) -> DataFram
         F.avg("hits_at_k").alias("hits_at_k"),
         F.avg("mrr").alias("mrr"),
         F.avg("ap").alias("map"),
+        F.count("*").alias("n_queries"),
     )
 
 

@@ -52,49 +52,29 @@ def seed_graph(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
     return nodes, edges
 
 
-def materialize_nodes(triples: DataFrame, spark: SparkSession) -> DataFrame:
-    """The nodes half of `materialize` (see its docstring): one pass over the
-    triple stream (endpoint explode → per-name aggregation → category join),
-    checkpointed eagerly. Split out so the bench pipeline can build nodes and
-    edges CONCURRENTLY — with `assume_closed` the edge plan does not depend
-    on the node table, and the two jobs' scheduling gaps overlap (the
-    nodes+edges stage was the largest fixed-latency tail in the N→4N
-    scaling profile)."""
-    _session.ensure_shipped(spark)
+def _nodes(names: DataFrame, spark: SparkSession) -> DataFrame:
+    """(name, is_inst, mentions) rows, any number per name, plus the
+    ontology seed → one node row per name: max(is_inst) decides the kind,
+    mentions are summed, the category comes from the hierarchy closure.
+    Checkpointed eagerly, so consumers never recompute the aggregation."""
     seed_nodes, _ = seed_graph(spark)
-    ends = triples.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("subj").alias("name"),
-                    (F.col("pred") == "instance_of").alias("is_inst"),
-                ),
-                F.struct(
-                    F.col("obj").alias("name"), F.lit(False).alias("is_inst")
-                ),
-            )
-        ).alias("e")
-    ).select("e.*")
     names_agg = (
-        ends.select("name", "is_inst", F.lit(1).cast("long").alias("m"))
-        .unionByName(
+        names.unionByName(
             seed_nodes.select(
                 "name",
                 F.lit(False).alias("is_inst"),
-                F.lit(0).cast("long").alias("m"),
+                F.lit(0).cast("long").alias("mentions"),
             )
         )
         .groupBy("name")
         .agg(
             F.max("is_inst").alias("is_instance"),
-            F.sum("m").alias("mentions"),
+            F.sum("mentions").alias("mentions"),
         )
     )
     cat = vocab.concept_category()
     cat_df = F.broadcast(
-        triples.sparkSession.createDataFrame(
-            sorted(cat.items()), "name string, cat string"
-        )
+        spark.createDataFrame(sorted(cat.items()), "name string, cat string")
     )
     return (
         names_agg.join(cat_df, "name", "left")
@@ -111,6 +91,15 @@ def materialize_nodes(triples: DataFrame, spark: SparkSession) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
+
+
+def materialize_nodes(triples: DataFrame, spark: SparkSession) -> DataFrame:
+    """The nodes half of `materialize` (see its docstring): `surface_stats`
+    over the triple stream through the shared node build. Split out so
+    nodes and edges can be built CONCURRENTLY — with `assume_closed` the
+    edge plan does not depend on the node table."""
+    _session.ensure_shipped(spark)
+    return _nodes(surface_stats(triples), spark)
 
 
 def surface_stats(linked: DataFrame) -> DataFrame:
@@ -158,15 +147,13 @@ def materialize_nodes_from_stats(stats: DataFrame, cmap: DataFrame,
     """Node build from the pre-aggregated `surface_stats` table: map each
     raw surface through the canonical map (left join, identity fallback —
     exactly rewrite_triples' lookup), re-aggregate by canonical name, union
-    the ontology seed, then the same category/kind/id resolution as
-    `materialize_nodes`. Provably equal to
-    materialize_nodes(rewrite_triples(linked, cmap)) because max/sum are
-    associative over the per-surface partial aggregates (pytest asserts
-    equality on pipeline data). The joins and aggregations here touch only
-    vocabulary-sized tables — the corpus-sized work already happened in the
-    one surface_stats pass."""
+    the ontology seed, then the node build `materialize_nodes` shares.
+    Provably equal to materialize_nodes(rewrite_triples(linked, cmap))
+    because max/sum are associative over the per-surface partial aggregates
+    (pytest asserts equality on pipeline data). The joins and aggregations
+    here touch only vocabulary-sized tables — the corpus-sized work already
+    happened in the one surface_stats pass."""
     _session.ensure_shipped(spark)
-    seed_nodes, _ = seed_graph(spark)
     mapped = (
         stats.join(
             _canon_lookup(cmap, "name", "canon_name", broadcast_threshold),
@@ -179,39 +166,7 @@ def materialize_nodes_from_stats(stats: DataFrame, cmap: DataFrame,
             "mentions",
         )
     )
-    names_agg = (
-        mapped.unionByName(
-            seed_nodes.select(
-                "name",
-                F.lit(False).alias("is_inst"),
-                F.lit(0).cast("long").alias("mentions"),
-            )
-        )
-        .groupBy("name")
-        .agg(
-            F.max("is_inst").alias("is_instance"),
-            F.sum("mentions").alias("mentions"),
-        )
-    )
-    cat = vocab.concept_category()
-    cat_df = F.broadcast(
-        spark.createDataFrame(sorted(cat.items()), "name string, cat string")
-    )
-    return (
-        names_agg.join(cat_df, "name", "left")
-        .select(
-            _name_id(F.col("name")).alias("id"),
-            "name",
-            F.coalesce("cat", F.lit("Other")).alias("category"),
-            F.when(F.col("is_instance"), F.lit("Instance"))
-            .otherwise(F.lit("Concept"))
-            .alias("kind"),
-            F.create_map(
-                F.lit("mentions"), F.col("mentions").cast("string")
-            ).alias("attributes"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    return _nodes(mapped, spark)
 
 
 def materialize_edges(

@@ -1,9 +1,9 @@
-"""Mention detection + relation extraction (U1) and entity linking (U5/U6).
+"""Relation extraction (U1) and entity linking (U5/U6).
 
-UDTF-shaped stage: one text row → many mention rows / many triple rows,
-implemented as ``mapInPandas`` over the shared kernel extractor. The
-extractor's compiled regexes are built once per python worker (module-level
-singleton in esgkg.kernel), not per batch — the Iterator form amortizes init.
+UDTF-shaped stage: one text row → many triple rows, implemented as
+``mapInPandas`` over the shared kernel extractor. The extractor's compiled
+regexes are built once per python worker (module-level singleton in
+esgkg.kernel), not per batch — the Iterator form amortizes init.
 
 Linking: surface → canonical concept via the broadcast alias dictionary,
 falling back to a deterministic hash-embedding nearest-seed match above a
@@ -27,17 +27,6 @@ from pyspark.sql import types as T
 
 from .. import session as _session
 
-MENTIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sent_id", T.IntegerType(), True),
-        T.StructField("mention", T.StringType(), True),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("begin", T.IntegerType(), True),
-        T.StructField("end", T.IntegerType(), True),
-    ]
-)
-
 TRIPLES_SCHEMA = T.StructType(
     [
         T.StructField("subj", T.StringType(), True),
@@ -47,29 +36,6 @@ TRIPLES_SCHEMA = T.StructType(
         T.StructField("confidence", T.DoubleType(), True),
     ]
 )
-
-
-def extract_mentions(text_df: DataFrame) -> DataFrame:
-    """(url, text, …) → one row per entity mention per sentence."""
-    _session.ensure_shipped(text_df.sparkSession)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from esgkg import kernel
-
-        ex = kernel.get_extractor()
-        for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if not text:
-                    continue
-                for si, sent in enumerate(kernel.split_sentences(text)):
-                    for surface, label, b, e in ex.entities(sent):
-                        rows.append((url, si, surface, label, b, e))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MENTIONS_SCHEMA]
-            )
-
-    return text_df.select("url", "text").mapInPandas(run, schema=MENTIONS_SCHEMA)
 
 
 def extract_triples(text_df: DataFrame) -> DataFrame:
@@ -137,10 +103,15 @@ def synth_linked_narrow(spark, n: int, seed: int = 42,
                         partitions: int | None = None) -> DataFrame:
     """Narrow half of the fused map chain: page synthesis → HTML→text
     extraction → triple extraction → dictionary linking in ONE Arrow pass,
-    emitting (subj, pred, obj, pid). The synthetic url and confidence
-    columns of the full TRIPLES_SCHEMA are pure functions of the page id
-    (url = synth.URL_PREFIX + pid, confidence = 1.0), so they are reattached
-    by `widen_linked` as JVM codegen instead of crossing the Arrow boundary
+    emitting (subj, pred, obj, pid). The modular stages
+    (corpus.synth_pages → corpus.extract_text → extract_triples →
+    link_triples) compute exactly the same rows once widened — pytest
+    asserts the equivalence — but each mapInPandas hop ships the full
+    corpus JVM↔python once; fusing the linear chain cuts that socket
+    traffic 4x. The synthetic url and confidence columns of the full
+    TRIPLES_SCHEMA are pure functions of the page id (url =
+    synth.URL_PREFIX + pid, confidence = 1.0), so they are reattached by
+    `widen_linked` as JVM codegen instead of crossing the Arrow boundary
     as per-row python strings (guide §2.3/§4.1: shuffle/ship keys, not
     payloads you can recompute) — ~35 bytes/row of url string stay out of
     the python→JVM transfer and out of the stored `linked_triples` table."""
@@ -200,20 +171,6 @@ def widen_linked(narrow: DataFrame) -> DataFrame:
         ).alias("url"),
         F.lit(1.0).alias("confidence"),
     )
-
-
-def synth_linked_triples(spark, n: int, seed: int = 42,
-                         partitions: int | None = None) -> DataFrame:
-    """Fused map chain with full TRIPLES_SCHEMA rows: page synthesis →
-    HTML→text extraction → triple extraction → dictionary linking in ONE
-    Arrow pass. The modular stages (corpus.synth_pages → corpus.extract_text
-    → extract_triples → link_triples) compute exactly the same rows — pytest
-    asserts the equivalence — but each mapInPandas hop ships the full corpus
-    JVM↔python once; fusing the linear chain cuts that socket traffic 4x
-    (measured: the unfused chain was system-CPU-bound at local[32]).
-    Composition of `synth_linked_narrow` (python workers emit narrow rows)
-    and `widen_linked` (url/confidence reattached as JVM codegen)."""
-    return widen_linked(synth_linked_narrow(spark, n, seed, partitions))
 
 
 def link_triples(triples: DataFrame) -> DataFrame:

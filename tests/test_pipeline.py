@@ -88,7 +88,9 @@ def test_fused_equals_modular(spark, text_df):
         map(tuple, nlp.link_triples(nlp.extract_triples(text_df)).collect())
     )
     fused = sorted(
-        map(tuple, nlp.synth_linked_triples(text_df.sparkSession, N).collect())
+        map(tuple, nlp.widen_linked(
+            nlp.synth_linked_narrow(text_df.sparkSession, N)
+        ).collect())
     )
     assert fused == modular and fused
 
@@ -160,6 +162,20 @@ def test_cc_matches_networkx(spark):
         labels = {got[n] for n in comp}
         assert len(labels) == 1
         assert min(comp) == labels.pop()
+
+
+def test_cc_distributed_fixpoint_runs_to_convergence(spark):
+    """Min-label propagation moves a label one hop per round, so a 30-node
+    chain needs 29 rounds: the distributed fixpoint must run until no label
+    changes, not stop after a fixed round count with unconverged labels."""
+    chain = [f"s{i:02d}" for i in range(30)]
+    df = spark.createDataFrame(list(zip(chain, chain[1:])), "a string, b string")
+    got = {
+        r.surface: r.canonical
+        for r in canon.connected_components(df, small_threshold=0).collect()
+    }
+    assert canon.LAST_CC_STRATEGY == "distributed"
+    assert got == {s: "s00" for s in chain}
 
 
 def test_graph_invariants(spark, text_df):

@@ -564,20 +564,3 @@ def test_canonical_map_assume_distinct_equals_default(spark):
             )
         )
         assert base == fast and base
-
-
-def test_connected_components_vertices_guard(spark):
-    """An over-threshold `vertices` frame must route to the distributed
-    fixpoint (no unbounded driver collect) and still produce the identity
-    rows for singleton vertices."""
-    pairs = spark.createDataFrame([("a", "b"), ("c", "d")], "a string, b string")
-    verts = spark.createDataFrame(
-        [(f"v{i:02d}",) for i in range(10)] + [("a",), ("c",)], "v string"
-    )
-    out = canon.connected_components(pairs, vertices=verts, small_threshold=4)
-    assert canon.LAST_CC_STRATEGY == "distributed"
-    got = {(r.surface, r.canonical) for r in out.collect()}
-    want = {("a", "a"), ("b", "a"), ("c", "c"), ("d", "c")} | {
-        (f"v{i:02d}", f"v{i:02d}") for i in range(10)
-    }
-    assert got == want

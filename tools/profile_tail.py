@@ -1,11 +1,10 @@
-"""Micro-profile of the pipeline TAIL (canonicalization → rewrite →
-nodes/edges → Adamic-Adar) against a pre-built linked-triples parquet, so
-tail-stage scaling can be iterated without re-running the (hardware-limited)
-map phase every time.
+"""Canonicalization at vocabulary scale: `canon.canonical_map` over N
+distinct synthetic surfaces, large enough that the distributed banding,
+verification and CC fixpoint rungs all run (the pipeline's own vocabulary
+takes the driver rung). The per-stage timings of the pipeline tail come from
+`perfbench/run.py --workload kg_build --trace 1`.
 
-Usage: python tools/profile_tail.py --cores 16 [--pages 1000000]
-The linked parquet is built once per page count and shared across core
-counts (content is deterministic).
+Usage: python tools/profile_tail.py --cores 16 --surfaces 5000000
 """
 
 from __future__ import annotations
@@ -13,15 +12,13 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def synth_surfaces(spark, n: int):
-    """Deterministic DISTINCT surface pool of size n for the
-    canonicalization-at-scale mode (--surfaces): two variants per group —
+    """Deterministic DISTINCT surface pool of size n: two variants per group —
     a 16-char random-katakana stem (seeded per group) and the same stem
     with its final char doubled (edit distance 1 → edit_sim = 1 - 1/17 ≈
     0.94 and char-3gram jaccard ≈ 0.8 → the DEFAULT conjunctive verify
@@ -89,87 +86,17 @@ def canon_at_scale(spark, n_surfaces: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, default=16)
-    ap.add_argument("--pages", type=int, default=1000000)
     ap.add_argument(
-        "--surfaces", type=int, default=None,
-        help="run the distributed-canon-at-scale mode over N distinct "
-        "synthetic surfaces instead of the pipeline tail profile",
+        "--surfaces", type=int, required=True,
+        help="number of distinct synthetic surfaces to canonicalize",
     )
     args = ap.parse_args()
 
-    if args.surfaces:
-        from esgkg.session import get_spark
-
-        spark = get_spark(cores=args.cores, app=f"canonscale{args.cores}")
-        out = canon_at_scale(spark, args.surfaces)
-        print(json.dumps({"cores": args.cores, **out}))
-        spark.stop()
-        return
-
-    from pyspark.sql import functions as F
-
-    from esgkg import pipeline, vocab
     from esgkg.session import get_spark
-    from esgkg.stages import canon, complete, graph, nlp
 
-    spark = get_spark(cores=args.cores, app=f"tail{args.cores}")
-    linked_path = f"/dev/shm/esgkg-linked-{args.pages}"
-    if not Path(linked_path).exists():
-        nlp.synth_linked_triples(spark, args.pages, 42).write.mode(
-            "overwrite"
-        ).parquet(linked_path)
-    linked = spark.read.parquet(linked_path)
-
-    # same JIT warmup as the bench harness
-    warm = pipeline.build_kg(spark, 20000, seed=7)
-    warm["predicted_links"].count()
-    canon.canonical_map(
-        warm["triples"].select(F.col("subj").alias("surface")).limit(3000),
-        driver_threshold=0,
-    ).count()
-
-    t: dict[str, float] = {}
-
-    def tick(name: str, fn):
-        t0 = time.time()
-        r = fn()
-        t[name] = round(time.time() - t0, 3)
-        return r
-
-    protected = sorted(set(vocab.all_concept_surfaces().values())) + [
-        "Organization"
-    ]
-    cmap = tick(
-        "canon",
-        lambda: canon.canonical_map(
-            linked.select(F.explode(F.array("subj", "obj")).alias("surface")),
-            exclude_exact=protected,
-        ).localCheckpoint(eager=True),
-    )
-    triples = canon.rewrite_triples(linked, cmap)
-    tick("nodes_only", lambda: graph.materialize_nodes(triples, spark))
-    edges = tick(
-        "edges_only",
-        lambda: graph.materialize_edges(
-            triples, spark, assume_closed=True
-        ).localCheckpoint(eager=True),
-    )
-
-    def both():
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as ex:
-            fn = ex.submit(graph.materialize_nodes, triples, spark)
-            fe = ex.submit(
-                lambda: graph.materialize_edges(
-                    triples, spark, assume_closed=True
-                ).localCheckpoint(eager=True)
-            )
-            return fn.result(), fe.result()
-
-    tick("nodes_edges_threaded", both)
-    tick("aa_links", lambda: complete.adamic_adar(edges, 10).count())
-    print(json.dumps({"cores": args.cores, "pages": args.pages, **t}))
+    spark = get_spark(cores=args.cores, app=f"canonscale{args.cores}")
+    out = canon_at_scale(spark, args.surfaces)
+    print(json.dumps({"cores": args.cores, **out}))
     spark.stop()
 
 
