@@ -151,16 +151,11 @@ def _q05_doc_keyword_sections(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q06_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
-    freq = (
-        docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count("*").alias("freq"))
-    )
+    from esgkg.ops import textstats
+
     # global top-N via orderBy+limit (TakeOrderedAndProject — no single
     # partition shuffle); the rank column is assigned over the 50-row result
-    top = freq.orderBy(F.desc("freq"), F.asc("token")).limit(50)
+    top = textstats.token_frequency(_t(spark, sf_dir, "documents"), top_n=50)
     w = Window.partitionBy(F.lit(0)).orderBy(F.desc("freq"), F.asc("token"))
     return top.select(
         "token", "freq", F.row_number().over(w).alias("rn")
@@ -175,21 +170,9 @@ def _q07_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q08_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    c = F.col("text")
-    toks = F.filter(F.split(c, " "), lambda t: t != "")
-    n_tok = F.size(toks)
-    n_bpe = F.size(
-        F.regexp_extract_all(
-            c, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0)
-        )
-    )
-    return docs.select(
-        F.col("doc_id").alias("id"),
-        n_tok.alias("n_ws_tokens"),
-        n_bpe.alias("n_bpeish_tokens"),
-        F.length(c).alias("n_chars_calc"),
-    )
+    from esgkg.ops import textstats
+
+    return textstats.token_stats(_t(spark, sf_dir, "documents"))
 
 
 def _q09_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,22 +372,9 @@ def _q20_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q21_top_third_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # T4/F4 — the reference's keyword extractor: top floor(V/3) tokens by
     # frequency (/root/reference/src/evaluation/metrics.py:273-280).
-    # Two-pass: count the vocabulary, then orderBy+limit
-    # (TakeOrderedAndProject — no single-partition window).
-    docs = _t(spark, sf_dir, "documents")
-    freq = (
-        docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
-        .filter(F.col("token") != "")
-        .groupBy("token")
-        .agg(F.count("*").alias("freq"))
-        .persist()
-    )
-    total = freq.count()
-    return (
-        freq.orderBy(F.desc("freq"), F.asc("token"))
-        .limit(total // 3)
-        .select("token", "freq")
-    )
+    from esgkg.ops import textstats
+
+    return textstats.top_third_keywords(_t(spark, sf_dir, "documents"))
 
 
 def _q22_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,32 +612,19 @@ def _q31_evaluation_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q32_embedding_similarity_pairs(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     # embedding-cosine near-dup, EXACT variant (oracle-checkable): bounded
-    # self-join + JVM zip_with/aggregate cosine in double precision. The
-    # LSH-blocked scale path is dedup.embedding_near_dup_pairs (pytest
-    # compares its recall against this exact set).
+    # self-join + JVM cosine (simsearch.dot) in double precision. The
+    # LSH-blocked scale path is dedup.embedding_near_dup_pairs.
+    from esgkg.ops import simsearch
+
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)
-    a = emb.select(
-        F.col("vec_id").alias("a"),
-        F.col("embedding").cast("array<double>").alias("va"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("b"),
-        F.col("embedding").cast("array<double>").alias("vb"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _n(c):
-        return F.sqrt(
-            F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-        )
-
+    vec = F.col("embedding").cast("array<double>")
+    a = emb.select(F.col("vec_id").alias("a"), vec.alias("va"))
+    b = emb.select(F.col("vec_id").alias("b"), vec.alias("vb"))
+    va, vb = F.col("va"), F.col("vb")
     return (
         a.join(b, F.col("a") < F.col("b"))
-        .withColumn("cosine", dot / (_n("va") * _n("vb")))
+        .withColumn("cosine", simsearch.dot(va, vb)
+                    / (simsearch.norm(va) * simsearch.norm(vb)))
         .filter(F.col("cosine") >= 0.3)
         .select("a", "b", F.round(F.col("cosine"), 6).alias("cosine"))
     )

@@ -2,8 +2,9 @@
 measurement; this file holds the builder-side instrumentation).
 
 Mirrors bench.py's query methodology exactly — same session config
-(get_spark(cores=min(CPUS, 16))), same query order, timing = callable
-construction + .count() — and adds what §1 of the optimization guide asks
+(get_spark(cores=min(CPUS, 16))), same query list, SF_DIR and CPUS
+(imported from bench.py), timing = callable construction + .count() — and
+adds what §1 of the optimization guide asks
 for: repeat passes (cold vs warm split), optional noop-sink isolation, and
 .explain("formatted") capture per query.
 
@@ -19,7 +20,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 from pathlib import Path
@@ -27,20 +27,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-BENCH_QUERIES = [
-    "q01_pricing_summary",
-    "q02_top_nations_revenue",
-    "q03_order_rank_window",
-    "q06_token_frequency",
-    "q11_cosine_topk",
-    "q12_char_jaccard_pairs",
-    "q13_adamic_adar",
-    "q14_html_roundtrip",
-    "q20_knn_join",
-]
+from bench import BENCH_QUERIES, CPUS, SF_DIR  # noqa: E402
 
 
 def main() -> None:

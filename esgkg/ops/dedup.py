@@ -1,6 +1,7 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Five families over a document table:
+Five families over a document table (doc_id, text) or, for
+embedding-cosine, the embeddings table (vec_id, embedding):
 
 * exact      — hash groupBy; keeper = min(doc_id) per identical text.
 * minhash    — MinHash+LSH near-dup: shingle → minhash → band → bucket join
@@ -12,13 +13,16 @@ Five families over a document table:
                hyperplane-LSH blocking + exact JVM cosine verification.
 
 Scale notes: every family is blocking-based (no all-pairs cross join). The
-LSH band groupBy is the only shuffle; bucket-size caps bound the pair
-explosion from boilerplate-heavy corpora (the classic web-dedup skew).
+three LSH families share one blocking step, `_bucket_pairs`: a bucket-size
+histogram, then a self-join within the buckets under the size cap, which
+bounds the pair explosion from boilerplate-heavy corpora (the classic
+web-dedup skew).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -28,42 +32,57 @@ from pyspark.sql import types as T
 from .. import session as _session
 from ..stages import canon
 
+# embedding_near_dup_pairs' LSH blocking: bits per table and bucket cap
+EMB_PLANES = 8
+EMB_MAX_BUCKET = 1024
 
-def exact_dedup(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """One row per distinct text: (keep_id, n_dupes). JVM-side only.
 
     Groups on (md5, xxhash64, length) content hashes instead of the raw text
     so the shuffle key is ~30 bytes, not the document body (at 100 TB the
     full-text key IS the corpus). Two independent hashes + the exact length
     make a false merge ~2^-192-improbable — the collision-verify margin."""
-    key = [
-        F.md5(F.col(text_col)),
-        F.xxhash64(F.col(text_col), F.lit(7)),
-        F.length(F.col(text_col)),
-    ]
+    text = F.col("text")
+    key = [F.md5(text), F.xxhash64(text, F.lit(7)), F.length(text)]
     return (
         docs.groupBy(*key)
         .agg(
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
             F.count("*").alias("n_dupes"),
         )
         .select("keep_id", "n_dupes")
     )
 
 
-def exact_dedup_keep(docs: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """The surviving rows after exact dedup (keeper = min id per text)."""
-    keep = exact_dedup(docs, text_col, id_col).select(
-        F.col("keep_id").alias(id_col)
+def _bucket_pairs(rows: DataFrame, bucket: list[str],
+                  max_bucket: int) -> tuple[DataFrame, DataFrame]:
+    """The blocking step every LSH family shares. `rows` holds one
+    (id, *bucket) row per signature band; two ids are a candidate when they
+    share a bucket of at most `max_bucket` members.
+
+    Returns (pairs, dropped): pairs is one (a, b) row, a < b, per shared
+    kept bucket (callers `distinct` or count them); dropped is the rows
+    whose bucket exceeded the cap. The cap bounds the quadratic self-join
+    on boilerplate-heavy corpora, where millions of rows collapse into one
+    bucket (the classic web-dedup skew). The rows are checkpointed because
+    they feed the size histogram, both join sides and `dropped`."""
+    rows = rows.localCheckpoint(eager=True)
+    sizes = rows.groupBy(*bucket).agg(F.count("*").alias("n"))
+    kept = rows.join(sizes.filter(F.col("n") <= max_bucket).select(*bucket),
+                     bucket)
+    dropped = rows.join(sizes.filter(F.col("n") > max_bucket).select(*bucket),
+                        bucket)
+    l, r = kept.alias("l"), kept.alias("r")
+    on = [F.col(f"l.{c}") == F.col(f"r.{c}") for c in bucket]
+    pairs = l.join(r, [*on, F.col("l.id") < F.col("r.id")]).select(
+        F.col("l.id").alias("a"), F.col("r.id").alias("b")
     )
-    return docs.join(keep, id_col)
+    return pairs, dropped
 
 
-def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           k: int = 32, bands: int = 16,
+def minhash_near_dup_pairs(docs: DataFrame, k: int = 32, bands: int = 16,
                            shingle: int = 5,
                            jaccard_threshold: float = 0.7,
                            max_bucket: int = 64,
@@ -124,7 +143,7 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
 
         for pdf in batches:
             rows = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
                 if not t:
                     continue
                 sig = kernel.minhash_signature(t, k=k, ngram=shingle)
@@ -132,36 +151,15 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
                     rows.append((int(i), bi, bh))
             yield pd.DataFrame(rows, columns=["id", "band_id", "band_hash"])
 
-    # checkpoint: band rows feed the size histogram, the pair join, and the
-    # oversized-bucket recovery — without it the minhash UDF would run 3x
-    b = (
-        docs.select(id_col, text_col)
-        .mapInPandas(mk_bands, schema=bands_schema)
-        .localCheckpoint(eager=True)
+    bands_rows = docs.select("doc_id", "text").mapInPandas(
+        mk_bands, schema=bands_schema
     )
-    sizes = b.groupBy("band_id", "band_hash").agg(F.count("*").alias("n"))
-    oversized = sizes.filter(F.col("n") > max_bucket).select(
-        "band_id", "band_hash"
+    pairs0, dropped = _bucket_pairs(
+        bands_rows, ["band_id", "band_hash"], max_bucket
     )
-    ok = b.join(
-        sizes.filter(F.col("n") <= max_bucket).select("band_id", "band_hash"),
-        ["band_id", "band_hash"],
-    )
+    # the collision count doubles as the signature-agreement prefilter
+    pairs0 = pairs0.groupBy("a", "b").agg(F.count("*").alias("n_bands"))
     eff_agreement = max(1, min(min_band_agreement, bands))
-    l, r = ok.alias("l"), ok.alias("r")
-    pairs0 = (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_hash") == F.col("r.band_hash"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        # groupBy replaces the old distinct(): same dedup shuffle, but the
-        # collision count doubles as the signature-agreement prefilter
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_bands"))
-    )
     if eff_agreement <= 1:
         cand = pairs0.select("a", "b")
     else:
@@ -177,19 +175,14 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
         # pairs0 feeds both the relaxation join and the final filter —
         # checkpoint so the quadratic bucket join runs once.
         pairs0 = pairs0.localCheckpoint(eager=True)
-        dropped_bands = b.join(oversized, ["band_id", "band_hash"])
         shared_dropped = (
             pairs0.select("a", "b")
             .join(
-                dropped_bands.select(
-                    F.col("id").alias("a"), "band_id", "band_hash"
-                ),
+                dropped.select(F.col("id").alias("a"), "band_id", "band_hash"),
                 "a",
             )
             .join(
-                dropped_bands.select(
-                    F.col("id").alias("b"), "band_id", "band_hash"
-                ),
+                dropped.select(F.col("id").alias("b"), "band_id", "band_hash"),
                 ["b", "band_id", "band_hash"],
             )
             .groupBy("a", "b")
@@ -207,9 +200,10 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
             )
             .select("a", "b")
         )
-    texts = docs.select(F.col(id_col).alias("a"), F.col(text_col).alias("ta"))
-    cand = cand.join(texts, "a").join(
-        docs.select(F.col(id_col).alias("b"), F.col(text_col).alias("tb")), "b"
+    cand = cand.join(
+        docs.select(F.col("doc_id").alias("a"), F.col("text").alias("ta")), "a"
+    ).join(
+        docs.select(F.col("doc_id").alias("b"), F.col("text").alias("tb")), "b"
     )
 
     verify_schema = T.StructType(
@@ -237,19 +231,9 @@ def minhash_near_dup_pairs(docs: DataFrame, text_col: str = "text",
     )
     if not recover_oversized:
         return verified
-    dropped_ids = (
-        b.join(
-            sizes.filter(F.col("n") > max_bucket).select(
-                "band_id", "band_hash"
-            ),
-            ["band_id", "band_hash"],
-        )
-        .select("id")
-        .distinct()
-    )
     dd = docs.select(
-        F.col(id_col).alias("id"), F.md5(F.col(text_col)).alias("h")
-    ).join(dropped_ids, "id")
+        F.col("doc_id").alias("id"), F.md5(F.col("text")).alias("h")
+    ).join(dropped.select("id").distinct(), "id")
     keep = dd.groupBy("h").agg(F.min("id").alias("keep_id"))
     exact_pairs = (
         dd.join(keep, "h")
@@ -283,8 +267,7 @@ def minhash_dedup_components(docs: DataFrame, **kw) -> DataFrame:
     )
 
 
-def simhash_signatures(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
+def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(id, simhash) 64-bit token-level SimHash per document."""
     _session.ensure_shipped(docs.sparkSession)
     schema = T.StructType(
@@ -300,83 +283,58 @@ def simhash_signatures(docs: DataFrame, text_col: str = "text",
         for pdf in batches:
             rows = [
                 (int(i), kernel.simhash64(kernel.tokenize(t or "")))
-                for i, t in zip(pdf[id_col], pdf[text_col])
+                for i, t in zip(pdf["doc_id"], pdf["text"])
             ]
             yield pd.DataFrame(rows, columns=["id", "simhash"])
 
-    return docs.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
 def simhash_near_dup_pairs(docs: DataFrame, max_hamming: int = 3,
-                           max_bucket: int = 64, **kw) -> DataFrame:
+                           max_bucket: int = 64) -> DataFrame:
     """SimHash near-dup pairs: block on 16-bit prefix bands (a pair within
     hamming distance d ≤ 3 of a 64-bit hash agrees exactly on at least one of
     4 16-bit bands — pigeonhole), verify exact hamming distance JVM-side.
 
-    `max_bucket` bounds band-bucket sizes exactly like the MinHash path:
-    boilerplate-heavy corpora collapse millions of docs into one band_val and
-    the self-join goes quadratic without it. Oversized buckets are dropped —
-    their members are exact/near-identical boilerplate that the exact-dedup
-    pass catches by hash."""
-    sig = simhash_signatures(docs, **kw)
-    bands = []
-    for bi in range(4):
-        bands.append(
-            sig.select(
-                "id",
-                "simhash",
-                F.lit(bi).alias("band_id"),
-                F.shiftrightunsigned(F.col("simhash"), bi * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("band_val"),
-            )
+    Oversized band buckets are dropped — their members are
+    exact/near-identical boilerplate that the exact-dedup pass catches by
+    hash."""
+    # checkpoint: the signatures feed the bands AND both hash lookups
+    sig = simhash_signatures(docs).localCheckpoint(eager=True)
+    bands = [
+        sig.select(
+            "id",
+            F.lit(bi).alias("band_id"),
+            F.shiftrightunsigned(F.col("simhash"), bi * 16)
+            .bitwiseAND(F.lit(0xFFFF))
+            .alias("band_val"),
         )
-    b = bands[0]
-    for x in bands[1:]:
-        b = b.union(x)
-    b = b.localCheckpoint(eager=True)  # feeds sizes AND both join sides
-    sizes = b.groupBy("band_id", "band_val").agg(F.count("*").alias("n"))
-    b = b.join(
-        sizes.filter(F.col("n") <= max_bucket).select("band_id", "band_val"),
-        ["band_id", "band_val"],
-    )
-    l, r = b.alias("l"), b.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.band_val") == F.col("r.band_val"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("a"),
-            F.col("r.id").alias("b"),
-            F.col("l.simhash").alias("ha"),
-            F.col("r.simhash").alias("hb"),
-        )
-        .distinct()
+        for bi in range(4)
+    ]
+    pairs, _ = _bucket_pairs(
+        reduce(DataFrame.union, bands), ["band_id", "band_val"], max_bucket
     )
     return (
-        cand.withColumn(
-            "hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-        )
+        pairs.distinct()
+        .join(sig.select(F.col("id").alias("a"), F.col("simhash").alias("ha")),
+              "a")
+        .join(sig.select(F.col("id").alias("b"), F.col("simhash").alias("hb")),
+              "b")
+        .withColumn("hamming",
+                    F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
         .filter(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
     )
 
 
-def char_jaccard_pairs(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       block_col: str = "n_chars",
-                       threshold: float = 0.5) -> DataFrame:
-    """Character-set Jaccard similarity pairs within equal-`block_col` blocks
+def char_jaccard_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Character-set Jaccard similarity pairs within equal-`n_chars` blocks
     (bounded candidate set) — fully JVM-side (no Python), and expressible in
     ANSI SQL for the differential oracle."""
-    chars = F.array_distinct(F.split(F.col(text_col), ""))
     d = docs.select(
-        F.col(id_col).alias("id"),
-        F.col(block_col).alias("blk"),
-        chars.alias("chars"),
+        F.col("doc_id").alias("id"),
+        F.col("n_chars").alias("blk"),
+        F.array_distinct(F.split(F.col("text"), "")).alias("chars"),
     )
     l, r = d.alias("l"), d.alias("r")
     inter = F.size(F.array_intersect(F.col("l.chars"), F.col("r.chars")))
@@ -396,70 +354,33 @@ def char_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     )
 
 
-def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             n_tables: int = 12, n_planes: int = 8,
-                             seed: int = 1234,
-                             max_bucket: int = 1024) -> DataFrame:
+def embedding_near_dup_pairs(embeddings: DataFrame,
+                             threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b, cosine) — the
     semantic-dedup family: random-hyperplane LSH blocking (the same
-    signature machinery as `simsearch.ann_topk`) bounds the candidate set,
-    then the exact cosine is verified JVM-side (zip_with/aggregate dot —
-    no Python in the verify). A pair colliding in ANY of the `n_tables`
-    bands becomes a candidate; `max_bucket` caps bucket fan-out exactly like
-    the MinHash path (embedding-space boilerplate — near-zero or templated
-    vectors — is the skew risk). Recall for a true pair at cosine s is
-    1-(1-p^b)^L with p = 1 - arccos(s)/π: at the defaults and s=0.95,
-    p ≈ 0.899, p^8 ≈ 0.426, recall ≈ 1-(1-0.426)^12 ≈ 0.9987."""
+    signature machinery as `simsearch.ann_topk`, `EMB_PLANES` bits per
+    table) bounds the candidate set, then the exact cosine is verified
+    JVM-side (`simsearch.dot` — no Python in the verify). A pair colliding
+    in ANY of the `simsearch.N_TABLES` tables becomes a candidate;
+    `EMB_MAX_BUCKET` caps bucket fan-out (embedding-space boilerplate —
+    near-zero or templated vectors — is the skew risk). Recall for a true
+    pair at cosine s is 1-(1-p^b)^L with p = 1 - arccos(s)/π: with b=8,
+    L=12 and s=0.95, p ≈ 0.899, p^8 ≈ 0.426, recall ≈ 1-(1-0.426)^12 ≈
+    0.9987."""
     from . import simsearch
 
-    sig = (
-        simsearch.hyperplane_signatures(
-            embeddings.select(id_col, vec_col), n_tables, n_planes,
-            id_col, vec_col, seed,
-        )
-        .localCheckpoint(eager=True)  # feeds sizes AND both join sides
-    )
-    sizes = sig.groupBy("table", "bucket").agg(F.count("*").alias("n"))
-    ok = sig.join(
-        sizes.filter(F.col("n") <= max_bucket).select("table", "bucket"),
-        ["table", "bucket"],
-    )
-    l, r = ok.alias("l"), ok.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.table") == F.col("r.table"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
-        .distinct()
-    )
-    vecs = embeddings.select(
-        F.col(id_col).alias("a"), F.col(vec_col).cast("array<double>").alias("va")
-    )
-    cand = cand.join(vecs, "a").join(
-        embeddings.select(
-            F.col(id_col).alias("b"),
-            F.col(vec_col).cast("array<double>").alias("vb"),
-        ),
-        "b",
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-    def _n(c):
-        return F.sqrt(
-            F.aggregate(F.col(c), F.lit(0.0), lambda acc, x: acc + x * x)
-        )
-
+    sig = simsearch.hyperplane_signatures(embeddings, EMB_PLANES)
+    pairs, _ = _bucket_pairs(sig, ["table", "bucket"], EMB_MAX_BUCKET)
+    vec = F.col("embedding").cast("array<double>")
+    va, vb = F.col("va"), F.col("vb")
     return (
-        cand.withColumn("cosine", dot / (_n("va") * _n("vb")))
+        pairs.distinct()
+        .join(embeddings.select(F.col("vec_id").alias("a"), vec.alias("va")),
+              "a")
+        .join(embeddings.select(F.col("vec_id").alias("b"), vec.alias("vb")),
+              "b")
+        .withColumn("cosine", simsearch.dot(va, vb)
+                    / (simsearch.norm(va) * simsearch.norm(vb)))
         .filter(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
     )

@@ -23,6 +23,8 @@ from pyspark.sql import types as T
 
 from .. import session as _session
 
+MEDIA_SEED = 42  # synth_media's payload hash seed (the q15 golden's too)
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -44,7 +46,7 @@ FEATURES_SCHEMA = T.StructType(
 )
 
 
-def synth_media(spark: SparkSession, n: int, seed: int = 42,
+def synth_media(spark: SparkSession, n: int,
                 kind: str | None = None) -> DataFrame:
     """Deterministic opaque-binary media table for plumbing tests.
 
@@ -67,7 +69,7 @@ def synth_media(spark: SparkSession, n: int, seed: int = 42,
             for i in pdf["id"]:
                 i = int(i)
                 payload = hashlib.blake2b(
-                    f"{seed}:{i}".encode(), digest_size=32
+                    f"{MEDIA_SEED}:{i}".encode(), digest_size=32
                 ).digest() * (4 + i % 7)
                 kind = ("image", "audio", "video")[i % 3]
                 rows.append(
@@ -266,13 +268,12 @@ def _synth_real_table(spark: SparkSession, n: int, payload_fn,
     return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
 
-def synth_real_media(spark: SparkSession, n: int,
-                     id_offset: int = 1000) -> DataFrame:
+def synth_real_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic REAL-format media table (synth_real_payload BMP/PNG/
     JPEG/GIF/WebP round-robin) — the fake=False counterpart of
     `synth_media`, so externally-checked artifacts exercise the native
-    decoders, not just the synthetic stand-in."""
-    return _synth_real_table(spark, n, synth_real_payload, "image", id_offset)
+    decoders, not just the synthetic stand-in. Ids start at 1000."""
+    return _synth_real_table(spark, n, synth_real_payload, "image", 1000)
 
 
 def _check_payload_size(payload: bytes, max_payload_bytes: int) -> None:
@@ -873,35 +874,17 @@ def synth_real_audio_payload(i: int) -> tuple[bytes, str]:
     return b"fLaC" + bytes([0x80]) + len(body).to_bytes(3, "big") + body, "flac"
 
 
-def synth_real_audio(spark: SparkSession, n: int,
-                     id_offset: int = 2000) -> DataFrame:
+def synth_real_audio(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic REAL-format audio table (synth_real_audio_payload
-    WAV/MP3/FLAC bytes) — the audio counterpart of `synth_real_media`."""
-    return _synth_real_table(
-        spark, n, synth_real_audio_payload, "audio", id_offset
-    )
+    WAV/MP3/FLAC bytes) — the audio counterpart of `synth_real_media`.
+    Ids start at 2000."""
+    return _synth_real_table(spark, n, synth_real_audio_payload, "audio", 2000)
 
 
 def extract_audio_features(media: DataFrame,
                            fake: bool = True) -> DataFrame:
-    """media → per-item decoded audio features (Arrow-batched mapInPandas;
-    same batch shape as `extract_features`)."""
-    _session.ensure_shipped(media.sparkSession)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                b = bytes(payload) if payload is not None else b""
-                rate, ch, dur, rms = decode_audio(b, fake=fake)
-                rows.append((int(mid), kind, rate, ch, dur, rms, len(b)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA]
-            )
-
-    return media.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    """media → per-item decoded audio features (`decode_audio`)."""
+    return _extract(media, decode_audio, AUDIO_FEATURES_SCHEMA, fake)
 
 
 VIDEO_FEATURES_SCHEMA = T.StructType(
@@ -1055,39 +1038,29 @@ def synth_real_video_payload(i: int) -> tuple[bytes, str]:
     ), "mp4"
 
 
-def synth_real_video(spark: SparkSession, n: int,
-                     id_offset: int = 3000) -> DataFrame:
+def synth_real_video(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic REAL-format video table (synth_real_video_payload
-    MP4 bytes) — the video counterpart of `synth_real_media`."""
-    return _synth_real_table(
-        spark, n, synth_real_video_payload, "video", id_offset
-    )
+    MP4 bytes) — the video counterpart of `synth_real_media`. Ids start at
+    3000."""
+    return _synth_real_table(spark, n, synth_real_video_payload, "video", 3000)
 
 
 def extract_video_features(media: DataFrame,
                            fake: bool = True) -> DataFrame:
-    """media → per-item video container metadata (Arrow-batched
-    mapInPandas; same batch shape as `extract_features`)."""
-    _session.ensure_shipped(media.sparkSession)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                b = bytes(payload) if payload is not None else b""
-                w, h, dur = decode_video(b, fake=fake)
-                rows.append((int(mid), kind, w, h, dur, len(b)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FEATURES_SCHEMA]
-            )
-
-    return media.mapInPandas(run, schema=VIDEO_FEATURES_SCHEMA)
+    """media → per-item video container metadata (`decode_video`)."""
+    return _extract(media, decode_video, VIDEO_FEATURES_SCHEMA, fake)
 
 
 def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """media → per-item decoded features (Arrow-batched; decode stubbed)."""
+    """media → per-item decoded image features (`decode_image`)."""
+    return _extract(media, decode_image, FEATURES_SCHEMA, fake)
+
+
+def _extract(media: DataFrame, decode, schema: T.StructType,
+             fake: bool) -> DataFrame:
+    """The per-row Arrow loop behind the three extract_* operators: one
+    output row (media_id, kind, *decode(payload), n_bytes) per media row,
+    a NULL payload decoding as empty bytes."""
     _session.ensure_shipped(media.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1097,11 +1070,10 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
                 pdf["media_id"], pdf["kind"], pdf["payload"]
             ):
                 b = bytes(payload) if payload is not None else b""
-                w, h, luma = decode_image(b, fake=fake)
-                rows.append((int(mid), kind, w, h, luma, len(b)))
-            yield pd.DataFrame(rows, columns=[f.name for f in FEATURES_SCHEMA])
+                rows.append((int(mid), kind, *decode(b, fake=fake), len(b)))
+            yield pd.DataFrame(rows, columns=schema.fieldNames())
 
-    return media.mapInPandas(run, schema=FEATURES_SCHEMA)
+    return media.mapInPandas(run, schema=schema)
 
 
 def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:

@@ -8,6 +8,10 @@
 * IVF-style variant — coarse centroids via deterministic seeding, probe the
   nearest `nprobe` lists.
 
+Every operator reads the embeddings table's (vec_id, embedding) columns.
+The random planes and centroids are seeded by module constants, so an
+index built once matches every later probe.
+
 All scoring math is double-precision and sequential-order stable so the
 DuckDB differential oracle can reproduce values bit-for-bit.
 """
@@ -18,62 +22,71 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import session as _session
 
+N_TABLES = 12      # LSH tables per signature
+ANN_PLANES = 6     # bits per table in ann_topk's index
+LSH_SEED = 1234
+IVF_SEED = 4321
 
-def _dot(vec_col, qvec: list[float]):
-    """JVM-side double dot product of an array<float> column with a literal."""
-    q = F.array(*[F.lit(float(x)) for x in qvec])
+
+def lit_vector(v) -> Column:
+    """A literal array<double> column."""
+    return F.array(*[F.lit(float(x)) for x in v])
+
+
+def dot(x: Column, y: Column) -> Column:
+    """JVM-side dot product of two array<double> columns, summed in element
+    order in double precision."""
     return F.aggregate(
-        F.zip_with(
-            vec_col.cast("array<double>"), q, lambda a, b: a * b
-        ),
+        F.zip_with(x, y, lambda a, b: a * b),
         F.lit(0.0),
-        lambda acc, x: acc + x,
+        lambda acc, v: acc + v,
     )
 
 
-def _norm(vec_col):
-    return F.sqrt(
-        F.aggregate(
-            vec_col.cast("array<double>"),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
-    )
+def norm(x: Column) -> Column:
+    """JVM-side L2 norm of an array<double> column, in element order."""
+    return F.sqrt(F.aggregate(x, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
-                id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def _batch_matrix(pdf: pd.DataFrame) -> np.ndarray:
+    """An Arrow batch's embedding column as a float64 (rows × dim) matrix."""
+    return np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; a zero row stays zero."""
+    return m / np.clip(np.linalg.norm(m, axis=1, keepdims=True), 1e-12, None)
+
+
+def cosine_topk(embeddings: DataFrame, qvec: list[float],
+                k: int = 10) -> DataFrame:
     """Exact brute-force cosine top-k: (id, score) ordered desc, id-tiebreak.
 
     Compiles to one scan + TakeOrderedAndProject (no full sort, no shuffle of
     the score column beyond the k-row reduction)."""
     qn = float(np.sqrt(np.sum(np.asarray(qvec, dtype=np.float64) ** 2)))
-    score = _dot(F.col(vec_col), qvec) / (_norm(F.col(vec_col)) * F.lit(qn))
+    vec = F.col("embedding").cast("array<double>")
+    score = dot(vec, lit_vector(qvec)) / (norm(vec) * F.lit(qn))
     return (
-        embeddings.select(F.col(id_col).alias("id"), score.alias("score"))
+        embeddings.select(F.col("vec_id").alias("id"), score.alias("score"))
         .orderBy(F.desc("score"), F.asc("id"))
         .limit(k)
     )
 
 
-def _lsh_planes(dim: int, n_tables: int, n_planes: int,
-                seed: int) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((n_tables, dim, n_planes))
+def _lsh_planes(dim: int, n_planes: int) -> np.ndarray:
+    rng = np.random.RandomState(LSH_SEED)
+    return rng.standard_normal((N_TABLES, dim, n_planes))
 
 
-def hyperplane_signatures(embeddings: DataFrame, n_tables: int = 12,
-                          n_planes: int = 6,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          seed: int = 1234) -> DataFrame:
+def hyperplane_signatures(embeddings: DataFrame,
+                          n_planes: int = ANN_PLANES) -> DataFrame:
     """(id, table, bucket) multi-table random-hyperplane LSH signatures —
     L independent tables of b bits each (standard recall amplification:
     P(candidate) = 1-(1-p^b)^L for per-plane agreement p)."""
@@ -93,13 +106,11 @@ def hyperplane_signatures(embeddings: DataFrame, n_tables: int = 12,
             if len(pdf) == 0:
                 continue
             if planes is None:
-                planes = _lsh_planes(
-                    len(pdf[vec_col].iloc[0]), n_tables, n_planes, seed
-                )
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].astype(np.int64).to_numpy()
+                planes = _lsh_planes(len(pdf["embedding"].iloc[0]), n_planes)
+            mat = _batch_matrix(pdf)
+            ids = pdf["vec_id"].astype(np.int64).to_numpy()
             frames = []
-            for t in range(n_tables):
+            for t in range(N_TABLES):
                 buckets = ((mat @ planes[t]) > 0).dot(pows).astype(np.int32)
                 frames.append(
                     pd.DataFrame(
@@ -108,33 +119,32 @@ def hyperplane_signatures(embeddings: DataFrame, n_tables: int = 12,
                 )
             yield pd.concat(frames, ignore_index=True)
 
-    return embeddings.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    return embeddings.select("vec_id", "embedding").mapInPandas(
+        run, schema=schema
+    )
 
 
 def ann_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
-             n_tables: int = 12, n_planes: int = 6,
-             id_col: str = "vec_id",
-             vec_col: str = "embedding", seed: int = 1234,
              probe_hamming: int = 1,
              signatures: DataFrame | None = None) -> DataFrame:
     """Multi-table LSH approximate top-k: score only vectors that share a
     bucket (within `probe_hamming` bits) with the query in ANY table.
 
     `signatures`: a precomputed (id, table, bucket) table from
-    `hyperplane_signatures` (same n_tables/n_planes/seed — caller's
-    contract). The signature table is the ANN *index*: at corpus scale it is
+    `hyperplane_signatures` at its default `n_planes` (caller's contract).
+    The signature table is the ANN *index*: at corpus scale it is
     materialized once and probed by every query; recomputing it per query
     re-hashes the whole corpus (the round-2 scale flag). Compute-if-absent
     keeps the single-query call self-contained."""
     q = np.asarray(qvec, dtype=np.float64)
-    planes = _lsh_planes(len(q), n_tables, n_planes, seed)
-    pows = 1 << np.arange(n_planes)
+    planes = _lsh_planes(len(q), ANN_PLANES)
+    pows = 1 << np.arange(ANN_PLANES)
     probe_rows = []
-    for t in range(n_tables):
+    for t in range(N_TABLES):
         qb = int(((q @ planes[t]) > 0).dot(pows))
         buckets = {qb}
         if probe_hamming >= 1:
-            for i in range(n_planes):
+            for i in range(ANN_PLANES):
                 buckets.add(qb ^ (1 << i))
         for b in buckets:
             probe_rows.append((t, b))
@@ -143,18 +153,17 @@ def ann_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
         spark.createDataFrame(probe_rows, "table int, bucket int")
     )
     sig = signatures if signatures is not None else hyperplane_signatures(
-        embeddings, n_tables, n_planes, id_col, vec_col, seed
+        embeddings
     )
     cand_ids = sig.join(probes, ["table", "bucket"]).select("id").distinct()
     cand = embeddings.join(
-        cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
+        cand_ids.withColumnRenamed("id", "vec_id"), "vec_id", "left_semi"
     )
-    return cosine_topk(cand, qvec, k, id_col, vec_col)
+    return cosine_topk(cand, qvec, k)
 
 
 def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
-                              k: int = 5, id_col: str = "vec_id",
-                              vec_col: str = "embedding",
+                              k: int = 5,
                               max_queries: int = 100_000) -> DataFrame:
     """The map side of the batch k-NN join: per PARTITION, the exact top-k
     corpus neighbors of every query — (query_id, id, score), at most Q×k
@@ -176,7 +185,9 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
     genuinely large probe side, block-partition the queries and union
     per-block joins, or use the LSH/IVF index paths."""
     _session.ensure_shipped(embeddings.sparkSession)
-    qrows = queries.select(id_col, vec_col).limit(max_queries + 1).collect()
+    qrows = (
+        queries.select("vec_id", "embedding").limit(max_queries + 1).collect()
+    )
     if len(qrows) > max_queries:
         raise ValueError(
             f"the kNN probe (queries) side exceeds max_queries="
@@ -204,12 +215,9 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.clip(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12, None
-            )
+            mat = _unit_rows(_batch_matrix(pdf))
             scores = qm @ mat.T  # (Q, B)
-            vids = pdf[id_col].to_numpy().astype(np.int64)
+            vids = pdf["vec_id"].to_numpy().astype(np.int64)
             b = scores.shape[1]
             if k < b:
                 # k-th largest score per query; keep every entry reaching it
@@ -232,13 +240,13 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
             )
             yield allc.groupby("query_id", sort=False).head(k)
 
-    return embeddings.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    return embeddings.select("vec_id", "embedding").mapInPandas(
+        run, schema=schema
+    )
 
 
 def pairwise_topk_join(embeddings: DataFrame, queries: DataFrame,
-                       k: int = 5, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       max_queries: int = 100_000) -> DataFrame:
+                       k: int = 5, max_queries: int = 100_000) -> DataFrame:
     """Batch k-NN join: for every query vector, the top-k corpus neighbors.
 
     Arrow-batched matrix multiply per partition against a broadcast query
@@ -246,9 +254,7 @@ def pairwise_topk_join(embeddings: DataFrame, queries: DataFrame,
     'probe table' shape). The map side pre-reduces to ≤ Q×k rows per
     partition (`scored_topk_per_partition`); the window is the final
     exact reduce over Q×k×partitions rows, not Q×N."""
-    scored = scored_topk_per_partition(
-        embeddings, queries, k, id_col, vec_col, max_queries
-    )
+    scored = scored_topk_per_partition(embeddings, queries, k, max_queries)
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))
@@ -258,16 +264,14 @@ def pairwise_topk_join(embeddings: DataFrame, queries: DataFrame,
     )
 
 
-def _seeded_centroids(dim: int, n_lists: int, seed: int) -> np.ndarray:
-    rng = np.random.RandomState(seed)
+def _seeded_centroids(dim: int, n_lists: int) -> np.ndarray:
+    rng = np.random.RandomState(IVF_SEED)
     cents = rng.standard_normal((n_lists, dim))
     return cents / np.linalg.norm(cents, axis=1, keepdims=True)
 
 
 def ivf_train_centroids(embeddings: DataFrame, n_lists: int = 64,
-                        train_iters: int = 1,
-                        id_col: str = "vec_id", vec_col: str = "embedding",
-                        seed: int = 4321) -> np.ndarray:
+                        train_iters: int = 1) -> np.ndarray:
     """Spherical-k-means-trained IVF centroids: `train_iters` distributed
     Lloyd iterations seeded from the deterministic codebook. Each iteration
     is one pass — executors assign their partition's (normalized) vectors to
@@ -278,10 +282,10 @@ def ivf_train_centroids(embeddings: DataFrame, n_lists: int = 64,
     returned (n_lists × dim) array is driver-small by construction and
     plugs into ivf_assign/ivf_topk via their `centroids` parameter."""
     _session.ensure_shipped(embeddings.sparkSession)
-    first = embeddings.select(vec_col).first()
+    first = embeddings.select("embedding").first()
     if first is None:
         raise ValueError("cannot train IVF centroids on an empty corpus")
-    cents = _seeded_centroids(len(first[0]), n_lists, seed)
+    cents = _seeded_centroids(len(first[0]), n_lists)
     sc = embeddings.sparkSession.sparkContext
     schema = T.StructType(
         [
@@ -300,10 +304,7 @@ def ivf_train_centroids(embeddings: DataFrame, n_lists: int = 64,
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                mat = mat / np.clip(
-                    np.linalg.norm(mat, axis=1, keepdims=True), 1e-12, None
-                )
+                mat = _unit_rows(_batch_matrix(pdf))
                 lists = np.argmax(mat @ c.T, axis=1)
                 np.add.at(sums, lists, mat)
                 np.add.at(counts, lists, 1)
@@ -317,7 +318,9 @@ def ivf_train_centroids(embeddings: DataFrame, n_lists: int = 64,
             )
 
         partials = (
-            embeddings.select(vec_col).mapInPandas(run, schema=schema).collect()
+            embeddings.select("embedding")
+            .mapInPandas(run, schema=schema)
+            .collect()
         )
         new = cents.copy()
         tot_n = np.zeros(len(cents), dtype=np.int64)
@@ -327,17 +330,13 @@ def ivf_train_centroids(embeddings: DataFrame, n_lists: int = 64,
             tot_s[r.list_id] += np.asarray(r.sums)
         nz = tot_n > 0
         means = tot_s[nz] / tot_n[nz, None]
-        new[nz] = means / np.clip(
-            np.linalg.norm(means, axis=1, keepdims=True), 1e-12, None
-        )
+        new[nz] = _unit_rows(means)
         cents = new
         bc.destroy()
     return cents
 
 
 def ivf_assign(embeddings: DataFrame, n_lists: int = 64,
-               id_col: str = "vec_id", vec_col: str = "embedding",
-               seed: int = 4321,
                centroids: np.ndarray | None = None) -> DataFrame:
     """IVF coarse assignment: (id, list_id) — each vector joins the list of
     its nearest coarse centroid. Default centroids are deterministic seeded
@@ -366,25 +365,21 @@ def ivf_assign(embeddings: DataFrame, n_lists: int = 64,
             if len(pdf) == 0:
                 continue
             if cents is None:
-                cents = _seeded_centroids(
-                    len(pdf[vec_col].iloc[0]), n_lists, seed
-                )
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            mat = mat / np.clip(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12, None
-            )
+                dim = len(pdf["embedding"].iloc[0])
+                cents = _seeded_centroids(dim, n_lists)
+            mat = _unit_rows(_batch_matrix(pdf))
             lists = np.argmax(mat @ cents.T, axis=1).astype(np.int32)
             yield pd.DataFrame(
-                {"id": pdf[id_col].astype("int64"), "list_id": lists}
+                {"id": pdf["vec_id"].astype("int64"), "list_id": lists}
             )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    return embeddings.select("vec_id", "embedding").mapInPandas(
+        run, schema=schema
+    )
 
 
 def ivf_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
              n_lists: int = 64, nprobe: int = 8,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             seed: int = 4321,
              assignments: DataFrame | None = None,
              centroids: np.ndarray | None = None) -> DataFrame:
     """IVF approximate top-k: score only vectors whose coarse list is among
@@ -398,7 +393,7 @@ def ivf_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
     cents = (
         np.asarray(centroids, dtype=np.float64)
         if centroids is not None
-        else _seeded_centroids(len(q), n_lists, seed)
+        else _seeded_centroids(len(q), n_lists)
     )
     probe_lists = [
         int(i) for i in np.argsort(-(cents @ q), kind="stable")[:nprobe]
@@ -408,10 +403,10 @@ def ivf_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
         spark.createDataFrame([(i,) for i in probe_lists], "list_id int")
     )
     assign = assignments if assignments is not None else ivf_assign(
-        embeddings, n_lists, id_col, vec_col, seed, centroids=centroids
+        embeddings, n_lists, centroids
     )
     cand_ids = assign.join(probes, "list_id").select("id")
     cand = embeddings.join(
-        cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
+        cand_ids.withColumnRenamed("id", "vec_id"), "vec_id", "left_semi"
     )
-    return cosine_topk(cand, qvec, k, id_col, vec_col)
+    return cosine_topk(cand, qvec, k)

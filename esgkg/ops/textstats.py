@@ -1,7 +1,10 @@
-"""Text analysis operators: token counting, quality scoring, language-ID,
-document fingerprinting, token frequency. All hot-path math is JVM-side
-(built-in functions, whole-stage codegen); only the blake2b fingerprint and
-BPE-ish tokenization drop to Arrow-batched pandas UDFs.
+"""Text analysis operators over the documents table (doc_id, text): token
+counting, quality scoring, language-ID, document fingerprinting, token
+frequency. All hot-path math is JVM-side (built-in functions, whole-stage
+codegen); only the blake2b fingerprint drops to an Arrow-batched pandas UDF.
+
+`token_stats` and `token_frequency` tokenize as the q06/q08/q21 oracles
+do: split on single spaces and drop the empty tokens.
 """
 
 from __future__ import annotations
@@ -17,16 +20,17 @@ from .. import session as _session
 
 # A BPE-ish word/punct splitter (GPT-2-style coarse classes, no external lib).
 BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
+STOPWORDS = ("the", "a", "and", "of", "to", "in", "is")
 
 
-def token_stats(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
-    """(id, n_ws_tokens, n_bpeish_tokens, n_chars_calc) — whitespace and
+def token_stats(docs: DataFrame) -> DataFrame:
+    """(id, n_ws_tokens, n_bpeish_tokens, n_chars_calc) — space-split and
     regex token counts, all JVM-side."""
-    c = F.col(text_col)
+    c = F.col("text")
+    toks = F.filter(F.split(c, " "), lambda t: t != "")
     return docs.select(
-        F.col(id_col).alias("id"),
-        F.size(F.split(F.trim(c), r"\s+")).alias("n_ws_tokens"),
+        F.col("doc_id").alias("id"),
+        F.size(toks).alias("n_ws_tokens"),
         F.size(F.regexp_extract_all(c, F.lit(BPE_ISH), F.lit(0))).alias(
             "n_bpeish_tokens"
         ),
@@ -34,23 +38,21 @@ def token_stats(docs: DataFrame, text_col: str = "text",
     )
 
 
-def quality_scores(docs: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   stopwords: tuple[str, ...] = (
-                       "the", "a", "and", "of", "to", "in", "is",
-                   )) -> DataFrame:
+def quality_scores(docs: DataFrame) -> DataFrame:
     """(id, n_tokens, mean_token_len, punct_ratio, stopword_ratio,
     quality_score) — length/punct/stopword heuristics over one pass."""
-    c = F.col(text_col)
-    toks = F.split(F.trim(c), r"\s+")
+    c = F.col("text")
+    toks = F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != "")
     n_tok = F.size(toks)
     n_punct = F.length(c) - F.length(
         F.regexp_replace(c, r"[^\w\s]", "")
     )
     n_stop = F.size(
-        F.filter(toks, lambda t: t.isin(*[F.lit(s) for s in stopwords]))
+        F.filter(toks, lambda t: t.isin(*[F.lit(s) for s in STOPWORDS]))
     )
-    mean_len = (F.length(F.regexp_replace(c, r"\s+", "")) / n_tok)
+    mean_len = (
+        F.length(F.regexp_replace(c, r"\s+", "")) / F.greatest(n_tok, F.lit(1))
+    )
     punct_ratio = n_punct / F.greatest(F.length(c), F.lit(1))
     stop_ratio = n_stop / F.greatest(n_tok, F.lit(1))
     quality = (
@@ -60,7 +62,7 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
         - F.when(n_tok < 5, 0.25).otherwise(0.0)
     )
     return docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         n_tok.alias("n_tokens"),
         F.round(mean_len, 6).alias("mean_token_len"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
@@ -69,32 +71,30 @@ def quality_scores(docs: DataFrame, text_col: str = "text",
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """(id, lang_pred) — deterministic char-class heuristic: the dominant
     script among latin / cjk / kana decides; digits & punct are neutral.
     (n-gram model slot; the heuristic is the sandbox-deterministic stand-in)."""
-    c = F.col(text_col)
+    c = F.col("text")
     latin = F.length(F.regexp_replace(c, r"[^A-Za-z]", ""))
     kana = F.length(F.regexp_replace(c, r"[^ぁ-んァ-ヶー]", ""))
     cjk = F.length(F.regexp_replace(c, r"[^一-龯]", ""))
     return docs.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.when((kana + cjk) > latin, F.lit("ja"))
         .otherwise(F.lit("latin"))
         .alias("lang_pred"),
     )
 
 
-def fingerprints(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """(id, md5_fp, blake_fp) — md5 (JVM, oracle-reproducible) and 64-bit
     blake2b (kernel) content fingerprints."""
     _session.ensure_shipped(docs.sparkSession)
     with_md5 = docs.select(
-        F.col(id_col).alias("id"),
-        F.md5(F.col(text_col)).alias("md5_fp"),
-        F.col(text_col).alias("_t"),
+        F.col("doc_id").alias("id"),
+        F.md5(F.col("text")).alias("md5_fp"),
+        F.col("text").alias("_t"),
     )
     schema = T.StructType(
         [
@@ -115,14 +115,13 @@ def fingerprints(docs: DataFrame, text_col: str = "text",
     return with_md5.mapInPandas(run, schema=schema)
 
 
-def token_frequency(docs: DataFrame, text_col: str = "text",
-                    top_n: int | None = None) -> DataFrame:
+def token_frequency(docs: DataFrame, top_n: int | None = None) -> DataFrame:
     """(token, freq) global token frequency — F4/A4: explode + hash agg
     (map-side partial agg comes free); optional deterministic top-N via
     orderBy+limit (TakeOrderedAndProject — never a single-partition window)."""
     tok = (
         docs.select(
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token")
+            F.explode(F.split(F.col("text"), " ")).alias("token")
         )
         .filter(F.col("token") != "")
         .groupBy("token")
@@ -133,13 +132,13 @@ def token_frequency(docs: DataFrame, text_col: str = "text",
     return tok
 
 
-def top_third_keywords(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def top_third_keywords(docs: DataFrame) -> DataFrame:
     """The reference's keyword extraction (metrics.py:273-280): top ⌊V/3⌋
     tokens by frequency, count-then-lexicographic order. Two passes over one
     cached frequency table (count V, then take top ⌊V/3⌋)."""
     # eager localCheckpoint, not persist(): released by the ContextCleaner
     # once the result is unreachable (a never-unpersisted cache accumulates
     # executor storage across repeated calls in a long-lived session)
-    freq = token_frequency(docs, text_col).localCheckpoint(eager=True)
+    freq = token_frequency(docs).localCheckpoint(eager=True)
     total = freq.count()
     return freq.orderBy(F.desc("freq"), F.asc("token")).limit(total // 3)

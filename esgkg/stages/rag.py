@@ -15,11 +15,11 @@ top-k-small by construction).
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import kernel
+from ..ops import simsearch
 from . import graph as graph_stage
 
 # reference defaults: graph_rag.py:96-127
@@ -36,12 +36,9 @@ def score_nodes(nodes: DataFrame, embeddings: DataFrame, query: str,
     vs the query embedding (J8 + J6). Embeddings are L2-normalized so cosine
     is a dot product; the query vector is a broadcast literal."""
     weights = category_weights or DEFAULT_CATEGORY_WEIGHTS
-    qvec = kernel.hash_embed(query)
-    q = F.array(*[F.lit(float(x)) for x in qvec])
-    dot = F.aggregate(
-        F.zip_with(F.col("vec").cast("array<double>"), q, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    dot = simsearch.dot(
+        F.col("vec").cast("array<double>"),
+        simsearch.lit_vector(kernel.hash_embed(query)),
     )
     wexpr = F.lit(1.0)
     for cat, w in weights.items():

@@ -177,9 +177,13 @@ def test_knn_join_self_nearest(spark):
 
 
 def test_textstats(spark):
+    import hashlib
+
+    from esgkg import kernel
+
+    texts = {0: "Hello world, this is the test!", 1: "気候変動は重要です"}
     docs = spark.createDataFrame(
-        [(0, "Hello world, this is the test!"), (1, "気候変動は重要です")],
-        "doc_id long, text string",
+        sorted(texts.items()), "doc_id long, text string"
     )
     ts = {r.id: r for r in textstats.token_stats(docs).collect()}
     assert ts[0].n_ws_tokens == 6
@@ -187,8 +191,24 @@ def test_textstats(spark):
     assert li == {0: "latin", 1: "ja"}
     fp = {r.id: r for r in textstats.fingerprints(docs).collect()}
     assert fp[0].md5_fp != fp[1].md5_fp
+    for i, t in texts.items():
+        assert fp[i].md5_fp == hashlib.md5(t.encode()).hexdigest()
+        assert fp[i].blake_fp == kernel.fingerprint64(t)
     q = {r.id: r for r in textstats.quality_scores(docs).collect()}
     assert 0 <= q[0].punct_ratio < 0.2
+
+
+def test_textstats_empty_text_has_no_tokens(spark):
+    """Empty and whitespace-only texts hold zero tokens: splitting "" or a
+    trimmed "   " yields [""], which must not count as one token."""
+    docs = spark.createDataFrame(
+        [(0, ""), (1, "   "), (2, " two  words ")], "doc_id long, text string"
+    )
+    ts = {r.id: r.n_ws_tokens for r in textstats.token_stats(docs).collect()}
+    assert ts == {0: 0, 1: 0, 2: 2}
+    q = {r.id: r for r in textstats.quality_scores(docs).collect()}
+    assert {i: q[i].n_tokens for i in q} == {0: 0, 1: 0, 2: 2}
+    assert q[0].mean_token_len == 0.0 and q[2].mean_token_len == 4.0
 
 
 def test_multimodal_plumbing(spark):

@@ -168,6 +168,20 @@ def test_simhash_bucket_cap_bounds_blowup(spark):
     }
 
 
+def test_simhash_bucket_cap_boundary(spark):
+    """max_bucket is inclusive: 64 identical docs fill each band bucket to
+    exactly the cap and all C(64, 2) pairs survive; a 65th makes every
+    bucket oversized and no pair survives."""
+    text = "lorem ipsum dolor sit amet consectetur adipiscing elit"
+    for n, want in ((64, 64 * 63 // 2), (65, 0)):
+        docs = spark.createDataFrame(
+            [(i, text) for i in range(n)], "doc_id long, text string"
+        )
+        got = dedup.simhash_near_dup_pairs(docs, max_bucket=64).collect()
+        assert len(got) == want
+        assert all(r.hamming == 0 for r in got)
+
+
 def test_exact_dedup_hash_keys_match_text_grouping(spark):
     docs = spark.createDataFrame(
         [(1, "x"), (2, "x"), (3, "y"), (4, "z"), (5, "y"), (6, "x")],
