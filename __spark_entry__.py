@@ -215,9 +215,7 @@ def _q13_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = li.join(o, li.l_orderkey == o.o_orderkey).select(
         F.col("o_custkey").alias("cust"), F.col("l_partkey").alias("part")
     )
-    aa = complete.bipartite_adamic_adar(
-        edges, "cust", "part", min_shared=2, max_degree=1000
-    )
+    aa = complete.bipartite_adamic_adar(edges, "cust", "part")
     return (
         aa.orderBy(F.desc("common"), F.asc("a"), F.asc("b"))
         .limit(100)
@@ -487,8 +485,9 @@ def _q26_group_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q27_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gap-based sessionization over the events stream (30-min inactivity
     # boundary): lag window -> boundary flag -> running session index.
-    # The stateful-streaming analog is applyInPandasWithState; the batch
-    # semantics here are the oracle-checkable ground truth.
+    # The stateful-streaming analog is
+    # streaming.sessionize_stream_event_time; the batch semantics here are
+    # the oracle-checkable ground truth.
     from pyspark.sql import Window
 
     e = _t(spark, sf_dir, "events").withColumn(
@@ -557,8 +556,7 @@ def _q29_answer_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = d1.join(d2, "doc_id")
     out = metrics.answer_quality(
-        pairs, "generated", "reference", "doc_id",
-        context_concepts=_ANSWER_CONCEPTS,
+        pairs, "doc_id", context_concepts=_ANSWER_CONCEPTS
     )
     return out.select(
         F.col("id").alias("doc_id"), "concept_usage", "word_overlap",

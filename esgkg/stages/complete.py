@@ -12,7 +12,7 @@ over the materialized edge table:
     → row_number() ≤ k per source     -- T3 window top-k
 
 Scale notes: the self-join key is the shared neighbor z; hub vertices are the
-skew risk, so z-degree is capped (`max_degree`) — standard practice since a
+skew risk, so z-degree is capped (`MAX_DEGREE`) — standard practice since a
 z with degree d contributes d² candidate pairs while its 1/ln(d) weight is
 negligible. AQE skew-join covers residual imbalance.
 """
@@ -21,6 +21,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# hub cap of every Adamic-Adar scorer: a shared vertex of higher degree is
+# dropped (d² candidate pairs for a 1/ln(d) weight)
+MAX_DEGREE = 1000
+# neighbor/edge rows above which the triangle self-join stops broadcasting
+BROADCAST_THRESHOLD = 2_000_000
+# bipartite pairs need at least this many shared right-side neighbors
+MIN_SHARED = 2
+# relations per source of the U4 stand-in (the reference's top_k)
+INFER_TOP_K = 5
 
 
 def undirected(edges: DataFrame) -> DataFrame:
@@ -33,8 +43,7 @@ def undirected(edges: DataFrame) -> DataFrame:
 
 
 def adamic_adar(edges: DataFrame, top_k: int = 10,
-                max_degree: int = 1000,
-                broadcast_threshold: int = 2_000_000) -> DataFrame:
+                broadcast_threshold: int = BROADCAST_THRESHOLD) -> DataFrame:
     """(src, dst, common_neighbors, aa_score, prob, rank) — proposed links.
 
     Size-gated join strategy: below `broadcast_threshold` neighbor rows the
@@ -43,7 +52,7 @@ def adamic_adar(edges: DataFrame, top_k: int = 10,
     web-scale edge table is the whole graph, which must never be shipped to
     every executor — it runs as a repartitioned self-join on the shared
     vertex z with AQE skew-split handling the residual imbalance the
-    `max_degree` hub cap has already bounded."""
+    `MAX_DEGREE` hub cap has already bounded."""
     # und feeds the degree table, the neighbor lists AND the existing-edge
     # anti-join — checkpoint so the distinct shuffle runs once. Eager
     # localCheckpoint rather than persist(): checkpointed RDDs are released
@@ -55,7 +64,7 @@ def adamic_adar(edges: DataFrame, top_k: int = 10,
     # neighbor lists keyed by the shared vertex z
     nbrs = und.select(F.col("b").alias("z"), F.col("a").alias("n"))
     nbrs = nbrs.join(
-        F.broadcast(deg.filter(F.col("deg") <= max_degree)), "z"
+        F.broadcast(deg.filter(F.col("deg") <= MAX_DEGREE)), "z"
     )  # hub cap: drops negligible-weight, quadratic-cost hubs
     # round-robin repartition before the checkpoint: the neighbor table is
     # byte-small (AQE coalesces it to ~1 partition) but the pair self-join
@@ -97,8 +106,8 @@ def adamic_adar(edges: DataFrame, top_k: int = 10,
     )
 
 
-def predict_links(edges: DataFrame, source_id: int, top_k: int = 5,
-                  max_degree: int = 1000) -> list[tuple[int, float]]:
+def predict_links(edges: DataFrame, source_id: int,
+                  top_k: int = 5) -> list[tuple[int, float]]:
     """The recovered U3 contract
     (`ESGKnowledgeCompletion.predict_links(graph, source_node, top_k)`,
     call sites /root/reference/scripts/03_knowledge_completion.py:76-84,
@@ -121,7 +130,7 @@ def predict_links(edges: DataFrame, source_id: int, top_k: int = 5,
         und.select(F.col("b").alias("z"), F.col("a").alias("n"))
         .join(F.broadcast(n1), "z")  # z restricted to N1(source): small
         .join(
-            F.broadcast(deg.filter(F.col("deg") <= max_degree)), "z"
+            F.broadcast(deg.filter(F.col("deg") <= MAX_DEGREE)), "z"
         )
         .filter(F.col("n") != source_id)
         .filter(F.col("deg") >= 2)
@@ -162,17 +171,15 @@ def predict_links(edges: DataFrame, source_id: int, top_k: int = 5,
     return out[:top_k]
 
 
-def bipartite_adamic_adar(edges: DataFrame, left: str, right: str,
-                          min_shared: int = 2,
-                          max_degree: int = 1000,
-                          broadcast_threshold: int = 2_000_000) -> DataFrame:
+def bipartite_adamic_adar(edges: DataFrame, left: str,
+                          right: str) -> DataFrame:
     """Adamic-Adar over a bipartite edge list: score left-side pairs by their
     shared right-side neighbors, weight 1/ln(degree of shared neighbor).
-    Returns (a, b, common, aa_score) with a < b.
+    Returns (a, b, common, aa_score) with a < b and common ≥ MIN_SHARED.
 
     Same triangle-join shape as `adamic_adar`, reused for e.g. the
     customer–part co-purchase graph in the driver's differential checks.
-    `max_degree` caps the shared-neighbor degree, mirroring `adamic_adar`: a
+    `MAX_DEGREE` caps the shared-neighbor degree, mirroring `adamic_adar`: a
     right-side hub with degree d emits d² pairs while contributing a
     negligible 1/ln(d) weight — dropping hubs bounds the blowup (the round-1
     scale-killer on boilerplate-dense graphs).
@@ -190,8 +197,8 @@ def bipartite_adamic_adar(edges: DataFrame, left: str, right: str,
     )
     n_e = e.count()  # cheap: checkpointed; bounds the deg-table size
     deg = e.groupBy("p").agg(F.count("*").alias("deg_p"))
-    deg = deg.filter((F.col("deg_p") >= 2) & (F.col("deg_p") <= max_degree))
-    if n_e <= broadcast_threshold:
+    deg = deg.filter((F.col("deg_p") >= 2) & (F.col("deg_p") <= MAX_DEGREE))
+    if n_e <= BROADCAST_THRESHOLD:
         deg = F.broadcast(deg)
     par = edges.sparkSession.sparkContext.defaultParallelism
     ed = e.join(deg, "p").repartition(par, "p")
@@ -206,7 +213,7 @@ def bipartite_adamic_adar(edges: DataFrame, left: str, right: str,
     # spill is worth the sorts.
     r = (
         ed.hint("shuffle_hash").alias("r")
-        if n_e <= broadcast_threshold
+        if n_e <= BROADCAST_THRESHOLD
         else ed.alias("r")
     )
     return (
@@ -221,7 +228,7 @@ def bipartite_adamic_adar(edges: DataFrame, left: str, right: str,
             F.count("*").alias("common"),
             F.sum(1.0 / F.log(F.col("deg_p"))).alias("aa_score"),
         )
-        .filter(F.col("common") >= min_shared)
+        .filter(F.col("common") >= MIN_SHARED)
     )
 
 
@@ -277,11 +284,11 @@ def hits_mrr_map(predicted: DataFrame, gold: DataFrame, k: int = 10) -> DataFram
 # U4 — relation inference (deterministic stand-in for the reference's LLM)
 # ---------------------------------------------------------------------------
 
-def infer_relations(source: str, context: str | None = None,
-                    top_k: int = 5) -> list[dict]:
+def infer_relations(source: str, context: str | None = None) -> list[dict]:
     """U4 slot — the reference's ``infer_relations_with_llm`` contract
     (/root/reference/tests/test_knowledge_completion.py:9-21: a non-empty
-    list of {"target", "relation", "description"} dicts; call sites
+    list of at most INFER_TOP_K {"target", "relation", "description"} dicts;
+    call sites
     /root/reference/scripts/03_knowledge_completion.py:87-112 and README).
     The reference never shipped the implementation — the class module
     (src/models/knowledge_completion.py) is absent from the repo, so only
@@ -307,7 +314,7 @@ def infer_relations(source: str, context: str | None = None,
     seen: set[str] = set()
 
     def add(target: str, relation: str, why: str) -> None:
-        if target in seen or target == source or len(out) >= top_k:
+        if target in seen or target == source or len(out) >= INFER_TOP_K:
             return
         seen.add(target)
         desc = f"{source}は{target}と{relation}の関係にある（{why}）"
@@ -322,7 +329,7 @@ def infer_relations(source: str, context: str | None = None,
     for child, parent, rel in vocab.HIERARCHY:
         if parent == source:
             add(child, rel, "オントロジー階層の子概念")
-    if len(out) < top_k:
+    if len(out) < INFER_TOP_K:
         cat = vocab.concept_category()
         src_cat = cat.get(source)
         pool = sorted(
@@ -340,18 +347,17 @@ def infer_relations(source: str, context: str | None = None,
             for i in order:
                 add(pool[i], "related_to",
                     f"埋め込み類似度{float(sims[i]):.3f}の同カテゴリ概念")
-                if len(out) >= top_k:
+                if len(out) >= INFER_TOP_K:
                     break
     return out
 
 
-def infer_relations_table(spark, sources: DataFrame,
-                          source_col: str = "name",
-                          top_k: int = 5) -> DataFrame:
-    """Bulk U4: one row per inferred relation for every source concept —
-    (source, target, relation, description, rank). The per-concept engine is
-    a cheap pure function, so the bulk path is a shuffle-free mapInPandas
-    over the source column (the reference loops its LLM on the driver;
+def infer_relations_table(spark, sources: DataFrame) -> DataFrame:
+    """Bulk U4: one row per inferred relation for every source concept in
+    the `name` column — (source, target, relation, description, rank). The
+    per-concept engine is a cheap pure function, so the bulk path is a
+    shuffle-free mapInPandas over the source column (the reference loops
+    its LLM on the driver;
     at corpus scale the sources table is distributed and so is this)."""
     import pandas as pd
 
@@ -375,12 +381,10 @@ def infer_relations_table(spark, sources: DataFrame,
 
         for pdf in batches:
             rows = []
-            for s in pdf[source_col]:
+            for s in pdf["name"]:
                 if not isinstance(s, str) or not s:
                     continue
-                for rank, rel in enumerate(
-                    _c.infer_relations(s, top_k=top_k), start=1
-                ):
+                for rank, rel in enumerate(_c.infer_relations(s), start=1):
                     rows.append(
                         (s, rel["target"], rel["relation"],
                          rel["description"], rank)
@@ -391,4 +395,4 @@ def infer_relations_table(spark, sources: DataFrame,
                          "rank"],
             )
 
-    return sources.select(source_col).mapInPandas(run, schema=schema)
+    return sources.select("name").mapInPandas(run, schema=schema)

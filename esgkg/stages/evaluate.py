@@ -117,18 +117,19 @@ def _rel_key(rel: dict) -> str:
     return f"{rel['source']}-{rel['type']}-{rel['target']}"
 
 
+def _share(part, whole) -> float:
+    """len(part) / len(whole); 0.0 for an empty whole."""
+    return len(part) / len(whole) if whole else 0.0
+
+
 def evaluate_relation_inference(nodes: DataFrame, edges: DataFrame,
-                                cases: list[dict],
-                                max_nodes: int = 10,
-                                max_depth: int = 2) -> dict:
+                                cases: list[dict]) -> dict:
     """A10 runner (05_evaluation.py:21-64): a case counts correct when the
-    searched subgraph contains ANY gold relation."""
+    searched subgraph (search_subgraph's own 10 nodes, depth 2) contains ANY
+    gold relation."""
     results = {"correct": 0, "total": len(cases), "details": []}
     for case in cases:
-        sub = rag.search_subgraph(
-            nodes, edges, case["query"], max_nodes=max_nodes,
-            max_depth=max_depth,
-        )
+        sub = rag.search_subgraph(nodes, edges, case["query"])
         predicted = {_rel_key(r) for r in sub["relationships"]}
         gold = {_rel_key(r) for r in case["gold_relations"]}
         correct = len(predicted & gold)
@@ -142,16 +143,17 @@ def evaluate_relation_inference(nodes: DataFrame, edges: DataFrame,
                 "correct": correct,
             }
         )
-    results["accuracy"] = (
-        results["correct"] / results["total"] if cases else 0.0
-    )
+    results["accuracy"] = results["correct"] / len(cases) if cases else 0.0
     return results
 
 
+# the coverage runner's subgraph size (05_evaluation.py:66-118)
+RAG_MAX_NODES = 15
+RAG_MAX_DEPTH = 3
+
+
 def evaluate_rag_queries(nodes: DataFrame, edges: DataFrame,
-                         cases: list[dict],
-                         max_nodes: int = 15,
-                         max_depth: int = 3) -> dict:
+                         cases: list[dict]) -> dict:
     """Coverage runner (05_evaluation.py:66-118): per case, node coverage =
     |found ∩ gold| / |gold| over concept names, relation coverage the same
     over source-type-target keys; the 'response' is the deterministic F7
@@ -159,21 +161,17 @@ def evaluate_rag_queries(nodes: DataFrame, edges: DataFrame,
     results = {"node_coverage": [], "relation_coverage": [], "details": []}
     for case in cases:
         sub = rag.search_subgraph(
-            nodes, edges, case["query"], max_nodes=max_nodes,
-            max_depth=max_depth,
+            nodes, edges, case["query"], max_nodes=RAG_MAX_NODES,
+            max_depth=RAG_MAX_DEPTH,
         )
         response = rag.format_context(sub)
-        found_nodes = {n["name"] for n in sub["nodes"]}
         gold_nodes = set(case["context_concepts"])
-        node_cov = (
-            len(found_nodes & gold_nodes) / len(gold_nodes)
-            if gold_nodes
-            else 0.0
+        node_cov = _share(
+            {n["name"] for n in sub["nodes"]} & gold_nodes, gold_nodes
         )
-        found_rels = {_rel_key(r) for r in sub["relationships"]}
         gold_rels = {_rel_key(r) for r in case["context_relations"]}
-        rel_cov = (
-            len(found_rels & gold_rels) / len(gold_rels) if gold_rels else 0.0
+        rel_cov = _share(
+            {_rel_key(r) for r in sub["relationships"]} & gold_rels, gold_rels
         )
         results["node_coverage"].append(node_cov)
         results["relation_coverage"].append(rel_cov)

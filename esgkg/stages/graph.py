@@ -357,6 +357,21 @@ def orphans(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return nodes.join(touched, "id", "left_anti")
 
 
+def induced_edges(edges: DataFrame, ids: DataFrame) -> DataFrame:
+    """The edges with both endpoints in `ids` (a small table with an `id`
+    column, broadcast): two semi-joins, so only the subgraph's edges leave
+    the edge scan."""
+    ids = F.broadcast(ids.select("id"))
+    return edges.join(
+        ids.withColumnRenamed("id", "src"), "src", "left_semi"
+    ).join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
+
+
+def density(n_nodes: int, n_edges: int) -> float:
+    """The reference's graph density 2E / (N(N-1)); 0.0 below two nodes."""
+    return 2 * n_edges / (n_nodes * (n_nodes - 1)) if n_nodes > 1 else 0.0
+
+
 def subconcepts(edges: DataFrame, nodes: DataFrame, concept: str) -> DataFrame:
     """G2 — is_a children of a concept; the reference's O(N) node scan
     (ontology.py:128-133) becomes a pruned filter + join."""
@@ -416,14 +431,16 @@ def import_ontology_json(spark: SparkSession, path: str
     with open(path, encoding="utf-8") as f:
         data = json.load(f)
     cat = vocab.concept_category()
+    # duplicate names collapse to one node, as in the reference's NetworkX
+    # reload; every id is the name hash, so edges need no lookup join
+    names = set(data["nodes"])
     nodes = spark.createDataFrame(
-        [(n, cat.get(n, "Other"), "Concept") for n in data["nodes"]],
+        [(n, cat.get(n, "Other"), "Concept") for n in sorted(names)],
         "name string, category string, kind string",
     ).withColumn("id", _name_id(F.col("name"))).select(
         "id", "name", "category", "kind",
         F.create_map(F.lit("mentions"), F.lit("0")).alias("attributes"),
     )
-    names = {n for n in data["nodes"]}
     edges = spark.createDataFrame(
         [
             (e["source"], e["target"], e["relation"])
@@ -431,26 +448,10 @@ def import_ontology_json(spark: SparkSession, path: str
             if e["source"] in names and e["target"] in names
         ],
         "src_name string, dst_name string, relation string",
-    )
-    ids = nodes.select("name", "id")
-    edges = (
-        edges.join(
-            F.broadcast(
-                ids.withColumnRenamed("name", "src_name").withColumnRenamed(
-                    "id", "src"
-                )
-            ),
-            "src_name",
-        )
-        .join(
-            F.broadcast(
-                ids.withColumnRenamed("name", "dst_name").withColumnRenamed(
-                    "id", "dst"
-                )
-            ),
-            "dst_name",
-        )
-        .select("src", "dst", "relation")
+    ).select(
+        _name_id(F.col("src_name")).alias("src"),
+        _name_id(F.col("dst_name")).alias("dst"),
+        "relation",
     )
     return nodes, edges
 
@@ -494,12 +495,16 @@ def embed_nodes_incremental(nodes: DataFrame,
     )
 
 
-def pagerank(edges: DataFrame, damping: float = 0.85, max_iter: int = 20,
+# networkx.pagerank's default alpha
+DAMPING = 0.85
+
+
+def pagerank(edges: DataFrame, max_iter: int = 20,
              tol: float = 1.0e-6) -> DataFrame:
     """G8 — PageRank as an iterative DataFrame fixpoint (README-parity slot;
     the reference only name-drops community/centrality analysis). Matches
-    networkx.pagerank semantics: uniform personalization, dangling mass
-    redistributed uniformly, L1 convergence test.
+    networkx.pagerank semantics: damping DAMPING, uniform personalization,
+    dangling mass redistributed uniformly, L1 convergence test.
 
     Scale shape: each round is one join on src + one groupBy on dst — both
     hash-partitioned on the vertex key so AQE reuses the exchange; lineage is
@@ -543,8 +548,8 @@ def pagerank(edges: DataFrame, damping: float = 0.85, max_iter: int = 20,
             .select(
                 "id",
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
+                    F.lit((1.0 - DAMPING) / n)
+                    + F.lit(DAMPING)
                     * (F.coalesce("contrib", F.lit(0.0)) + F.lit(dangling / n))
                 ).alias("rank"),
             )
@@ -568,8 +573,8 @@ def export_viz(nodes: DataFrame, edges: DataFrame, path: str,
     visualize slot); this container has neither, so the canonical output is
     a Graphviz DOT file (dependency-free, renders anywhere), colored by
     E/S/G category, truncated to `max_nodes` highest-degree nodes (a viz is
-    a driver-side artifact — never the full corpus graph). If matplotlib IS
-    importable, a PNG is rendered next to the DOT as a bonus."""
+    a driver-side artifact — never the full corpus graph). No image is
+    rendered; render the DOT with Graphviz (`dot -Tpng`)."""
     colors = {"Environment": "#4caf50", "Social": "#2196f3",
               "Governance": "#ff9800", "Other": "#9e9e9e"}
     deg = degrees(edges)
@@ -581,25 +586,15 @@ def export_viz(nodes: DataFrame, edges: DataFrame, path: str,
         .select("id", "name", "category")
         .collect()
     )
-    # filter DataFrame-side BEFORE collecting: broadcast-semi-join the edge
-    # table against the ≤max_nodes kept ids on both endpoints (same pattern
-    # as rag.py's membership semi-join) — only the surviving subgraph edges
-    # ever reach the driver, never the full corpus edge table
+    # filter DataFrame-side BEFORE collecting: only the edges among the
+    # ≤max_nodes kept ids ever reach the driver, never the full corpus
+    # edge table
     keep_ids = nodes.sparkSession.createDataFrame(
         [(r.id,) for r in top], "id long"
     )
-    edge_rows = (
-        edges.select("src", "dst", "relation")
-        .join(
-            F.broadcast(keep_ids.withColumnRenamed("id", "src")),
-            "src", "left_semi",
-        )
-        .join(
-            F.broadcast(keep_ids.withColumnRenamed("id", "dst")),
-            "dst", "left_semi",
-        )
-        .collect()
-    )
+    edge_rows = induced_edges(
+        edges.select("src", "dst", "relation"), keep_ids
+    ).collect()
     lines = ["digraph esg {", "  rankdir=LR;",
              '  node [style=filled, fontname="sans-serif"];']
     for r in sorted(top, key=lambda r: r.name):
@@ -616,11 +611,4 @@ def export_viz(nodes: DataFrame, edges: DataFrame, path: str,
     lines.append("}")
     with open(path, "w", encoding="utf-8") as f:
         f.write("\n".join(lines))
-    try:  # optional PNG if a renderer exists (not in this sandbox)
-        import matplotlib  # noqa: F401
-
-        # rendering via networkx/matplotlib would go here; kept behind the
-        # import so the DOT path stays dependency-free
-    except ImportError:
-        pass
     return path

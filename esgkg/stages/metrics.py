@@ -7,13 +7,14 @@ DataFrame re-expressions of /root/reference/src/evaluation/metrics.py:
 * structural_metrics — density, orphan count, max in/out degree, leaf/root
   counts (metrics.py:26-44, 90-94).
 * redundant_is_a — parent reachable from another parent (metrics.py:96-102)
-  via bounded transitive closure.
-* has_cycle — bounded-round reachability self-test (metrics.py:83-88).
+  via the transitive closure, which has no path-length bound (like
+  ``nx.ancestors``): it runs until a round adds no pair.
+* has_cycle — a node that reaches itself in that closure (metrics.py:83-88).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import graph as graph_stage
@@ -29,6 +30,13 @@ def ref_tokens(col):
         F.split(F.regexp_replace(col, REF_TOKEN_PUNCT, " "), " "),
         lambda t: t != "",
     )
+
+
+def _n_in(col: Column, values) -> Column:
+    """Aggregate: the number of rows whose `col` is one of the literal
+    `values`."""
+    arr = F.array(*[F.lit(v) for v in values])
+    return F.sum(F.when(F.array_contains(arr, col), 1).otherwise(0))
 
 
 def relation_prf(pred: DataFrame, gold: DataFrame) -> dict[str, float]:
@@ -62,7 +70,7 @@ def structural_metrics(nodes: DataFrame, edges: DataFrame) -> dict[str, float]:
     return {
         "num_nodes": n,
         "num_edges": e,
-        "density": (2 * e / (n * (n - 1))) if n > 1 else 0.0,
+        "density": graph_stage.density(n, e),
         "max_in_degree": agg["max_in"],
         "max_out_degree": agg["max_out"],
         "avg_branching": agg["avg_branching"],
@@ -72,19 +80,16 @@ def structural_metrics(nodes: DataFrame, edges: DataFrame) -> dict[str, float]:
     }
 
 
-def coverage_metrics(concepts: DataFrame, domain_concepts: list[str],
-                     name_col: str = "name") -> DataFrame:
+def coverage_metrics(concepts: DataFrame,
+                     domain_concepts: list[str]) -> DataFrame:
     """A7 — domain-concept coverage of the ontology (ref metrics.py:46-65):
     one row (n_domain, n_ontology, n_covered, concept_coverage,
-    concept_precision, concept_f1). Set sizes via distinct counts; the
-    domain set is a literal broadcast list."""
-    dom = F.array(*[F.lit(c) for c in domain_concepts])
-    names = concepts.select(F.col(name_col).alias("name")).distinct()
+    concept_precision, concept_f1) over the `name` column. Set sizes via
+    distinct counts; the domain set is a literal broadcast list."""
+    names = concepts.select("name").distinct()
     agg = names.agg(
         F.count("*").alias("n_ontology"),
-        F.sum(
-            F.when(F.array_contains(dom, F.col("name")), 1).otherwise(0)
-        ).alias("n_covered"),
+        _n_in(F.col("name"), domain_concepts).alias("n_covered"),
     )
     n_dom = F.lit(len(domain_concepts))
     return agg.select(
@@ -124,12 +129,11 @@ def _keyword_sets(df: DataFrame, id_col: str, text_col: str,
     return kw.groupBy("id").agg(F.collect_set("token").alias(out_col))
 
 
-def answer_quality(pairs: DataFrame, gen_col: str = "generated",
-                   ref_col: str = "reference", id_col: str = "id",
+def answer_quality(pairs: DataFrame, id_col: str = "id",
                    context_concepts: tuple[str, ...] = ()) -> DataFrame:
     """A9 — the reference's answer-quality evaluator
     (GraphRAGEvaluator.evaluate_answer_quality, ref metrics.py:221-265) as a
-    per-row DataFrame op over (id, generated, reference) pairs:
+    per-row DataFrame op over (id_col, generated, reference) pairs:
 
     * concept_usage — fraction of context concepts appearing (substring) in
       the generated answer,
@@ -144,9 +148,9 @@ def answer_quality(pairs: DataFrame, gen_col: str = "generated",
     mapped to 0.0 instead of crashing."""
     base = pairs.select(
         F.col(id_col).alias("id"),
-        F.col(gen_col).alias("_gen"),
-        F.array_distinct(ref_tokens(F.col(gen_col))).alias("_gw"),
-        F.array_distinct(ref_tokens(F.col(ref_col))).alias("_rw"),
+        F.col("generated").alias("_gen"),
+        F.array_distinct(ref_tokens(F.col("generated"))).alias("_gw"),
+        F.array_distinct(ref_tokens(F.col("reference"))).alias("_rw"),
     )
     if context_concepts:
         used = sum(
@@ -169,8 +173,8 @@ def answer_quality(pairs: DataFrame, gen_col: str = "generated",
         F.length("_gen").alias("answer_length"),
         F.size("_gw").alias("vocabulary_size"),
     )
-    gen_kw = _keyword_sets(pairs, id_col, gen_col, "gk")
-    ref_kw = _keyword_sets(pairs, id_col, ref_col, "rk")
+    gen_kw = _keyword_sets(pairs, id_col, "generated", "gk")
+    ref_kw = _keyword_sets(pairs, id_col, "reference", "rk")
     kws = gen_kw.join(ref_kw, "id", "full").select(
         "id",
         F.round(
@@ -199,30 +203,17 @@ def subgraph_relevance(query: str, nodes: DataFrame, edges: DataFrame,
     tokenized query and the tokenized node names."""
     import re
 
-    spark = nodes.sparkSession
     q_words = [w for w in re.sub(REF_TOKEN_PUNCT, " ", query).split() if w]
-    ref = F.array(*[F.lit(c) for c in reference_concepts])
-    qw = F.array(*[F.lit(w) for w in q_words])
     names = nodes.select(F.col("name")).distinct()
     cov = names.agg(
-        F.sum(
-            F.when(F.array_contains(ref, F.col("name")), 1).otherwise(0)
-        ).alias("n_cov")
+        _n_in(F.col("name"), reference_concepts).alias("n_cov")
     )
     cw = (
         names.select(F.explode(ref_tokens(F.col("name"))).alias("w"))
         .distinct()
-        .agg(
-            F.sum(
-                F.when(F.array_contains(qw, F.col("w")), 1).otherwise(0)
-            ).alias("n_qw")
-        )
+        .agg(_n_in(F.col("w"), q_words).alias("n_qw"))
     )
-    n_nodes = nodes.count()
-    n_edges = edges.count()
-    density = (
-        2.0 * n_edges / (n_nodes * (n_nodes - 1)) if n_nodes > 1 else 0.0
-    )
+    density = graph_stage.density(nodes.count(), edges.count())
     row = cov.crossJoin(cw).select(
         F.round(F.col("n_cov") / F.lit(max(len(reference_concepts), 1)), 6)
         .alias("concept_coverage"),
@@ -234,31 +225,31 @@ def subgraph_relevance(query: str, nodes: DataFrame, edges: DataFrame,
     return row
 
 
-def transitive_closure(edges: DataFrame, relation: str | None = None,
-                       max_rounds: int = 8) -> DataFrame:
-    """(src, dst) reachability pairs by iterative doubling-free expansion
-    (bounded rounds — ontology hierarchies are shallow, G6)."""
+def transitive_closure(edges: DataFrame,
+                       relation: str | None = None) -> DataFrame:
+    """(src, dst) reachability pairs by iterative doubling-free expansion:
+    one edge hop per round, until a round adds no pair (G6)."""
     e = edges
     if relation is not None:
         e = e.filter(F.col("relation") == relation)
     e = e.select("src", "dst").distinct().localCheckpoint(eager=True)
-    reach = e
-    for _ in range(max_rounds):
+    reach, n = e, e.count()
+    while True:
         step = (
             reach.alias("r")
             .join(e.alias("e"), F.col("r.dst") == F.col("e.src"))
             .select(F.col("r.src").alias("src"), F.col("e.dst").alias("dst"))
         )
         new_reach = reach.union(step).distinct().localCheckpoint(eager=True)
-        if new_reach.count() == reach.count():
-            break
-        reach = new_reach
-    return reach
+        new_n = new_reach.count()
+        if new_n == n:
+            return reach
+        reach, n = new_reach, new_n
 
 
-def has_cycle(edges: DataFrame, max_rounds: int = 8) -> bool:
+def has_cycle(edges: DataFrame) -> bool:
     """G4 — a node that reaches itself closes a cycle."""
-    tc = transitive_closure(edges, max_rounds=max_rounds)
+    tc = transitive_closure(edges)
     return tc.filter(F.col("src") == F.col("dst")).limit(1).count() > 0
 
 

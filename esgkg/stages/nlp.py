@@ -99,8 +99,7 @@ NARROW_TRIPLES_SCHEMA = T.StructType(
 )
 
 
-def synth_linked_narrow(spark, n: int, seed: int = 42,
-                        partitions: int | None = None) -> DataFrame:
+def synth_linked_narrow(spark, n: int, seed: int = 42) -> DataFrame:
     """Narrow half of the fused map chain: page synthesis → HTML→text
     extraction → triple extraction → dictionary linking in ONE Arrow pass,
     emitting (subj, pred, obj, pid). The modular stages
@@ -116,7 +115,7 @@ def synth_linked_narrow(spark, n: int, seed: int = 42,
     payloads you can recompute) — ~35 bytes/row of url string stay out of
     the python→JVM transfer and out of the stored `linked_triples` table."""
     _session.ensure_shipped(spark)
-    parts = partitions or spark.sparkContext.defaultParallelism
+    parts = spark.sparkContext.defaultParallelism
     from esgkg import synth as _synth
 
     n_groups = _synth.default_groups(n)

@@ -22,26 +22,30 @@ from .. import kernel
 from ..ops import simsearch
 from . import graph as graph_stage
 
-# reference defaults: graph_rag.py:96-127
-DEFAULT_CATEGORY_WEIGHTS = {
+# reference defaults: graph_rag.py:96-127 (weights, threshold) and
+# graph_rag.py:265-304 (context formatting)
+CATEGORY_WEIGHTS = {
     "Environment": 1.2,
     "Social": 1.1,
     "Governance": 1.1,
 }
+SIMILARITY_THRESHOLD = 0.3
+CONTEXT_MAX_NODES = 5
+CONTEXT_MAX_RELS = 3
 
 
-def score_nodes(nodes: DataFrame, embeddings: DataFrame, query: str,
-                category_weights: dict[str, float] | None = None) -> DataFrame:
-    """(id, name, category, score): weighted cosine of every node embedding
-    vs the query embedding (J8 + J6). Embeddings are L2-normalized so cosine
-    is a dot product; the query vector is a broadcast literal."""
-    weights = category_weights or DEFAULT_CATEGORY_WEIGHTS
+def score_nodes(nodes: DataFrame, embeddings: DataFrame,
+                query: str) -> DataFrame:
+    """(id, name, category, score): CATEGORY_WEIGHTS-weighted cosine of every
+    node embedding vs the query embedding (J8 + J6). Embeddings are
+    L2-normalized so cosine is a dot product; the query vector is a
+    broadcast literal."""
     dot = simsearch.dot(
         F.col("vec").cast("array<double>"),
         simsearch.lit_vector(kernel.hash_embed(query)),
     )
     wexpr = F.lit(1.0)
-    for cat, w in weights.items():
+    for cat, w in CATEGORY_WEIGHTS.items():
         wexpr = F.when(F.col("category") == cat, F.lit(float(w))).otherwise(
             wexpr
         )
@@ -54,15 +58,13 @@ def score_nodes(nodes: DataFrame, embeddings: DataFrame, query: str,
 
 
 def search_subgraph(nodes: DataFrame, edges: DataFrame, query: str,
-                    max_nodes: int = 10, max_depth: int = 2,
-                    similarity_threshold: float = 0.3) -> dict:
+                    max_nodes: int = 10, max_depth: int = 2) -> dict:
     """The reference's subgraph search contract (graph_rag.py:96-246):
     returns {"nodes": [...], "relationships": [...], "statistics": {...}}."""
-    spark = nodes.sparkSession
     emb = graph_stage.embed_nodes(nodes)
     scored = score_nodes(nodes, emb, query)
     top = (
-        scored.filter(F.col("score") >= similarity_threshold)
+        scored.filter(F.col("score") >= SIMILARITY_THRESHOLD)
         .orderBy(F.desc("score"), F.asc("name"))
         .limit(max_nodes)
         .localCheckpoint(eager=True)
@@ -71,22 +73,14 @@ def search_subgraph(nodes: DataFrame, edges: DataFrame, query: str,
     reach = graph_stage.bfs(edges, top.select("id"), max_depth)
     keep = reach.select(F.col("node").alias("id")).distinct()
     sub_nodes = nodes.join(keep, "id", "left_semi")
-    ids = F.broadcast(sub_nodes.select("id"))
-    sub_edges = (
-        edges.join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
-        .join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
-        .dropDuplicates(["src", "dst", "relation"])
+    sub_edges = graph_stage.induced_edges(edges, sub_nodes).dropDuplicates(
+        ["src", "dst", "relation"]
     )
     n_rows = sub_nodes.select("id", "name", "category", "kind").collect()
     name_of = {r.id: r.name for r in n_rows}
-    e_rows = [
-        r
-        for r in sub_edges.select("src", "dst", "relation", "confidence").collect()
-        if r.src in name_of and r.dst in name_of
-    ]
+    e_rows = sub_edges.select("src", "dst", "relation", "confidence").collect()
     n = len(n_rows)
     e = len(e_rows)
-    density = (2 * e / (n * (n - 1))) if n > 1 else 0.0  # E4, kept as-is
     cats: dict[str, int] = {}
     for r in n_rows:
         cats[r.category] = cats.get(r.category, 0) + 1
@@ -107,29 +101,30 @@ def search_subgraph(nodes: DataFrame, edges: DataFrame, query: str,
         "statistics": {
             "num_nodes": n,
             "num_relationships": e,
-            "density": density,
+            "density": graph_stage.density(n, e),  # E4, kept as-is
             "category_counts": cats,
         },
     }
 
 
-def format_context(subgraph: dict, max_nodes: int = 5,
-                   max_rels_per_node: int = 3) -> str:
+def format_context(subgraph: dict) -> str:
     """F7 — category→concept→relations context text
-    (graph_rag.py:265-304), driver-side over the collected small result."""
+    (graph_rag.py:265-304), driver-side over the collected small result:
+    at most CONTEXT_MAX_NODES concepts per category and CONTEXT_MAX_RELS
+    relations per concept."""
     by_cat: dict[str, list[dict]] = {}
     for node in subgraph["nodes"]:
         by_cat.setdefault(node["category"], []).append(node)
     lines: list[str] = []
     for cat in sorted(by_cat):
         lines.append(f"[{cat}]")
-        for node in by_cat[cat][:max_nodes]:
+        for node in by_cat[cat][:CONTEXT_MAX_NODES]:
             lines.append(f"- {node['name']}")
             rels = [
                 r
                 for r in subgraph["relationships"]
                 if r["source"] == node["name"]
-            ][:max_rels_per_node]
+            ][:CONTEXT_MAX_RELS]
             for r in rels:
                 lines.append(f"    {r['source']} -{r['type']}-> {r['target']}")
     return "\n".join(lines)

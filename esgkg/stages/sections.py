@@ -8,7 +8,7 @@ category, all JVM-side (whole-stage codegen, zero Python).
 
 At 100 TB scale the k× contains() scan is still a single pass over the text
 column (no shuffle); with thousands of keywords the Aho-Corasick pandas-UDF
-variant in esgkg/ops/textstats.py applies instead.
+variant `categorize_large` applies instead.
 """
 
 from __future__ import annotations
@@ -26,9 +26,7 @@ def _any_kw(col: Column, kws: tuple[str, ...]) -> Column:
     return out
 
 
-def categorize_large(text_df: DataFrame, text_col: str = "text",
-                     keyword_map: dict[str, tuple[str, ...]] | None = None
-                     ) -> DataFrame:
+def categorize_large(text_df: DataFrame) -> DataFrame:
     """P3 at dictionary scale: one Aho-Corasick pass per row inside an
     Arrow-batched UDF instead of k× contains(). Output rows match
     `categorize` exactly (pytest-asserted); use this variant when the
@@ -41,7 +39,7 @@ def categorize_large(text_df: DataFrame, text_col: str = "text",
     from .. import session as _session
 
     _session.ensure_shipped(text_df.sparkSession)
-    kmap = keyword_map or vocab.CATEGORY_KEYWORDS
+    kmap = vocab.CATEGORY_KEYWORDS
     schema = T.StructType(
         text_df.schema.fields + [T.StructField("category", T.StringType(), False)]
     )
@@ -58,7 +56,7 @@ def categorize_large(text_df: DataFrame, text_col: str = "text",
             rows = []
             for tup in pdf.itertuples(index=False):
                 rec = dict(zip(cols, tup))
-                text = rec[text_col]
+                text = rec["text"]
                 if not isinstance(text, str) or not text.strip():
                     continue
                 hits = ac.search(text)
@@ -70,10 +68,10 @@ def categorize_large(text_df: DataFrame, text_col: str = "text",
     return text_df.mapInPandas(run, schema=schema)
 
 
-def categorize(text_df: DataFrame, text_col: str = "text") -> DataFrame:
+def categorize(text_df: DataFrame) -> DataFrame:
     """(…, text) → (…, category, text) with one row per matched category;
     rows with empty text are dropped (P2)."""
-    c = F.col(text_col)
+    c = F.col("text")
     structs = [
         F.struct(
             F.lit(cat).alias("category"), _any_kw(c, kws).alias("matched")

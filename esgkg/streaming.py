@@ -10,49 +10,46 @@ Each micro-batch runs the shared kernel UDFs and appends to the catalog
 tables, giving exactly-once-per-batch semantics via the checkpoint dir. At
 cluster scale the source would be Kafka/files-on-S3; the transformation code
 is identical (that is the point of the facade).
+
+`sessionize_stream_event_time` is the one custom stateful operator: gap-based
+sessions under an event-time watermark, the streaming analog of q27's batch
+sessionizer. Nothing in the pipeline calls this module; the pipeline resumes
+batch-incrementally through the manifest (stages/manifest.py).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import session as _session
+from . import synth
 from .io import ParquetCatalog
 from .stages import corpus, nlp
 
 
-def rate_pages_stream(spark: SparkSession, rows_per_second: int = 100,
-                      seed: int = 42) -> DataFrame:
+ROWS_PER_SECOND = 200
+
+
+def rate_pages_stream(spark: SparkSession) -> DataFrame:
     """A streaming DataFrame of synthetic pages driven by the rate source
     (each rate `value` becomes the page id — same bytes as batch synth)."""
     _session.ensure_shipped(spark)
     rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
+        "rowsPerSecond", str(ROWS_PER_SECOND)
     ).load()
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from esgkg import synth
-
-        for pdf in batches:
-            rows = [synth.make_page(int(v), seed) for v in pdf["value"]]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in corpus.PAGES_SCHEMA]
-            )
-
-    return rate.select("value").mapInPandas(gen, schema=corpus.PAGES_SCHEMA)
+    # an unbounded stream has no corpus size: the 88-group base org pool
+    return corpus.pages_from_ids(
+        rate.select(F.col("value").alias("id")), synth.SEED, 88
+    )
 
 
 def start_ingest(spark: SparkSession, base_dir: str,
-                 rows_per_second: int = 200, seed: int = 42,
                  trigger_seconds: int = 2):
     """Start the streaming ingest: pages → text + triples appended to the
     catalog per micro-batch. Returns the StreamingQuery (caller stops it)."""
     catalog = ParquetCatalog(base_dir)
-    pages = rate_pages_stream(spark, rows_per_second, seed)
+    pages = rate_pages_stream(spark)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # exactly-once: a retried batch overwrites its own batch-id
@@ -82,112 +79,20 @@ def start_ingest(spark: SparkSession, base_dir: str,
     )
 
 
-def windowed_page_counts(pages_stream: DataFrame,
-                         window: str = "1 minute",
-                         watermark: str = "2 minutes") -> DataFrame:
-    """Watermarked tumbling-window page counts by lang (the late-data-aware
-    aggregation shape for streaming metrics)."""
-    return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window), "lang")
-        .agg(F.count("*").alias("n_pages"))
-    )
-
-
 SESSION_OUT_SCHEMA = (
     "user_id long, session_idx long, n_events long, duration_sec long"
 )
-SESSION_STATE_SCHEMA = (
-    "last_tsec long, start_tsec long, n_events long, session_idx long"
-)
-
-
-def sessionize_stream(events: DataFrame, gap_sec: int = 1800) -> DataFrame:
-    """Stateful streaming sessionization — the custom stateful operator slot
-    (SURVEY.md §2.10): gap-based sessions per user via
-    ``applyInPandasWithState``. Emits a (user_id, session_idx, n_events,
-    duration_sec) row whenever a session CLOSES — either a later event
-    arrives past the gap, or the processing-time timeout fires with no new
-    events. The batch analog (identical closed-session rows) is the
-    lag-window sessionizer of __spark_entry__ q27, which is the
-    oracle-checkable ground truth.
-
-    State per user is O(1) (4 longs); event order is assumed in-order per
-    user within the stream — out-of-order data needs the watermark variant
-    `sessionize_stream_event_time` below, which trades O(session) state for
-    late-data correctness."""
-    import pandas as pd
-
-    cols = ["user_id", "session_idx", "n_events", "duration_sec"]
-
-    def fn(key, pdfs, state):
-        (user_id,) = key
-        if state.hasTimedOut:
-            last, start, n, idx = state.get
-            if last < 0:
-                # second consecutive quiet period: now really drop the state
-                state.remove()
-                return
-            # emit the closed session but KEEP the running session_idx for a
-            # grace period (10x gap), so a returning user's sessions continue
-            # numbering instead of restarting at 1 (which would repeat
-            # (user_id, session_idx) keys). A user silent longer than the
-            # grace period still renumbers — the documented residual
-            # divergence of bounded state. -1 is the no-open-session
-            # sentinel (tsec is non-negative by schema contract); None
-            # would NOT round-trip through the Arrow state serializer.
-            state.update((-1, -1, 0, idx))
-            state.setTimeoutDuration(gap_sec * 1000 * 10)
-            yield pd.DataFrame(
-                [(user_id, idx, n, last - start)], columns=cols
-            )
-            return
-        if state.exists:
-            last, start, n, idx = state.get
-            if last < 0:
-                last = start = None
-                n = 0
-        else:
-            last = start = None
-            n = 0
-            idx = 0
-        rows = []
-        for pdf in pdfs:
-            for tsec in pdf["tsec"]:
-                tsec = int(tsec)
-                if last is None:
-                    idx += 1
-                    start, n = tsec, 1
-                elif tsec - last > gap_sec:
-                    rows.append((user_id, idx, n, last - start))
-                    idx += 1
-                    start, n = tsec, 1
-                else:
-                    n += 1
-                last = tsec
-        state.update((last, start, n, idx))
-        state.setTimeoutDuration(gap_sec * 1000)
-        yield pd.DataFrame(rows, columns=cols)
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        SESSION_OUT_SCHEMA,
-        SESSION_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
 EVENT_SESSION_STATE_SCHEMA = "tsecs array<long>, session_idx long"
 
 
 def sessionize_stream_event_time(events: DataFrame, gap_sec: int = 1800,
                                  watermark_sec: int = 3600) -> DataFrame:
-    """EVENT-time sessionization with late-data handling — the watermarked
-    variant of `sessionize_stream` (whose processing-time design silently
-    missessionizes out-of-order events).
+    """Stateful streaming sessionization — the custom stateful operator
+    slot (SURVEY.md §2.10): gap-based sessions per user via
+    ``applyInPandasWithState``, emitting one (user_id, session_idx,
+    n_events, duration_sec) row per CLOSED session. The batch analog is the
+    lag-window sessionizer of __spark_entry__ q27, the oracle-checked
+    ground truth.
 
     Events carry `tsec` (event-time seconds); the stream is watermarked on
     `timestamp_seconds(tsec)` with `watermark_sec` allowed lateness. Open
@@ -197,12 +102,13 @@ def sessionize_stream_event_time(events: DataFrame, gap_sec: int = 1800,
     point no admissible late event can extend or bridge it, so the emitted
     row is identical to the batch oracle's (q27 semantics: tsec-sorted,
     gap-split). Eviction uses `EventTimeTimeout`, so state never outlives
-    the watermark.
+    the watermark, and an ``availableNow`` query terminates once its input
+    is consumed.
 
     Late events WITHIN the watermark land in the correct session (the pytest
-    feeds one and checks the batch-oracle match where the processing-time
-    variant provably diverges); events older than the watermark are dropped
-    by Spark before reaching the operator — standard watermark semantics."""
+    feeds one out of order and checks the batch-oracle match); events older
+    than the watermark are dropped by Spark before reaching the operator —
+    standard watermark semantics."""
     import pandas as pd
 
     cols = ["user_id", "session_idx", "n_events", "duration_sec"]
@@ -238,13 +144,16 @@ def sessionize_stream_event_time(events: DataFrame, gap_sec: int = 1800,
                 break
         if buf:
             state.update((buf, idx))
-            # fire once the watermark can close the trailing session
-            state.setTimeoutTimestamp((buf[-1] + gap_sec) * 1000 + 1000)
+            # fire once the watermark can close the first open session
+            # (`last` is its last event); the later ones close in the same
+            # call or re-arm the timeout
+            state.setTimeoutTimestamp((last + gap_sec) * 1000 + 1000)
         elif state.hasTimedOut:
             state.remove()
         elif state.exists or rows:
             # emitted everything this batch: keep the running idx one grace
-            # period (same renumbering trade as the processing-time variant)
+            # period (10x gap), so a returning user's sessions continue
+            # numbering; a user silent longer than that restarts at 1
             state.update(([], idx))
             state.setTimeoutTimestamp(
                 int(max(wm_sec, 0) * 1000) + gap_sec * 1000 * 10

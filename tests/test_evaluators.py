@@ -140,11 +140,10 @@ def test_embed_nodes_incremental_reuses_cached_vectors(spark):
 
 
 def test_sessionize_stream_matches_batch_closed_sessions(spark, tmp_path):
-    import time
-
     from esgkg import streaming
 
-    # events: user 1 has three sessions (last one open), user 2 has one open
+    # events: user 1 has three sessions, user 2 has one; times offset from
+    # 0 like _LATE_BATCHES (an event at the initial watermark is dropped)
     rows = []
     eid = 0
     for user, tsecs in [
@@ -152,7 +151,7 @@ def test_sessionize_stream_matches_batch_closed_sessions(spark, tmp_path):
         (2, [10, 20]),
     ]:
         for ts in tsecs:
-            rows.append((user, ts, eid))
+            rows.append((user, _B + ts, eid))
             eid += 1
     src = str(tmp_path / "events_src")
     spark.createDataFrame(
@@ -164,21 +163,26 @@ def test_sessionize_stream_matches_batch_closed_sessions(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        streaming.sessionize_stream(events, gap_sec=1800)
+        streaming.sessionize_stream_event_time(
+            events, gap_sec=1800, watermark_sec=3600
+        )
         .writeStream.format("memory")
         .queryName("sess_out")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(60)
+    done = q.awaitTermination(60)
+    q.stop()
+    assert done, "availableNow query did not terminate"
     got = {
         (r.user_id, r.session_idx, r.n_events, r.duration_sec)
         for r in spark.sql("SELECT * FROM sess_out").collect()
     }
-    # closed sessions only: user 1 closes (0..200) and (5000..5100);
-    # the trailing session 99999 and user 2's only session stay open
-    assert got == {(1, 1, 3, 200), (1, 2, 2, 100)}
+    # the batch rule's closed sessions: the watermark (last event - 3600)
+    # closes user 1's (0..200) and (5000..5100) and user 2's (10..20); only
+    # user 1's trailing session at 99999 stays open
+    assert got == {(1, 1, 3, 200), (1, 2, 2, 100), (2, 1, 2, 10)}
 
 
 def test_export_viz_writes_valid_dot(spark, tmp_path):
@@ -308,9 +312,7 @@ def test_synth_test_cases_shape_and_truth(spark):
 
 
 # times offset from 0 — an event exactly AT the initial watermark (t=0)
-# is dropped by the stateful-op late filter. The gap (1000 s) is far larger
-# than the test's wall time so the PROCESSING-time variant's timeouts can't
-# fire between the restarted runs and its output stays deterministic.
+# is dropped by the stateful-op late filter.
 _B = 100000
 _LATE_BATCHES = [
     [(1, _B + 0, 0), (1, _B + 500, 1), (9, _B + 4000, 2)],
@@ -346,8 +348,9 @@ def _run_batched(spark, tmp_path, make_query, tag):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        done = q.awaitTermination(120)
         q.stop()
+        assert done, "availableNow query did not terminate"
     return {
         (r.user_id, r.session_idx, r.n_events, r.duration_sec)
         for r in spark.read.parquet(out).collect()
@@ -355,11 +358,9 @@ def _run_batched(spark, tmp_path, make_query, tag):
 
 
 def test_sessionize_event_time_handles_late_data(spark, tmp_path):
-    """The event-time variant must place the late event (t=30, within the
+    """The sessionizer must place the late event (+300, within the
     watermark) into its true session — matching the batch oracle's
-    (n_events=3, duration=50) — while the processing-time variant, fed the
-    same batches, provably missessionizes (duration 20: the late 30 opens a
-    fresh logical position after 50 in arrival order)."""
+    (n_events=3, duration=500) — although it arrives after +500."""
     from esgkg import streaming
 
     got = _run_batched(
@@ -373,18 +374,3 @@ def test_sessionize_event_time_handles_late_data(spark, tmp_path):
     # batch oracle over u1's closed events [+0, +300, +500]: one session,
     # 3 events, duration 500; [+50000] stays open (watermark never passes)
     assert got_u1 == {(1, 1, 3, 500)}
-
-    got_pt = {
-        row
-        for row in _run_batched(
-            spark, tmp_path,
-            lambda ev: streaming.sessionize_stream(ev, gap_sec=1000),
-            "pt",
-        )
-        if row[0] == 1
-    }
-    # arrival-order processing: events seen as [+0, +500, +300]; `last`
-    # ends at +300, so the session closed by +50000 reports duration 300 —
-    # the documented missessionization the watermark variant fixes
-    assert (1, 1, 3, 300) in got_pt
-    assert (1, 1, 3, 500) not in got_pt

@@ -69,6 +69,21 @@ def test_cycle_and_redundancy_on_seed(spark):
     assert metrics.redundant_is_a(e2).count() >= 1
 
 
+def test_closure_has_no_round_limit(spark):
+    """A 12-node ring is a cycle and a 12-node chain's closure holds all 66
+    of its forward pairs (and no self-pair): paths of 12 and 11 edges,
+    longer than any fixed small round budget."""
+    n = 12
+    ring = spark.createDataFrame(
+        [(i, (i + 1) % n, "is_a") for i in range(n)],
+        "src long, dst long, relation string",
+    )
+    chain = ring.filter(F.col("dst") != 0)
+    assert metrics.has_cycle(ring) is True
+    got = {(r.src, r.dst) for r in metrics.transitive_closure(chain).collect()}
+    assert got == {(i, j) for i in range(n) for j in range(i + 1, n)}
+
+
 def test_ontology_json_roundtrip(spark, kg, tmp_path):
     p = str(tmp_path / "ontology.json")
     graph.export_ontology_json(kg["nodes"], kg["edges"], p)
@@ -85,8 +100,7 @@ def test_streaming_ingest(spark):
 
     base = tempfile.mkdtemp(prefix="esgkg_stream_")
     try:
-        q = streaming.start_ingest(spark, base, rows_per_second=200,
-                                   trigger_seconds=1)
+        q = streaming.start_ingest(spark, base, trigger_seconds=1)
         import time
 
         deadline = time.time() + 60
