@@ -262,14 +262,12 @@ def _q15_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # GIF/WebP/palette-PNG payloads through the NATIVE decoders, so the
     # externally-checked golden exercises the real decode paths (all five
     # PNG filters, PLTE resolution, GIF LZW + palette, the JPEG/WebP
-    # dimensions-only parses with their NULL luma)
-    fake = multimodal.extract_features(
-        multimodal.synth_media(spark, 200), fake=True
-    )
-    real = multimodal.extract_features(
-        multimodal.synth_real_media(spark, 30), fake=False
-    )
-    return fake.unionByName(real).select(
+    # dimensions-only parses with their NULL luma); the decoder is picked
+    # per row from meta['codec']
+    return multimodal.extract_features(
+        multimodal.synth_media(spark, 200)
+        .unionByName(multimodal.synth_real_media(spark, 30))
+    ).select(
         "media_id", "kind", "width", "height",
         F.round(F.col("mean_luma"), 6).alias("mean_luma"), "n_bytes",
     )
@@ -285,13 +283,10 @@ def _q33_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duration/rms; FLAC STREAMINFO with header-derivable duration).
     # kind= pushes the selection below the generator (round 6): only the
     # audio ids are synthesized instead of all 200 rows filtered to a third
-    fake = multimodal.extract_audio_features(
-        multimodal.synth_media(spark, 200, kind="audio"), fake=True,
-    )
-    real = multimodal.extract_audio_features(
-        multimodal.synth_real_audio(spark, 30), fake=False
-    )
-    return fake.unionByName(real).select(
+    return multimodal.extract_audio_features(
+        multimodal.synth_media(spark, 200, kind="audio")
+        .unionByName(multimodal.synth_real_audio(spark, 30))
+    ).select(
         "media_id", "kind", "sample_rate", "n_channels",
         F.round(F.col("duration_sec"), 6).alias("duration_sec"),
         F.round(F.col("rms"), 6).alias("rms"), "n_bytes",
@@ -306,13 +301,10 @@ def _q34_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # payloads through the NATIVE ISO-BMFF box walk (mvhd duration, tkhd
     # dimensions, both layout versions; audio-only files carry NULL dims).
     # kind= pushes the selection below the generator (round 6), as in q33
-    fake = multimodal.extract_video_features(
-        multimodal.synth_media(spark, 200, kind="video"), fake=True,
-    )
-    real = multimodal.extract_video_features(
-        multimodal.synth_real_video(spark, 30), fake=False
-    )
-    return fake.unionByName(real).select(
+    return multimodal.extract_video_features(
+        multimodal.synth_media(spark, 200, kind="video")
+        .unionByName(multimodal.synth_real_video(spark, 30))
+    ).select(
         "media_id", "kind", "width", "height",
         F.round(F.col("duration_sec"), 6).alias("duration_sec"), "n_bytes",
     )

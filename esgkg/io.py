@@ -95,12 +95,17 @@ class ParquetCatalog:
               partition_by: list[str] | None = None) -> None:
         """MERGE-upsert emulation: new rows win on key collision
         (Iceberg: MERGE INTO name USING updates ON keys; reference semantics:
-        Neo4j MERGE, /root/reference/src/knowledge_graph/neo4j_manager.py:62,91)."""
+        Neo4j MERGE, /root/reference/src/knowledge_graph/neo4j_manager.py:62,91).
+        Every row of `updates` is kept, so it should hold each key once."""
         if not self.exists(spark, name):
             self.write(updates, name, partition_by)
             return
         current = self.read(spark, name)
-        merged = updates.unionByName(current).dropDuplicates(keys)
+        # anti-join, not dropDuplicates: which duplicate dropDuplicates
+        # keeps is undefined, so updates could lose to the rows they replace
+        merged = updates.unionByName(
+            current.join(updates.select(*keys), keys, "left_anti")
+        )
         # materialize before overwriting the directory we read from
         merged = merged.localCheckpoint(eager=True)
         self.write(merged, name, partition_by)

@@ -9,7 +9,10 @@ the reference which starts from CSV), (c) tokenization
 (/root/reference/src/rag/graph_rag.py:306-310), and (d) the entity/relation
 extractor whose contract is recovered from call sites
 (/root/reference/scripts/01_text_processing.py:32-40,
-/root/reference/scripts/06_ontology_construction.py:39-55).
+/root/reference/scripts/06_ontology_construction.py:39-55). There is one
+extraction loop, ``Extractor.extract_page``: ``process_text`` wraps its
+output as the contract's dicts and ``extract_triples`` turns it into the
+pipeline's triples.
 
 Both the single-node oracle (esgkg/oracle.py) and the Spark pandas UDFs
 (esgkg/stages/*) call these exact functions, which is what makes the
@@ -201,24 +204,29 @@ class Extractor:
                 out.append((m.group("s"), pred, m.group("o")))
         return out
 
+    def extract_page(self, text: str
+                     ) -> tuple[list[tuple[str, str]], list[tuple[str, str, str]]]:
+        """One page's ((surface, label), ...) entities and
+        ((source, pred, target), ...) relations, sentence by sentence, each
+        deduplicated in first-occurrence order — the loop behind both
+        ``process_text`` and ``extract_triples``."""
+        ents: list[tuple[str, str]] = []
+        rels: list[tuple[str, str, str]] = []
+        for sent in split_sentences(text):
+            ents.extend((surface, label)
+                        for surface, label, _, _ in self.entities(sent))
+            rels.extend(self.relations(sent))
+        return list(dict.fromkeys(ents)), list(dict.fromkeys(rels))
+
     def process_text(self, text: str) -> dict:
         """The recovered ESGTextProcessor.process_text contract."""
-        entities: list[dict] = []
-        relations: list[dict] = []
-        seen_e: set[tuple[str, str]] = set()
-        seen_r: set[tuple[str, str, str]] = set()
-        for sent in split_sentences(text):
-            for surface, label, _, _ in self.entities(sent):
-                key = (surface, label)
-                if key not in seen_e:
-                    seen_e.add(key)
-                    entities.append({"text": surface, "label": label})
-            for s, pred, o in self.relations(sent):
-                key = (s, pred, o)
-                if key not in seen_r:
-                    seen_r.add(key)
-                    relations.append({"source": s, "relation": pred, "target": o})
-        return {"entities": entities, "relations": relations}
+        ents, rels = self.extract_page(text)
+        return {
+            "entities": [{"text": t, "label": lb} for t, lb in ents],
+            "relations": [
+                {"source": s, "relation": p, "target": o} for s, p, o in rels
+            ],
+        }
 
 
 _EXTRACTOR: Extractor | None = None
@@ -231,83 +239,20 @@ def get_extractor() -> Extractor:
     return _EXTRACTOR
 
 
-# Per-sentence extraction memo (round 6). Sentences repeat heavily in any
-# template-heavy corpus (boilerplate, generated reports): within one python
-# worker's partition ~60% of sentence instances are repeats at bench scale.
-# Entity/relation extraction is a pure function of the sentence, so the memo
-# is exact — a pytest compares memoized extract_triples against the
-# process_text contract on corpus + adversarial inputs. Bounded: once full,
-# new sentences are extracted without being stored (the high-frequency
-# sentences enter early), so worker memory stays O(_SENT_MEMO_MAX).
-_SENT_MEMO: dict[str, tuple[tuple, tuple]] = {}
-_SENT_MEMO_MAX = 200_000
-
 _INSTANCE_LABELS = frozenset(vocab.INSTANCE_LABELS)
 
 
-def _extract_sentence(ex: Extractor, sent: str) -> tuple[tuple, tuple]:
-    """((surface, label), ...), ((s, pred, o), ...) for one sentence —
-    the inner loops of Extractor.entities/relations with C-level
-    `findall` (tuple rows straight from the regex engine) instead of
-    per-match Match-object method calls; match order, labels and begin/end
-    invariance are pytest-asserted against the Match-object path."""
-    ents = []
-    for law, org, con in ex.ent_re.findall(sent):
-        # exactly one top-level alternative matches (patterns never match
-        # the empty string), mirroring Match.lastgroup
-        if law:
-            ents.append((law, "LAW"))
-        elif org:
-            ents.append((org, "ORG"))
-        else:
-            ents.append((con, "CONCEPT"))
-    rels = []
-    for pred, rx, sel in ex.rel_res:
-        if sel and sel not in sent:
-            continue  # literal prefilter — see Extractor.__init__
-        for s, o in rx.findall(sent):
-            rels.append((s, pred, o))
-    return tuple(ents), tuple(rels)
-
-
 def extract_triples(text: str, url: str) -> list[tuple[str, str, str, str]]:
-    """Full per-page triple emission: template relations plus
-    (org, instance_of, Organization) for ORG/LAW-routed entities
-    (routing per /root/reference/scripts/06_ontology_construction.py:42-47,
-    add_instance per ontology.py:110). Equivalent to deriving the triples
-    from ``get_extractor().process_text(text)`` — the contract a pytest
-    asserts — but memoized per sentence and with the page-level dedup
-    inlined (the old path built per-entity dicts purely to re-read them)."""
-    ex = get_extractor()
-    memo_get = _SENT_MEMO.get
-    all_ents: list[tuple[str, str]] = []
-    all_rels: list[tuple[str, str, str]] = []
-    for sent in split_sentences(text):
-        hit = memo_get(sent)
-        if hit is None:
-            hit = _extract_sentence(ex, sent)
-            if len(_SENT_MEMO) < _SENT_MEMO_MAX:
-                _SENT_MEMO[sent] = hit
-        ents, rels = hit
-        if ents:
-            all_ents.extend(ents)
-        if rels:
-            all_rels.extend(rels)
-    # page-level dedup in C: dict.fromkeys keeps first-occurrence order
-    # (exactly the old per-element seen-set loops); `seen` starts as the
-    # full relation key set — identical to the state the old code reached
-    # before the entity pass, since relation keys are unique by then
-    triples: list[tuple[str, str, str, str]] = [
-        (s, p, o, url) for s, p, o in dict.fromkeys(all_rels)
-    ]
-    seen: set[tuple[str, str, str]] = set(all_rels)
-    for surface, label in dict.fromkeys(all_ents):
-        if label in _INSTANCE_LABELS:
-            key = (surface, "instance_of", "Organization")
-            if key not in seen:
-                seen.add(key)
-                triples.append((surface, "instance_of", "Organization", url))
-    return triples
+    """Full per-page triple emission: the page's template relations, then
+    (org, instance_of, Organization) for each ORG/LAW-routed entity not
+    already emitted (routing per
+    /root/reference/scripts/06_ontology_construction.py:42-47, add_instance
+    per ontology.py:110). Both come from ``Extractor.extract_page``, the
+    loop ``process_text`` runs."""
+    ents, rels = get_extractor().extract_page(text)
+    rels += [(surface, "instance_of", "Organization")
+             for surface, label in ents if label in _INSTANCE_LABELS]
+    return [(s, p, o, url) for s, p, o in dict.fromkeys(rels)]
 
 
 class AhoCorasick:
@@ -407,7 +352,9 @@ _MH_CACHE: dict[int, tuple[np.ndarray, np.ndarray]] = {}
 
 def minhash_signature(s: str, k: int = 32, ngram: int = 3) -> np.ndarray:
     """k 64-bit minhashes over char n-gram shingles (affine transforms of one
-    blake2b base hash per shingle; all arithmetic mod 2^61-1)."""
+    blake2b base hash per shingle; all arithmetic mod 2^61-1). Kept as the
+    reference `minhash_signatures_batch` is tested against; production code
+    calls the batch version."""
     if k not in _MH_CACHE:
         _MH_CACHE[k] = _minhash_params(k)
     a, b = _MH_CACHE[k]

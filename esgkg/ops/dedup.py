@@ -5,7 +5,9 @@ embedding-cosine, the embeddings table (vec_id, embedding):
 
 * exact      — hash groupBy; keeper = min(doc_id) per identical text.
 * minhash    — MinHash+LSH near-dup: shingle → minhash → band → bucket join
-               (same machinery as canonicalization, tuned for documents).
+               → exact-Jaccard verify, plus an exact content-hash pass over
+               oversized buckets (the signatures of canonicalization, tuned
+               for documents).
 * simhash    — 64-bit SimHash over tokens; near-dups = small hamming distance
                within same band prefix.
 * ngram/char jaccard — exact verified similarity on bounded candidate sets.
@@ -25,7 +27,7 @@ from collections.abc import Iterator
 from functools import reduce
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -85,49 +87,22 @@ def _bucket_pairs(rows: DataFrame, bucket: list[str],
 def minhash_near_dup_pairs(docs: DataFrame, k: int = 32, bands: int = 16,
                            shingle: int = 5,
                            jaccard_threshold: float = 0.7,
-                           max_bucket: int = 64,
-                           recover_oversized: bool = True,
-                           min_band_agreement: int = 2) -> DataFrame:
+                           max_bucket: int = 64) -> DataFrame:
     """Near-duplicate id pairs via MinHash-LSH + exact-Jaccard verify.
 
     Shingles are character n-grams of the document text (word-shingles are a
-    one-line change in the kernel).
-
-    `min_band_agreement` is a signature-agreement prefilter applied BEFORE
-    full texts are joined onto candidates: a candidate pair colliding in
-    fewer than this many of the `bands` LSH bands is dropped without ever
-    shipping its document bodies. The band-collision count is free — it
-    falls out of the groupBy that dedups multi-band collisions — and it IS
-    the signature-level Jaccard estimate (bands agree with probability
-    j^(k/bands)). At the defaults (k=32, bands=16, threshold=0.7) a true
-    ≥0.7-Jaccard pair agrees in <2 bands with probability ~3.5e-4
-    (assuming all 16 bands are counted — see below) — the accepted recall
-    cost for not shipping boilerplate-heavy texts to the verify stage; set
-    to 1 to disable. Pairs that reach verify are gated by exact Jaccard
-    exactly as before, so precision is unchanged.
-
-    Interaction with `max_bucket`: collisions are counted only among bands
-    whose bucket survived the size cap, so a pair whose agreeing bands
-    mostly landed in oversized (dropped) buckets would otherwise lose
-    evidence it actually has. The prefilter therefore lowers each pair's
-    required agreement by the EXACT number of agreements the cap hid — the
-    count of bands where both members share the same capped bucket (a join
-    of the dropped-band rows against the already-colliding candidate pairs,
-    never a quadratic expansion) — never below 1. A per-id bound
-    (min of each member's dropped-band counts) was tried first and relaxes
-    far too broadly on boilerplate-heavy corpora, where most docs touch ≥1
-    oversized bucket through unrelated boilerplate. The threshold is also
-    clamped to `bands` so callers passing bands < min_band_agreement still
-    get the one-band behavior instead of zero pairs unconditionally.
+    one-line change in the kernel). Signatures come from
+    `kernel.minhash_signatures_batch`, the function canonicalization uses.
+    Every pair that shares a kept band bucket reaches the exact-Jaccard
+    verify, which alone decides precision.
 
     Oversized band buckets (boilerplate skew) are excluded from the
-    quadratic pair join; with `recover_oversized` their members are
-    diverted to an EXACT content-hash pass — identical texts in a dropped
-    bucket still pair (jaccard 1.0, pairing each doc to the min-id keeper
-    of its hash group, so the recovery emits O(n) rows, never O(n²)).
-    Near-but-not-identical members of a dropped bucket remain the accepted
-    recall loss of the cap — that is the skew/recall trade every web-scale
-    dedup makes."""
+    quadratic pair join; their members are diverted to an EXACT
+    content-hash pass — identical texts in a dropped bucket still pair
+    (jaccard 1.0, pairing each doc to the min-id keeper of its hash group,
+    so the recovery emits O(n) rows, never O(n²)). Near-but-not-identical
+    members of a dropped bucket remain the accepted recall loss of the
+    cap — that is the skew/recall trade every web-scale dedup makes."""
     _session.ensure_shipped(docs.sparkSession)
 
     bands_schema = T.StructType(
@@ -142,65 +117,24 @@ def minhash_near_dup_pairs(docs: DataFrame, k: int = 32, bands: int = 16,
         from esgkg import kernel
 
         for pdf in batches:
-            rows = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                if not t:
-                    continue
-                sig = kernel.minhash_signature(t, k=k, ngram=shingle)
-                for bi, bh in enumerate(kernel.band_hashes(sig, bands)):
-                    rows.append((int(i), bi, bh))
+            pdf = pdf[pdf["text"].fillna("") != ""]
+            sigs = kernel.minhash_signatures_batch(
+                list(pdf["text"]), k=k, ngram=shingle
+            )
+            rows = [
+                (int(i), bi, bh)
+                for i, sig in zip(pdf["doc_id"], sigs)
+                for bi, bh in enumerate(kernel.band_hashes(sig, bands))
+            ]
             yield pd.DataFrame(rows, columns=["id", "band_id", "band_hash"])
 
     bands_rows = docs.select("doc_id", "text").mapInPandas(
         mk_bands, schema=bands_schema
     )
-    pairs0, dropped = _bucket_pairs(
+    pairs, dropped = _bucket_pairs(
         bands_rows, ["band_id", "band_hash"], max_bucket
     )
-    # the collision count doubles as the signature-agreement prefilter
-    pairs0 = pairs0.groupBy("a", "b").agg(F.count("*").alias("n_bands"))
-    eff_agreement = max(1, min(min_band_agreement, bands))
-    if eff_agreement <= 1:
-        cand = pairs0.select("a", "b")
-    else:
-        # EXACT per-pair relaxation: count only bands where BOTH members sit
-        # in the SAME capped bucket — precisely the agreements the cap could
-        # have hidden. (The earlier min(nd_a, nd_b) over ANY oversized bucket
-        # relaxed the threshold to ~1 for nearly every pair on boilerplate-
-        # heavy corpora, disabling the prefilter exactly where it matters —
-        # round-4 advice.) Never a quadratic expansion: the dropped-band rows
-        # are joined against the ALREADY-COLLIDING candidate pairs (≤ bands
-        # rows per id per side), not against each other; pairs whose every
-        # agreement was dropped stay the accepted recall loss of the cap.
-        # pairs0 feeds both the relaxation join and the final filter —
-        # checkpoint so the quadratic bucket join runs once.
-        pairs0 = pairs0.localCheckpoint(eager=True)
-        shared_dropped = (
-            pairs0.select("a", "b")
-            .join(
-                dropped.select(F.col("id").alias("a"), "band_id", "band_hash"),
-                "a",
-            )
-            .join(
-                dropped.select(F.col("id").alias("b"), "band_id", "band_hash"),
-                ["b", "band_id", "band_hash"],
-            )
-            .groupBy("a", "b")
-            .agg(F.count("*").alias("nd_shared"))
-        )
-        cand = (
-            pairs0.join(shared_dropped, ["a", "b"], "left")
-            .filter(
-                F.col("n_bands")
-                >= F.greatest(
-                    F.lit(1),
-                    F.lit(eff_agreement)
-                    - F.coalesce(F.col("nd_shared"), F.lit(0)),
-                )
-            )
-            .select("a", "b")
-        )
-    cand = cand.join(
+    cand = pairs.distinct().join(
         docs.select(F.col("doc_id").alias("a"), F.col("text").alias("ta")), "a"
     ).join(
         docs.select(F.col("doc_id").alias("b"), F.col("text").alias("tb")), "b"
@@ -229,8 +163,6 @@ def minhash_near_dup_pairs(docs: DataFrame, k: int = 32, bands: int = 16,
         cand.mapInPandas(verify, schema=verify_schema)
         .filter(F.col("jaccard") >= jaccard_threshold)
     )
-    if not recover_oversized:
-        return verified
     dd = docs.select(
         F.col("doc_id").alias("id"), F.md5(F.col("text")).alias("h")
     ).join(dropped.select("id").distinct(), "id")
@@ -254,16 +186,21 @@ def minhash_near_dup_pairs(docs: DataFrame, k: int = 32, bands: int = 16,
 
 
 def minhash_dedup_components(docs: DataFrame, **kw) -> DataFrame:
-    """Near-dup clusters: (id, cluster_id) via connected components over the
-    verified pair graph (cluster representative = min id)."""
+    """Near-dup clusters: (doc_id, cluster_id) via connected components over
+    the verified pair graph (cluster representative = the numerically
+    smallest doc_id; the union-find runs on string ids, so its own
+    representative is only a component label)."""
     pairs = minhash_near_dup_pairs(docs, **kw).select(
         F.col("a").cast("string").alias("a"),
         F.col("b").cast("string").alias("b"),
     )
-    comp = canon.connected_components(pairs)
+    comp = canon.connected_components(pairs).select(
+        F.col("surface").cast("long").alias("doc_id"), "canonical"
+    )
     return comp.select(
-        F.col("surface").cast("long").alias("doc_id"),
-        F.col("canonical").cast("long").alias("cluster_id"),
+        "doc_id",
+        F.min("doc_id").over(Window.partitionBy("canonical"))
+        .alias("cluster_id"),
     )
 
 

@@ -5,10 +5,12 @@ with typed metadata, processed by Arrow-batched pandas UDFs over mapInPandas.
 GIF (stdlib LZW + palette, first frame) — pure stdlib+numpy — and parses
 dimensions from the JPEG SOF header and the WebP VP8/VP8L/VP8X chunk
 headers; formats beyond that raise NotImplementedError (no image/audio
-libraries in this container), and `fake=True` selects a deterministic
-synthetic decoder for opaque test payloads. Everything Spark-side — schema, partitioning, UDF
-signature, Arrow batch shape — is real and tested; swapping in PIL/librosa
-is a one-function change.
+libraries in this container). The `extract_*` operators pick the decoder
+per row: rows whose `meta['codec']` is 'fake' (the opaque payloads of
+`synth_media`) go through a deterministic synthetic decoder, every other
+row through the native one. Everything Spark-side — schema, partitioning,
+UDF signature, Arrow batch shape — is real and tested; swapping in
+PIL/librosa is a one-function change.
 """
 
 from __future__ import annotations
@@ -270,7 +272,7 @@ def _synth_real_table(spark: SparkSession, n: int, payload_fn,
 
 def synth_real_media(spark: SparkSession, n: int) -> DataFrame:
     """Deterministic REAL-format media table (synth_real_payload BMP/PNG/
-    JPEG/GIF/WebP round-robin) — the fake=False counterpart of
+    JPEG/GIF/WebP round-robin) — the natively decoded counterpart of
     `synth_media`, so externally-checked artifacts exercise the native
     decoders, not just the synthetic stand-in. Ids start at 1000."""
     return _synth_real_table(spark, n, synth_real_payload, "image", 1000)
@@ -881,10 +883,9 @@ def synth_real_audio(spark: SparkSession, n: int) -> DataFrame:
     return _synth_real_table(spark, n, synth_real_audio_payload, "audio", 2000)
 
 
-def extract_audio_features(media: DataFrame,
-                           fake: bool = True) -> DataFrame:
+def extract_audio_features(media: DataFrame) -> DataFrame:
     """media → per-item decoded audio features (`decode_audio`)."""
-    return _extract(media, decode_audio, AUDIO_FEATURES_SCHEMA, fake)
+    return _extract(media, decode_audio, AUDIO_FEATURES_SCHEMA)
 
 
 VIDEO_FEATURES_SCHEMA = T.StructType(
@@ -1045,31 +1046,31 @@ def synth_real_video(spark: SparkSession, n: int) -> DataFrame:
     return _synth_real_table(spark, n, synth_real_video_payload, "video", 3000)
 
 
-def extract_video_features(media: DataFrame,
-                           fake: bool = True) -> DataFrame:
+def extract_video_features(media: DataFrame) -> DataFrame:
     """media → per-item video container metadata (`decode_video`)."""
-    return _extract(media, decode_video, VIDEO_FEATURES_SCHEMA, fake)
+    return _extract(media, decode_video, VIDEO_FEATURES_SCHEMA)
 
 
-def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """media → per-item decoded image features (`decode_image`)."""
-    return _extract(media, decode_image, FEATURES_SCHEMA, fake)
+    return _extract(media, decode_image, FEATURES_SCHEMA)
 
 
-def _extract(media: DataFrame, decode, schema: T.StructType,
-             fake: bool) -> DataFrame:
+def _extract(media: DataFrame, decode, schema: T.StructType) -> DataFrame:
     """The per-row Arrow loop behind the three extract_* operators: one
     output row (media_id, kind, *decode(payload), n_bytes) per media row,
-    a NULL payload decoding as empty bytes."""
+    a NULL payload decoding as empty bytes. A row whose meta codec is
+    'fake' takes the synthetic decoder; every other row the native one."""
     _session.ensure_shipped(media.sparkSession)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
+            for mid, kind, payload, meta in zip(
+                pdf["media_id"], pdf["kind"], pdf["payload"], pdf["meta"]
             ):
                 b = bytes(payload) if payload is not None else b""
+                fake = dict(meta or {}).get("codec") == "fake"
                 rows.append((int(mid), kind, *decode(b, fake=fake), len(b)))
             yield pd.DataFrame(rows, columns=schema.fieldNames())
 

@@ -278,10 +278,9 @@ def test_clean_text_optimized_identical():
 
 
 def test_extract_triples_matches_process_text_contract():
-    # round-6 optimization guard: the memoized findall fast path of
     # extract_triples must emit exactly the triples derivable from the
     # process_text contract (same rows, same order), including on repeated
-    # sentences that exercise the memo-hit path.
+    # sentences and pages.
     def reference(text, url):
         ex = kernel.get_extractor()
         res = ex.process_text(text)
@@ -306,57 +305,13 @@ def test_extract_triples_matches_process_text_contract():
         kernel.page_text(synth.make_page(i, 42, n_groups)["html"])
         for i in range(300)
     ]
-    # adversarial: duplicated sentences within and across pages (memo hits),
+    # adversarial: duplicated sentences within and across pages,
     # duplicate triples inside one page, and an empty page
     texts += [texts[0], texts[1] + texts[1], ""]
-    kernel._SENT_MEMO.clear()
     for i, t in enumerate(texts):
         url = f"u://{i}"
         assert kernel.extract_triples(t, url) == reference(t, url)
-    # second pass: every sentence now memoized — results must not change
+    # second pass: results must not change
     for i, t in enumerate(texts):
         url = f"u://{i}"
         assert kernel.extract_triples(t, url) == reference(t, url)
-
-
-def test_extract_sentence_matches_match_object_path():
-    # the findall fast path must agree with Extractor.entities/relations
-    # (Match-object API) per sentence, label included
-    ex = kernel.get_extractor()
-    n_groups = synth.default_groups(3_000_000)
-    sents = []
-    for i in range(200):
-        t = kernel.page_text(synth.make_page(i, 42, n_groups)["html"])
-        sents.extend(kernel.split_sentences(t))
-    assert sents
-    for s in sents:
-        ents, rels = kernel._extract_sentence(ex, s)
-        assert list(ents) == [
-            (surface, label) for surface, label, _, _ in ex.entities(s)
-        ]
-        assert list(rels) == ex.relations(s)
-
-
-def test_sent_memo_bounded():
-    # once full, the memo must stop growing but results stay correct
-    old_max = kernel._SENT_MEMO_MAX
-    try:
-        kernel._SENT_MEMO.clear()
-        kernel._SENT_MEMO_MAX = 5
-        outs = []
-        for i in range(30):
-            p = synth.make_page(i)
-            outs.append(
-                kernel.extract_triples(kernel.page_text(p["html"]), p["url"])
-            )
-        assert len(kernel._SENT_MEMO) <= 5
-    finally:
-        kernel._SENT_MEMO_MAX = old_max
-        kernel._SENT_MEMO.clear()
-    # identical output with the memo disabled entirely
-    for i, out in enumerate(list(range(30))):
-        p = synth.make_page(i)
-        assert (
-            kernel.extract_triples(kernel.page_text(p["html"]), p["url"])
-            == outs[i]
-        )

@@ -267,6 +267,38 @@ def test_catalog_merge_upsert_semantics(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_catalog_merge_updates_win_across_partitions(spark):
+    """New rows win on every colliding key however both sides are
+    partitioned: the merge must not depend on which duplicate a shuffle
+    happens to keep."""
+    from esgkg.io import ParquetCatalog
+
+    base = tempfile.mkdtemp(prefix="esgkg_merge_parts_")
+    conf = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(conf)
+    try:
+        # one read partition per parquet file, so the stored side is split too
+        spark.conf.set(conf, "1k")
+        cat = ParquetCatalog(base)
+        old = spark.createDataFrame(
+            [(i, "old") for i in range(300)], "k long, v string"
+        )
+        cat.write(old.repartition(4), "t")
+        assert cat.read(spark, "t").rdd.getNumPartitions() >= 4
+        updates = spark.createDataFrame(
+            [(i, "new") for i in range(100, 400)], "k long, v string"
+        ).repartition(5)
+        cat.merge(spark, updates, "t", keys=["k"])
+        rows = cat.read(spark, "t").collect()
+        got = {r.k: r.v for r in rows}
+        assert len(rows) == len(got) == 400
+        assert all(got[i] == "new" for i in range(100, 400))
+        assert all(got[i] == "old" for i in range(100))
+    finally:
+        spark.conf.set(conf, saved)
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_manifest_resume_after_partial_run(spark):
     """Kill-between-stages semantics: commit only the first stages, then run
     the full pipeline — committed stages must be skipped (their output files

@@ -159,6 +159,20 @@ def test_exact_and_minhash_dedup(spark):
     assert clusters[0] == clusters[1] == clusters[2]
 
 
+def test_minhash_dedup_components_numeric_min_representative(spark):
+    """The cluster representative is the numerically smallest doc_id, not
+    the smallest id as a string ("10" < "9")."""
+    text = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(9, text), (10, text), (11, text)], "doc_id long, text string"
+    )
+    clusters = {
+        r.doc_id: r.cluster_id
+        for r in dedup.minhash_dedup_components(docs).collect()
+    }
+    assert clusters == {9: 9, 10: 9, 11: 9}
+
+
 def test_simhash_near_dup(spark):
     rows = [
         (0, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
@@ -227,7 +241,7 @@ def test_textstats_empty_text_has_no_tokens(spark):
 
 def test_multimodal_plumbing(spark):
     media = multimodal.synth_media(spark, 60)
-    feats = multimodal.extract_features(media, fake=True)
+    feats = multimodal.extract_features(media)
     rows = feats.collect()
     assert len(rows) == 60
     assert all(64 <= r.width < 256 for r in rows)
@@ -345,7 +359,7 @@ def test_ivf_trained_centroids_recall_and_exactness(spark):
 def test_decode_image_real_bmp_and_png(spark):
     """The native decoders (round-3 verdict item 5): a hand-built 24-bit BMP
     and an 8-bit PNG decode to known (width, height, mean_luma); the Spark
-    feature-extraction path runs them via fake=False."""
+    feature-extraction path runs them on rows whose codec is not 'fake'."""
     import struct
     import zlib
 
@@ -384,13 +398,39 @@ def test_decode_image_real_bmp_and_png(spark):
         multimodal.MEDIA_SCHEMA,
     )
     got = {r.media_id: r for r in
-           multimodal.extract_features(media, fake=False).collect()}
+           multimodal.extract_features(media).collect()}
     assert (got[1].width, got[1].height) == (2, 2)
     assert abs(got[1].mean_luma - 0.5) < 1e-9
     assert (got[2].width, got[2].height) == (2, 1)
     # unknown formats still fail loud (TIFF magic has no native parse)
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"II*\x00" + bytes(16), fake=False)
+
+
+def test_extract_features_default_decodes_real_media(spark):
+    """Called without options, the extract_* operators decode real media
+    natively and keep the synthetic decoder for the 'fake' codec rows."""
+    got = {r.media_id: (r.width, r.height) for r in
+           multimodal.extract_features(
+               multimodal.synth_real_media(spark, 3)).collect()}
+    assert got == {1000: (4, 3), 1001: (5, 4), 1002: (6, 5)}
+    audio = multimodal.synth_real_audio(spark, 2)
+    want = {r.media_id: multimodal.decode_audio(bytes(r.payload))
+            for r in audio.collect()}
+    assert {r.media_id: (r.sample_rate, r.n_channels, r.duration_sec, r.rms)
+            for r in multimodal.extract_audio_features(audio).collect()
+            } == want
+    video = multimodal.synth_real_video(spark, 2)
+    want = {r.media_id: multimodal.decode_video(bytes(r.payload))
+            for r in video.collect()}
+    assert {r.media_id: (r.width, r.height, r.duration_sec)
+            for r in multimodal.extract_video_features(video).collect()
+            } == want
+    fake = multimodal.synth_media(spark, 6)
+    want = {r.media_id: multimodal.decode_image(bytes(r.payload), fake=True)
+            for r in fake.collect()}
+    assert {r.media_id: (r.width, r.height, r.mean_luma)
+            for r in multimodal.extract_features(fake).collect()} == want
 
 
 def test_decode_image_palette_png():
@@ -461,7 +501,7 @@ def test_decode_image_jpeg_dims_and_png_truncation(spark):
         [(7, "image", bytearray(jpeg), {"codec": "jpeg"})],
         multimodal.MEDIA_SCHEMA,
     )
-    row = multimodal.extract_features(media, fake=False).collect()[0]
+    row = multimodal.extract_features(media).collect()[0]
     assert (row.width, row.height, row.mean_luma) == (9, 7, None)
     # failure contracts
     with pytest.raises(ValueError, match="without SOF"):
@@ -633,7 +673,7 @@ def test_decode_audio_wav_and_mp3(spark):
         multimodal.MEDIA_SCHEMA,
     )
     got = {r.media_id: r for r in
-           multimodal.extract_audio_features(media, fake=False).collect()}
+           multimodal.extract_audio_features(media).collect()}
     assert (got[1].sample_rate, got[1].n_channels) == (8000, 1)
     assert abs(got[1].rms - 0.5) < 1e-9
     assert (got[2].sample_rate, got[2].duration_sec, got[2].rms) == (
@@ -702,7 +742,7 @@ def test_decode_video_mp4_metadata(spark):
 
     got = {r.media_id: r for r in
            extract_video_features(
-               synth_real_video(spark, 10), fake=False).collect()}
+               synth_real_video(spark, 10)).collect()}
     assert (got[3004].width, got[3004].height) == (None, None)
     assert abs(got[3004].duration_sec - 1.4) < 1e-9
     assert (got[3000].width, got[3000].height) == (160, 120)

@@ -323,15 +323,6 @@ def test_minhash_oversized_bucket_exact_recovery(spark):
     # recovery is linear, not quadratic: no (1, 2)-style non-keeper pairs
     # beyond what small buckets legitimately emit
     assert len(got) < 500
-    # without recovery the boilerplate is lost entirely
-    got_off = {
-        (r.a, r.b)
-        for r in dedup.minhash_near_dup_pairs(
-            docs, shingle=5, jaccard_threshold=0.6, max_bucket=32,
-            recover_oversized=False,
-        ).collect()
-    }
-    assert not any(a < 200 and b < 200 for a, b in got_off)
 
 
 def test_materialize_closed_world_equals_join_path(spark):
@@ -439,9 +430,9 @@ def test_canon_oversized_bucket_whitespace_recovery(spark):
 
 
 def test_minhash_band_agreement_prefilter(spark):
-    """The signature-agreement prefilter (default ≥2 agreeing bands) must
-    not change the verified pair set on a near-dup fixture — it only stops
-    sub-threshold candidates from shipping their texts to verify."""
+    """A near-dup pair is found and an unrelated document pairs with
+    nothing: every band collision reaches the exact-Jaccard verify, which
+    alone decides the pair set."""
     rows = [
         (0, "adaptive query execution re-plans the physical stage graph " * 8),
         (1, "adaptive query execution re-plans the physical stage graphs " * 8),
@@ -450,47 +441,35 @@ def test_minhash_band_agreement_prefilter(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     kw = dict(shingle=5, jaccard_threshold=0.7)
     strict = {(r.a, r.b) for r in dedup.minhash_near_dup_pairs(docs, **kw).collect()}
-    loose = {
-        (r.a, r.b)
-        for r in dedup.minhash_near_dup_pairs(
-            docs, min_band_agreement=1, **kw
-        ).collect()
-    }
-    assert strict == loose
     assert (0, 1) in strict and not any(2 in p for p in strict)
 
 
 def test_minhash_prefilter_clamps_to_band_count(spark):
-    """bands < min_band_agreement must clamp to one-band behavior, not drop
-    every pair unconditionally (round-3 advice)."""
+    """With a single band, one collision is enough: an identical pair is
+    found, not dropped for lack of a second agreeing band."""
     # identical texts: with bands=1 a collision needs the FULL signature to
-    # agree, so only an identical pair reliably lands in one bucket — which
-    # is exactly the case the unclamped filter (n_bands >= 2 > bands) lost
+    # agree, so only an identical pair reliably lands in one bucket
     text = "adaptive query execution re-plans the physical stage graph " * 8
     docs = spark.createDataFrame(
         [(0, text), (1, text)], "doc_id long, text string"
     )
     pairs = dedup.minhash_near_dup_pairs(
         docs, bands=1, k=32, shingle=5, jaccard_threshold=0.7,
-        min_band_agreement=2,
     ).collect()
     assert {(r.a, r.b) for r in pairs} == {(0, 1)}
 
 
 def test_minhash_prefilter_capped_bucket_interaction(spark):
     """A true near-dup pair whose agreeing bands mostly land in oversized
-    (capped) buckets must still reach verify: the prefilter lowers the
-    required agreement by the bands the cap could have hidden (round-3
-    advice — previously such pairs were silently dropped at the default
-    min_band_agreement=2)."""
+    (capped) buckets must still reach verify through the one band bucket
+    that survives the cap."""
     base = "the same boilerplate page body repeated for web dedup tests " * 10
     boiler = [(i, base) for i in range(40)]
     # chosen so the pair's minhash signatures are IDENTICAL to each other
     # but differ from the boilerplate's in exactly ONE of 16 bands (verified
     # when the fixture was built): 15 of their 16 agreeing bands land in the
     # oversized boilerplate buckets, so only 1 agreement survives the cap —
-    # below the old unconditional >=2 filter — and the texts differ, so the
-    # exact-recovery pass cannot rescue them either
+    # and the texts differ, so the exact-recovery pass cannot rescue them
     near = [(900, base + " aa"), (901, base + " ab")]
     docs = spark.createDataFrame(boiler + near, "doc_id long, text string")
     pairs = dedup.minhash_near_dup_pairs(
