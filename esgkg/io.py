@@ -4,7 +4,8 @@ The target layout is Iceberg (`pages` partitioned by days(warc_ts), `triples`
 by pred, `nodes`/`edges` bucketed by entity hash) with MERGE-upsert. The
 sandbox's pyspark 4.1.2 has no iceberg-spark-runtime jar and no network, so
 this adapter exposes one API with a parquet backend that preserves the same
-layouts; MERGE is emulated as union + dropDuplicates + partition overwrite.
+layouts; MERGE is emulated as updates ∪ (current anti-join updates on the
+keys), then an overwrite.
 Swapping in the Iceberg backend is a config change, not a code change.
 """
 
@@ -25,7 +26,7 @@ class ParquetCatalog:
     def path(self, name: str) -> str:
         return os.path.join(self.base, name)
 
-    def exists(self, spark: SparkSession, name: str) -> bool:
+    def exists(self, name: str) -> bool:
         """True iff a Spark write of `name` committed: its job-commit
         marker `_SUCCESS` is present. Part files without it are a write
         that was killed before its commit."""
@@ -97,7 +98,7 @@ class ParquetCatalog:
         (Iceberg: MERGE INTO name USING updates ON keys; reference semantics:
         Neo4j MERGE, /root/reference/src/knowledge_graph/neo4j_manager.py:62,91).
         Every row of `updates` is kept, so it should hold each key once."""
-        if not self.exists(spark, name):
+        if not self.exists(name):
             self.write(updates, name, partition_by)
             return
         current = self.read(spark, name)

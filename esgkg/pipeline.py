@@ -162,12 +162,16 @@ def build_kg(
     # broadcast join against the checkpointed map over the linked scratch,
     # re-derived per consumer as one codegen'd scan+join — materializing it
     # was a second full-width write whose cost did not scale with cores.
+    # triples and edges are stored partitioned, and a partitioned table
+    # reads back with its partition column last: select the stage's own
+    # column order, so both modes return the same columns (a no-op project
+    # in bench mode)
     triples = keep(
         "triples",
         lambda: canon.rewrite_triples(linked, cmap),
         "lazy",
         partition_by=["pred"],
-    )
+    ).select(*canon.TRIPLE_COLUMNS)
 
     # Nodes are a vocabulary-sized join chain over surface_stats (pytest-
     # asserted equal to materialize_nodes(triples)); with assume_closed the
@@ -184,7 +188,8 @@ def build_kg(
             lambda: graph.materialize_edges(triples, spark, assume_closed=True),
             "scratch", ["relation"],
         )
-        nodes, edges = f_nodes.result(), f_edges.result()
+        nodes = f_nodes.result()
+        edges = f_edges.result().select(*graph.EDGE_COLUMNS)
     stats.unpersist()
     predicted = keep(
         "predicted_links", lambda: complete.adamic_adar(edges, top_k), "lazy",

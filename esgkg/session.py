@@ -1,9 +1,18 @@
-"""SparkSession factory + package shipping for UDF workers.
+"""SparkSession factory, package shipping for UDF workers, and the KG
+tail's broadcast gate.
 
 Local-mode tuning per the scale design (SURVEY.md §4): AQE on (runtime
 re-plan + skew-join split), shuffle partitions sized to cores (not the
-200 default), Arrow enabled for all pandas UDF stages. On a real cluster
-the same factory applies — only master/memory change.
+200 default), Arrow enabled for all pandas UDF stages, and a driver heap
+sized to the host. On a real cluster the same factory applies — only
+master/memory change.
+
+Broadcast or shuffle: every size-gated join of the KG tail (the canonical
+map lookups, the J3 name dimension, both Adamic-Adar self-joins) asks
+`broadcastable` on the driver whether its small side has at most
+BROADCAST_ROWS rows, and broadcasts it by hint if so, whatever its bytes.
+A side the gate leaves to a shuffle may still be broadcast by AQE at run
+time when it turns out smaller than autoBroadcastJoinThreshold.
 """
 
 from __future__ import annotations
@@ -12,9 +21,28 @@ import os
 import zipfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PKG_DIR = Path(__file__).resolve().parent
+
+# row bound of every size-gated join in the KG tail: a small side of at
+# most this many rows is broadcast, a larger one is shuffled
+BROADCAST_ROWS = 2_000_000
+
+
+def broadcastable(df: DataFrame) -> bool:
+    """True iff `df` has at most BROADCAST_ROWS rows, answered by one
+    limit(n + 1).count() probe, so a web-scale side is never counted in
+    full. Reads BROADCAST_ROWS when called."""
+    return df.limit(BROADCAST_ROWS + 1).count() <= BROADCAST_ROWS
+
+
+def default_driver_mem() -> str:
+    """Driver heap for this host: a quarter of MemTotal, at most 4 GiB."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f
+                  if line.startswith("MemTotal:"))
+    return f"{min(kb // 4 // 1024, 4096)}m"
 
 
 def _pkg_blobs() -> tuple[str, list[tuple[str, bytes]]]:
@@ -97,7 +125,10 @@ def get_spark(
             if os.path.isdir("/dev/shm")
             else "/tmp/spark-local",
         )
-        .config("spark.driver.memory", os.environ.get("ESGKG_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("ESGKG_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

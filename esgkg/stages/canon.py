@@ -7,19 +7,21 @@ identity, /root/reference/src/knowledge_graph/ontology.py:91). The build
 target upgrades this to surface-form merging at web scale:
 
 1. **C1 blocking** — per-surface MinHash signatures (deterministic universal
-   hashing, esgkg.kernel.minhash_signature) split into LSH bands; band
-   buckets become join keys. Skew control: bucket sizes are bounded by
-   `max_bucket` (oversized buckets are dropped and counted — hub surfaces
-   like boilerplate strings would otherwise produce quadratic pair blowup),
-   and the pair self-join runs under AQE skew-join.
+   hashing, esgkg.kernel.minhash_signatures_batch) split into LSH bands;
+   band buckets become join keys. Skew control: bucket sizes are bounded by
+   MAX_BUCKET (oversized buckets are dropped — hub surfaces like
+   boilerplate strings would otherwise produce quadratic pair blowup), and
+   the pair self-join runs under AQE skew-join.
 2. **C2 verify** — exact char-3gram Jaccard AND edit similarity on
    candidate pairs (vectorized pandas UDF), threshold filter.
-3. **C3 connected components** — driver union-find for a small pair graph,
-   else min-label propagation as a DataFrame self-join fixpoint run until no
-   label changes, localCheckpoint every CHECKPOINT_EVERY rounds to cut
-   lineage.
-4. **C4 rewrite** — triples joined against the canonical map on subj and obj
-   (broadcast when the map is small, shuffle hash otherwise).
+3. **C3 connected components** — driver union-find for a pair graph of at
+   most PAIR_THRESHOLD edges, else min-label propagation as a DataFrame
+   self-join fixpoint run until no label changes, localCheckpoint every
+   CHECKPOINT_EVERY rounds to cut lineage.
+4. **C4 rewrite** — `map_surfaces` replaces columns through the canonical
+   map (left join, identity fallback): subj and obj of the triples here,
+   the node names in `graph.materialize_nodes_from_stats`. The map is
+   broadcast while `session.broadcastable` says it is small, else shuffled.
 """
 
 from __future__ import annotations
@@ -63,6 +65,14 @@ EDIT_THRESHOLD = 0.88
 # distributed CC fixpoint: cut lineage and test for convergence every
 # CHECKPOINT_EVERY rounds
 CHECKPOINT_EVERY = 3
+# LSH buckets with more members are dropped (skew guard: a bucket of n
+# surfaces emits n² candidate pairs)
+MAX_BUCKET = 64
+# verified pair graphs of at most this many edges finish with the driver
+# union-find; larger ones take the distributed CC fixpoint
+PAIR_THRESHOLD = 200_000
+# column order of the canonical triples table
+TRIPLE_COLUMNS = ("subj", "pred", "obj", "url", "confidence")
 
 _BANDS_SCHEMA = T.StructType(
     [
@@ -94,7 +104,7 @@ def _min_label_components(pairs) -> dict[str, str]:
     return {n: find(n) for n in parent}
 
 
-def candidate_pairs(surfaces: DataFrame, max_bucket: int = 64,
+def candidate_pairs(surfaces: DataFrame,
                     assume_distinct: bool = False) -> DataFrame:
     """LSH candidate pairs (a < b) over the `surface` column, already
     filtered by edit similarity ≥ EDIT_THRESHOLD.
@@ -102,7 +112,7 @@ def candidate_pairs(surfaces: DataFrame, max_bucket: int = 64,
     Banding: per-surface MinHash signatures split into BANDS band hashes
     (mapInPandas over the batch-vectorized kernel). One shuffle then groups
     band rows into buckets (collect_list), the size cap drops buckets over
-    `max_bucket` (skew guard), and pairs are emitted MAP-SIDE from each
+    MAX_BUCKET (skew guard), and pairs are emitted MAP-SIDE from each
     bucket array with higher-order functions — no band self-join, no second
     pass over the band table (the round-1 shape needed a size-histogram
     groupBy + a join + a sort-merge self-join over the same rows, three
@@ -158,7 +168,7 @@ def candidate_pairs(surfaces: DataFrame, max_bucket: int = 64,
     buckets = (
         b.groupBy("band_id", "band_hash")
         .agg(F.sort_array(F.collect_list("surface")).alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
+        .filter((F.size("ms") >= 2) & (F.size("ms") <= MAX_BUCKET))
     )
     ms = F.col("ms")
     pair_arrays = F.transform(
@@ -232,8 +242,7 @@ def verify_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(pairs: DataFrame,
-                         small_threshold: int = 200_000) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Min-label propagation over (a, b) edges → (surface, canonical).
 
     canonical = lexicographically smallest surface in the component
@@ -241,7 +250,7 @@ def connected_components(pairs: DataFrame,
 
     Scale-adaptive: a verified near-dup pair graph is usually orders of
     magnitude smaller than the corpus, so when it fits comfortably on the
-    driver (≤ small_threshold edges, probed with limit(threshold+1)) we run
+    driver (≤ PAIR_THRESHOLD edges, probed with limit(threshold+1)) we run
     exact union-find locally — none of the iterative-join latency. Above it
     the distributed fixpoint runs: each round is one join + one groupBy
     (both on the node key, so AQE reuses the partitioning), labels move one
@@ -251,8 +260,8 @@ def connected_components(pairs: DataFrame,
     spark = pairs.sparkSession
     # single job: grab up to threshold+1 rows; only fall back to the
     # distributed fixpoint when the pair graph is genuinely large
-    head = pairs.limit(small_threshold + 1).collect()
-    if len(head) <= small_threshold:
+    head = pairs.limit(PAIR_THRESHOLD + 1).collect()
+    if len(head) <= PAIR_THRESHOLD:
         LAST_CC_STRATEGY = "local"
         out = sorted(_min_label_components(head).items())
         return spark.createDataFrame(out, "surface string, canonical string")
@@ -291,8 +300,7 @@ def connected_components(pairs: DataFrame,
     )
 
 
-def canonical_map_local(surfaces: list[str],
-                        max_bucket: int = 64) -> dict[str, str]:
+def canonical_map_local(surfaces: list[str]) -> dict[str, str]:
     """Driver-side canonical map over a small distinct-surface set — the
     exact same LSH banding + whitespace recovery + conjunctive verification
     + min-label union-find the distributed path computes, byte-for-byte
@@ -308,7 +316,7 @@ def canonical_map_local(surfaces: list[str],
             buckets[(bi, bh)].append(s)
     cands: set[tuple[str, str]] = set()
     for members in buckets.values():
-        if len(members) <= max_bucket:
+        if len(members) <= MAX_BUCKET:
             cands.update(itertools.combinations(sorted(set(members)), 2))
     # whitespace-normalized exact recovery, as in candidate_pairs
     norm_groups: dict[str, list[str]] = defaultdict(list)
@@ -325,10 +333,9 @@ def canonical_map_local(surfaces: list[str],
     return {s: comp.get(s, s) for s in surfaces}
 
 
-def canonical_map(surfaces: DataFrame, max_bucket: int = 64,
+def canonical_map(surfaces: DataFrame,
                   exclude_exact: list[str] | None = None,
                   driver_threshold: int = 4_096,
-                  pair_threshold: int = 200_000,
                   assume_distinct: bool = False) -> DataFrame:
     """`surface` column → (surface, canonical) for every input surface
     (identity for singletons).
@@ -352,7 +359,7 @@ def canonical_map(surfaces: DataFrame, max_bucket: int = 64,
        scaling-gate tail.
     2. otherwise → DISTRIBUTED banding + verification (mapInPandas, scales
        with cores); the verified near-dup pair graph is orders of magnitude
-       smaller than the vocabulary, so ≤ `pair_threshold` pairs finish with
+       smaller than the vocabulary, so ≤ PAIR_THRESHOLD pairs finish with
        a driver union-find (exact, no iterative-join latency), and only a
        genuinely huge pair graph takes the distributed CC fixpoint.
 
@@ -376,7 +383,7 @@ def canonical_map(surfaces: DataFrame, max_bucket: int = 64,
         LAST_STRATEGY = "driver"
         excl = set(exclude_exact or ())
         pool_local = [r[0] for r in head if r[0] and r[0] not in excl]
-        cm = canonical_map_local(pool_local, max_bucket)
+        cm = canonical_map_local(pool_local)
         rows = sorted(
             (s, cm.get(s, s)) for s in (r[0] for r in head) if s is not None
         )
@@ -388,15 +395,14 @@ def canonical_map(surfaces: DataFrame, max_bucket: int = 64,
     # verified pair set is collected exactly once by connected_components'
     # size probe, so no intermediate materialization is needed on the
     # dist_pairs rung (the common one). Only the rare dist_cc rung
-    # (> pair_threshold verified pairs) re-evaluates the chain.
+    # (> PAIR_THRESHOLD verified pairs) re-evaluates the chain.
     pairs = verify_pairs(
-        candidate_pairs(pool, max_bucket=max_bucket,
-                        assume_distinct=assume_distinct)
+        candidate_pairs(pool, assume_distinct=assume_distinct)
     ).select("a", "b")
-    comp = connected_components(pairs, small_threshold=pair_threshold)
+    comp = connected_components(pairs)
     local_cc = LAST_CC_STRATEGY == "local"
     LAST_STRATEGY = "dist_pairs" if local_cc else "dist_cc"
-    # the union-find result is tiny (≤ pair_threshold nodes) → broadcast it
+    # the union-find result is tiny (≤ PAIR_THRESHOLD pairs) → broadcast it
     # into the identity join over the full vocabulary
     comp = F.broadcast(comp) if local_cc else comp
     return (
@@ -408,39 +414,35 @@ def canonical_map(surfaces: DataFrame, max_bucket: int = 64,
     )
 
 
-def rewrite_triples(triples: DataFrame, canon: DataFrame,
-                    broadcast_threshold: int = 2_000_000) -> DataFrame:
-    """C4: rewrite subj and obj through the canonical map (left joins keep
-    unmapped surfaces as-is).
+def map_surfaces(df: DataFrame, canon: DataFrame,
+                 cols: list[str]) -> DataFrame:
+    """Replace each of `cols` through the canonical map `canon` (surface,
+    canonical): left joins, so unmapped values stay as they are; the
+    columns keep their order.
 
-    The map is one row per DISTINCT corpus surface — unbounded at web scale —
-    so it is broadcast only while it is genuinely small (size-gated by a
-    single cheap count; the map is materialized/persisted by the pipeline
-    before this stage). Above the threshold both lookups run as shuffle hash
-    joins on the surface key; AQE splits residual skew."""
-    n_map = canon.limit(broadcast_threshold + 1).count()
-    c = F.broadcast(canon) if n_map <= broadcast_threshold else canon
-    out = (
-        triples.join(
-            c.withColumnRenamed("surface", "subj").withColumnRenamed(
-                "canonical", "subj_canon"
+    The map is one row per DISTINCT corpus surface — unbounded at web scale
+    — so it is broadcast only while `session.broadcastable` says it is
+    small, one probe for all of `cols` (the pipeline checkpoints the map
+    before this). Above the bound every lookup is a shuffle join on the
+    surface key; AQE splits residual skew."""
+    c = F.broadcast(canon) if _session.broadcastable(canon) else canon
+    out = df
+    for col in cols:
+        out = out.join(
+            c.withColumnRenamed("surface", col).withColumnRenamed(
+                "canonical", f"{col}_canon"
             ),
-            "subj",
+            col,
             "left",
         )
-        .join(
-            c.withColumnRenamed("surface", "obj").withColumnRenamed(
-                "canonical", "obj_canon"
-            ),
-            "obj",
-            "left",
-        )
-        .select(
-            F.coalesce("subj_canon", "subj").alias("subj"),
-            "pred",
-            F.coalesce("obj_canon", "obj").alias("obj"),
-            "url",
-            "confidence",
-        )
+    return out.select(*(
+        F.coalesce(f"{col}_canon", col).alias(col) if col in cols else col
+        for col in df.columns
+    ))
+
+
+def rewrite_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:
+    """C4: rewrite subj and obj through the canonical map."""
+    return map_surfaces(triples, canon, ["subj", "obj"]).select(
+        *TRIPLE_COLUMNS
     )
-    return out

@@ -14,7 +14,9 @@ over the materialized edge table:
 Scale notes: the self-join key is the shared neighbor z; hub vertices are the
 skew risk, so z-degree is capped (`MAX_DEGREE`) — standard practice since a
 z with degree d contributes d² candidate pairs while its 1/ln(d) weight is
-negligible. AQE skew-join covers residual imbalance.
+negligible. AQE skew-join covers residual imbalance. Both Adamic-Adar
+scorers broadcast while `session.broadcastable` says their neighbor or edge
+table is small, and shuffle above that.
 """
 
 from __future__ import annotations
@@ -22,11 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import session as _session
+
 # hub cap of every Adamic-Adar scorer: a shared vertex of higher degree is
 # dropped (d² candidate pairs for a 1/ln(d) weight)
 MAX_DEGREE = 1000
-# neighbor/edge rows above which the triangle self-join stops broadcasting
-BROADCAST_THRESHOLD = 2_000_000
 # bipartite pairs need at least this many shared right-side neighbors
 MIN_SHARED = 2
 # relations per source of the U4 stand-in (the reference's top_k)
@@ -42,13 +44,13 @@ def undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-def adamic_adar(edges: DataFrame, top_k: int = 10,
-                broadcast_threshold: int = BROADCAST_THRESHOLD) -> DataFrame:
+def adamic_adar(edges: DataFrame, top_k: int = 10) -> DataFrame:
     """(src, dst, common_neighbors, aa_score, prob, rank) — proposed links.
 
-    Size-gated join strategy: below `broadcast_threshold` neighbor rows the
-    triangle self-join broadcasts one side (the explosion stays map-side and
-    the only shuffle is the partially-aggregated groupBy); above it — a
+    Size-gated join strategy: while `session.broadcastable` says the
+    neighbor table is small, the triangle self-join broadcasts one side
+    (the explosion stays map-side and the only shuffle is the
+    partially-aggregated groupBy); above it — a
     web-scale edge table is the whole graph, which must never be shipped to
     every executor — it runs as a repartitioned self-join on the shared
     vertex z with AQE skew-split handling the residual imbalance the
@@ -71,11 +73,10 @@ def adamic_adar(edges: DataFrame, top_k: int = 10,
     # explodes deg² rows per z — per-partition CPU, so spread z rows evenly
     par = edges.sparkSession.sparkContext.defaultParallelism
     nbrs = nbrs.repartition(par).localCheckpoint(eager=True)
-    n_nbrs = nbrs.count()  # cheap: checkpointed one line above
     l = nbrs.alias("l")
     r = (
         F.broadcast(nbrs.alias("r"))
-        if n_nbrs <= broadcast_threshold
+        if _session.broadcastable(nbrs)  # cheap: checkpointed above
         else nbrs.repartition("z").alias("r")
     )
     cand = (
@@ -195,10 +196,11 @@ def bipartite_adamic_adar(edges: DataFrame, left: str,
         .distinct()
         .localCheckpoint(eager=True)
     )
-    n_e = e.count()  # cheap: checkpointed; bounds the deg-table size
+    # cheap: checkpointed; the edge count bounds the deg-table size
+    small = _session.broadcastable(e)
     deg = e.groupBy("p").agg(F.count("*").alias("deg_p"))
     deg = deg.filter((F.col("deg_p") >= 2) & (F.col("deg_p") <= MAX_DEGREE))
-    if n_e <= BROADCAST_THRESHOLD:
+    if small:
         deg = F.broadcast(deg)
     par = edges.sparkSession.sparkContext.defaultParallelism
     ed = e.join(deg, "p").repartition(par, "p")
@@ -211,11 +213,7 @@ def bipartite_adamic_adar(edges: DataFrame, left: str,
     # count as the degree broadcast: above the threshold a partition's
     # build side is no longer provably small, and sort-merge's graceful
     # spill is worth the sorts.
-    r = (
-        ed.hint("shuffle_hash").alias("r")
-        if n_e <= BROADCAST_THRESHOLD
-        else ed.alias("r")
-    )
+    r = ed.hint("shuffle_hash").alias("r") if small else ed.alias("r")
     return (
         l.join(r, (F.col("l.p") == F.col("r.p")) & (F.col("l.c") < F.col("r.c")))
         .select(
@@ -362,8 +360,6 @@ def infer_relations_table(spark, sources: DataFrame) -> DataFrame:
     import pandas as pd
 
     from pyspark.sql import types as T
-
-    from .. import session as _session
 
     _session.ensure_shipped(spark)
     schema = T.StructType(

@@ -11,6 +11,10 @@ Replaces the reference's Neo4j layer
   write reproduces Cypher MATCH-then-MERGE silent-drop semantics
   (neo4j_manager.py:88-92): an edge whose endpoint is missing is dropped.
 
+Size-gated joins: the node build maps raw names through the canonical map
+with `canon.map_surfaces`, and the J3 name dimension is broadcast while
+`session.broadcastable` says the node table is small, shuffled otherwise.
+
 ids are deterministic 64-bit name hashes (stable across runs/executors —
 never monotonically_increasing_id, which is partition-layout dependent).
 
@@ -29,6 +33,11 @@ from pyspark.sql import types as T
 
 from .. import session as _session
 from .. import vocab
+from . import canon
+
+
+# column order of the edges table
+EDGE_COLUMNS = ("src", "dst", "relation", "confidence", "url")
 
 
 def _name_id(col):
@@ -131,22 +140,11 @@ def surface_stats(linked: DataFrame) -> DataFrame:
     )
 
 
-def _canon_lookup(cmap: DataFrame, key: str, out: str,
-                  broadcast_threshold: int) -> DataFrame:
-    c = cmap.withColumnRenamed("surface", key).withColumnRenamed(
-        "canonical", out
-    )
-    n = cmap.limit(broadcast_threshold + 1).count()
-    return F.broadcast(c) if n <= broadcast_threshold else c
-
-
 def materialize_nodes_from_stats(stats: DataFrame, cmap: DataFrame,
-                                 spark: SparkSession,
-                                 broadcast_threshold: int = 2_000_000
-                                 ) -> DataFrame:
+                                 spark: SparkSession) -> DataFrame:
     """Node build from the pre-aggregated `surface_stats` table: map each
-    raw surface through the canonical map (left join, identity fallback —
-    exactly rewrite_triples' lookup), re-aggregate by canonical name, union
+    raw surface through the canonical map (`canon.map_surfaces`, the
+    lookup rewrite_triples runs), re-aggregate by canonical name, union
     the ontology seed, then the node build `materialize_nodes` shares.
     Provably equal to materialize_nodes(rewrite_triples(linked, cmap))
     because max/sum are associative over the per-surface partial aggregates
@@ -154,25 +152,12 @@ def materialize_nodes_from_stats(stats: DataFrame, cmap: DataFrame,
     here touch only vocabulary-sized tables — the corpus-sized work already
     happened in the one surface_stats pass."""
     _session.ensure_shipped(spark)
-    mapped = (
-        stats.join(
-            _canon_lookup(cmap, "name", "canon_name", broadcast_threshold),
-            "name",
-            "left",
-        )
-        .select(
-            F.coalesce("canon_name", "name").alias("name"),
-            "is_inst",
-            "mentions",
-        )
-    )
-    return _nodes(mapped, spark)
+    return _nodes(canon.map_surfaces(stats, cmap, ["name"]), spark)
 
 
 def materialize_edges(
     triples: DataFrame, spark: SparkSession,
     nodes: DataFrame | None = None,
-    broadcast_threshold: int = 2_000_000,
     assume_closed: bool = False,
 ) -> DataFrame:
     """The edges half of `materialize` (see its docstring). With
@@ -206,10 +191,10 @@ def materialize_edges(
         # J3 endpoint-existence inner joins (silent-drop semantics),
         # size-gated: broadcast the name dimension only while it is small
         names = nodes.select("name", "id")
-        n_names = nodes.count()  # cheap: nodes is checkpointed
+        small = _session.broadcastable(nodes)  # cheap: nodes is checkpointed
 
         def _dim(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if n_names <= broadcast_threshold else df
+            return F.broadcast(df) if small else df
 
         resolved = (
             all_edges.join(
@@ -232,13 +217,12 @@ def materialize_edges(
     return (
         resolved.groupBy("src", "dst", "relation")
         .agg(F.max("confidence").alias("confidence"), F.min("url").alias("url"))
-        .select("src", "dst", "relation", "confidence", "url")
+        .select(*EDGE_COLUMNS)
     )
 
 
 def materialize(
     triples: DataFrame, spark: SparkSession,
-    broadcast_threshold: int = 2_000_000,
     assume_closed: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """canonical triples (+ seed) → (nodes, edges).
@@ -259,10 +243,10 @@ def materialize(
     min(url)) — never dropDuplicates, whose survivor is partition-order
     dependent. Nodes are checkpointed once inside this function so the edge
     endpoint joins (and any downstream consumer) never recompute the node
-    aggregation. The name dimension is broadcast only below
-    `broadcast_threshold` rows; above it the endpoint resolution is a shuffle
-    join on the name key (AQE handles residual skew) — a web-scale surface
-    vocabulary does not fit in every executor.
+    aggregation. The name dimension is broadcast only while
+    `session.broadcastable` says it is small; above that the endpoint
+    resolution is a shuffle join on the name key (AQE handles residual
+    skew) — a web-scale surface vocabulary does not fit in every executor.
 
     `assume_closed`: when the caller guarantees every triple endpoint IS a
     node (true for this pipeline by construction — nodes are derived from
@@ -275,9 +259,7 @@ def materialize(
     asserts both paths are identical on pipeline data."""
     nodes = materialize_nodes(triples, spark)
     edges = materialize_edges(
-        triples, spark, nodes=nodes,
-        broadcast_threshold=broadcast_threshold,
-        assume_closed=assume_closed,
+        triples, spark, nodes=nodes, assume_closed=assume_closed
     )
     return nodes, edges
 

@@ -97,9 +97,7 @@ class Runner:
         metrics: dict | None = None,
     ) -> DataFrame:
         """Produce-or-resume one stage. Returns the stage's output table."""
-        if self._committed(stage, fingerprint) and self.catalog.exists(
-            self.spark, stage
-        ):
+        if self._committed(stage, fingerprint) and self.catalog.exists(stage):
             return self.catalog.read(self.spark, stage)
         self.catalog.write(produce(), stage, partition_by=partition_by)
         self._commit(stage, fingerprint, metrics)

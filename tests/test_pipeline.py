@@ -9,6 +9,7 @@
 6. idempotent manifest resume.
 """
 
+import io
 import json
 import os
 import shutil
@@ -114,7 +115,7 @@ def test_narrow_widen_roundtrip_equals_fused(spark, text_df, tmp_path):
     assert got == want and got
 
 
-def test_canonical_map_local_equals_distributed(spark, text_df):
+def test_canonical_map_local_equals_distributed(spark, text_df, monkeypatch):
     linked = nlp.link_triples(nlp.extract_triples(text_df))
     surfaces = (
         linked.select("subj").union(linked.select("obj"))
@@ -135,11 +136,11 @@ def test_canonical_map_local_equals_distributed(spark, text_df):
         ).collect()
     }
     # rung 3: distributed banding/verify + distributed CC fixpoint
+    monkeypatch.setattr(canon, "PAIR_THRESHOLD", 0)
     dist = {
         r.surface: r.canonical
         for r in canon.canonical_map(
-            surfaces, exclude_exact=protected, driver_threshold=0,
-            pair_threshold=0
+            surfaces, exclude_exact=protected, driver_threshold=0
         ).collect()
     }
     assert fast == mid == dist
@@ -164,15 +165,16 @@ def test_cc_matches_networkx(spark):
         assert min(comp) == labels.pop()
 
 
-def test_cc_distributed_fixpoint_runs_to_convergence(spark):
+def test_cc_distributed_fixpoint_runs_to_convergence(spark, monkeypatch):
     """Min-label propagation moves a label one hop per round, so a 30-node
     chain needs 29 rounds: the distributed fixpoint must run until no label
     changes, not stop after a fixed round count with unconverged labels."""
     chain = [f"s{i:02d}" for i in range(30)]
     df = spark.createDataFrame(list(zip(chain, chain[1:])), "a string, b string")
+    monkeypatch.setattr(canon, "PAIR_THRESHOLD", 0)
     got = {
         r.surface: r.canonical
-        for r in canon.connected_components(df, small_threshold=0).collect()
+        for r in canon.connected_components(df).collect()
     }
     assert canon.LAST_CC_STRATEGY == "distributed"
     assert got == {s: "s00" for s in chain}
@@ -384,7 +386,6 @@ def test_manifest_mode_equals_bench_mode(spark):
     try:
         stored = pipeline.build_kg(spark, 60, base_dir=base)
         for name in tables:
-            # catalog reads move partition columns last: compare by name
             cols = bench[name].columns
             want = _sorted_rows(bench[name], cols)
             assert _sorted_rows(stored[name], cols) == want and want, name
@@ -404,6 +405,50 @@ def test_manifest_mode_equals_bench_mode(spark):
                 assert all(f.startswith("pred=") for f in per_file)
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _digest(df):
+    """(row count, order-independent sum of row hashes) of `df`, with its
+    columns in their order."""
+    from pyspark.sql import functions as F
+
+    r = df.select(
+        F.pmod(F.xxhash64(F.to_json(F.struct(*df.columns))), F.lit(1 << 40))
+        .alias("h")
+    ).agg(F.count("*").alias("n"), F.sum("h").alias("h")).collect()[0]
+    return r.n, r.h
+
+
+def test_manifest_mode_same_columns_and_digests_as_bench_mode(spark):
+    """Every build_kg output has the same columns, in the same order, and
+    the same (count, hash) digest in both modes: a partitioned catalog
+    table reads back with its partition column last unless the pipeline
+    restores the stage's order."""
+    bench = pipeline.build_kg(spark, 60)
+    base = tempfile.mkdtemp(prefix="esgkg_order_")
+    try:
+        stored = pipeline.build_kg(spark, 60, base_dir=base)
+        assert stored.keys() == bench.keys() and len(bench) == 9
+        for name, df in bench.items():
+            assert stored[name].columns == df.columns, name
+            assert _digest(stored[name]) == _digest(df), name
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_default_driver_mem_is_quarter_of_host_at_most_4g(monkeypatch):
+    from esgkg import session
+
+    def sized(total_kb):
+        meminfo = f"MemTotal: {total_kb} kB\nMemFree: 1024 kB\n"
+        monkeypatch.setattr(session, "open", lambda *a, **k: io.StringIO(
+            meminfo), raising=False)
+        return session.default_driver_mem()
+
+    assert sized(15 * 1024 * 1024) == "3840m"  # 15 GiB host
+    assert sized(8 * 1024 * 1024) == "2048m"
+    assert sized(16 * 1024 * 1024) == "4096m"
+    assert sized(256 * 1024 * 1024) == "4096m"  # capped at 4 GiB
 
 
 def test_manifest_concurrent_commits(spark):
@@ -540,7 +585,7 @@ def test_manifest_reproduces_uncommitted_table(spark):
         )
         os.remove(os.path.join(cat.path("t"), "_SUCCESS"))
         assert any(f.endswith(".parquet") for f in os.listdir(cat.path("t")))
-        assert not cat.exists(spark, "t")
+        assert not cat.exists("t")
         calls = []
 
         def produce():
@@ -549,7 +594,7 @@ def test_manifest_reproduces_uncommitted_table(spark):
 
         out = manifest.Runner(spark, cat).run_stage("t", "fp", produce)
         assert calls == [1]
-        assert out.count() == 7 and cat.exists(spark, "t")
+        assert out.count() == 7 and cat.exists("t")
         cat.write(spark.range(3), "t")
         out = manifest.Runner(spark, cat).run_stage("t", "fp", produce)
         assert calls == [1, 1]

@@ -7,7 +7,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from esgkg import pipeline
+from esgkg import pipeline, session
 from esgkg.stages import canon, complete, corpus, graph, nlp
 from esgkg.ops import dedup
 
@@ -17,26 +17,45 @@ def _triples(spark, n=120):
     return nlp.link_triples(nlp.extract_triples(text)).cache()
 
 
-def test_rewrite_triples_shuffle_equals_broadcast(spark):
+def _executed_plan(df) -> str:
+    """The executed physical plan of `df`, run with Spark's own size-based
+    broadcast off (AQE would turn these tiny shuffle joins into broadcast
+    joins at run time), so a BroadcastHashJoin in it comes from a
+    broadcast hint."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = df.sparkSession.conf.get(key)
+    df.sparkSession.conf.set(key, "-1")
+    try:
+        df.collect()
+    finally:
+        df.sparkSession.conf.set(key, old)
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_rewrite_triples_shuffle_equals_broadcast(spark, monkeypatch):
     linked = _triples(spark)
     surfaces = linked.select(F.col("subj").alias("surface")).union(
         linked.select(F.col("obj").alias("surface"))
     )
     cmap = canon.canonical_map(surfaces).cache()
     a = canon.rewrite_triples(linked, cmap)  # broadcast (default gate)
-    b = canon.rewrite_triples(linked, cmap, broadcast_threshold=0)  # shuffle
+    assert "BroadcastHashJoin" in _executed_plan(a)
+    monkeypatch.setattr(session, "BROADCAST_ROWS", 0)
+    b = canon.rewrite_triples(linked, cmap)  # shuffle
+    assert "BroadcastHashJoin" not in _executed_plan(b)
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
     assert rows_a == rows_b and rows_a
 
 
-def test_adamic_adar_shuffle_equals_broadcast(spark):
+def test_adamic_adar_shuffle_equals_broadcast(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (2, 5), (5, 6)],
         "src long, dst long",
     )
     a = complete.adamic_adar(edges, top_k=5)
-    b = complete.adamic_adar(edges, top_k=5, broadcast_threshold=0)
+    monkeypatch.setattr(session, "BROADCAST_ROWS", 0)
+    b = complete.adamic_adar(edges, top_k=5)
     key = lambda r: (r.src, r.dst)
     got_a = {key(r): (r.common_neighbors, round(r.aa_score, 9), r.rank)
              for r in a.collect()}
@@ -45,10 +64,13 @@ def test_adamic_adar_shuffle_equals_broadcast(spark):
     assert got_a == got_b and got_a
 
 
-def test_materialize_shuffle_equals_broadcast(spark):
+def test_materialize_shuffle_equals_broadcast(spark, monkeypatch):
     linked = _triples(spark, 80)
     n1, e1 = graph.materialize(linked, spark)
-    n2, e2 = graph.materialize(linked, spark, broadcast_threshold=0)
+    assert "BroadcastHashJoin" in _executed_plan(e1)
+    monkeypatch.setattr(session, "BROADCAST_ROWS", 0)
+    n2, e2 = graph.materialize(linked, spark)
+    assert "BroadcastHashJoin" not in _executed_plan(e2)
     assert sorted(map(tuple, n1.collect())) == sorted(map(tuple, n2.collect()))
     assert sorted(map(tuple, e1.collect())) == sorted(map(tuple, e2.collect()))
 
@@ -406,9 +428,9 @@ def test_ann_topk_reuses_precomputed_signatures(spark):
     assert "pandas" not in plan.lower()  # no python UDF left in the probe
 
 
-def test_canon_oversized_bucket_whitespace_recovery(spark):
+def test_canon_oversized_bucket_whitespace_recovery(spark, monkeypatch):
     """Whitespace variants of one long surface land in oversized (dropped)
-    LSH buckets at a tiny max_bucket, yet must still merge via the
+    LSH buckets at a tiny MAX_BUCKET, yet must still merge via the
     normalized-exact recovery pass — identically on the driver rung and the
     distributed rung."""
     base = "グリーンサプライチェーン環境経営推進機構"
@@ -416,14 +438,15 @@ def test_canon_oversized_bucket_whitespace_recovery(spark):
     df = spark.createDataFrame(
         [(s,) for s in [base] + variants], "surface string"
     )
+    monkeypatch.setattr(canon, "MAX_BUCKET", 4)
     cm_local = {
         r.surface: r.canonical
-        for r in canon.canonical_map(df, max_bucket=4).collect()
+        for r in canon.canonical_map(df).collect()
     }
     assert canon.LAST_STRATEGY == "driver"
     cm_dist = {
         r.surface: r.canonical
-        for r in canon.canonical_map(df, max_bucket=4, driver_threshold=0).collect()
+        for r in canon.canonical_map(df, driver_threshold=0).collect()
     }
     assert cm_local == cm_dist
     assert len(set(cm_local.values())) == 1  # everything merged
@@ -498,7 +521,7 @@ def test_knn_join_probe_side_size_guard(spark):
     assert simsearch.pairwise_topk_join(emb, small, k=2, max_queries=3).count() == 6
 
 
-def test_preagg_nodes_edges_equal_generic(spark):
+def test_nodes_from_stats_equal_materialize_nodes(spark, monkeypatch):
     """The pipeline's node path (surface_stats → nodes-from-stats) must
     produce byte-identical nodes to the generic
     materialize_nodes(rewrite_triples(...)) path, on both the broadcast and
@@ -524,10 +547,9 @@ def test_preagg_nodes_edges_equal_generic(spark):
     )
     triples = canon.rewrite_triples(linked, cmap)
     n1 = graph.materialize_nodes(triples, spark)
-    for thr in (2_000_000, 0):  # broadcast rung, shuffle rung
-        n2 = graph.materialize_nodes_from_stats(
-            stats, cmap, spark, broadcast_threshold=thr
-        )
+    for rows in (session.BROADCAST_ROWS, 0):  # broadcast rung, shuffle rung
+        monkeypatch.setattr(session, "BROADCAST_ROWS", rows)
+        n2 = graph.materialize_nodes_from_stats(stats, cmap, spark)
         assert sorted(map(tuple, n1.collect())) == sorted(
             map(tuple, n2.collect())
         )

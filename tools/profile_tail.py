@@ -28,7 +28,7 @@ def synth_surfaces(spark, n: int):
     ~10^13 is far below the 0.88 edit threshold, and the ~636k-gram space
     keeps band buckets small (a fixed-suffix pool was tried first and
     flooded the LSH buckets through its shared boilerplate grams — the
-    realistic failure mode the `max_bucket` cap exists for, but the wrong
+    realistic failure mode the `MAX_BUCKET` cap exists for, but the wrong
     vocabulary for a clean scaling demonstration).
     Ground truth: every group merges, nothing merges across groups."""
     import random as _random
@@ -56,7 +56,7 @@ def synth_surfaces(spark, n: int):
 def canon_at_scale(spark, n_surfaces: int) -> dict:
     """VERDICT r5 item 2: drive the DISTRIBUTED canonicalization rungs at a
     vocabulary scale (≥5M distinct surfaces) where the driver union-find
-    shortcut cannot apply — n_groups/2 verified pairs exceed pair_threshold,
+    shortcut cannot apply — n_groups/2 verified pairs exceed PAIR_THRESHOLD,
     so banding, verification AND the iterative-join CC fixpoint all run
     distributed. Asserts the strategy markers and the exact expected merge
     count (every 2-variant group collapses to its base)."""
