@@ -8,11 +8,11 @@ sized to the host. On a real cluster the same factory applies — only
 master/memory change.
 
 Broadcast or shuffle: every size-gated join of the KG tail (the canonical
-map lookups, the J3 name dimension, both Adamic-Adar self-joins) asks
-`broadcastable` on the driver whether its small side has at most
-BROADCAST_ROWS rows, and broadcasts it by hint if so, whatever its bytes.
-A side the gate leaves to a shuffle may still be broadcast by AQE at run
-time when it turns out smaller than autoBroadcastJoinThreshold.
+map lookups, the J3 name dimension, the Adamic-Adar degree table and
+existing-edge anti-join) asks `broadcastable` whether its small side has at
+most BROADCAST_ROWS rows, and `gated` hints the side either way: broadcast
+if so, whatever its bytes, else a sort-merge join, which AQE does not turn
+back into a broadcast at run time.
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ import zipfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 _PKG_DIR = Path(__file__).resolve().parent
 
@@ -35,6 +36,13 @@ def broadcastable(df: DataFrame) -> bool:
     limit(n + 1).count() probe, so a web-scale side is never counted in
     full. Reads BROADCAST_ROWS when called."""
     return df.limit(BROADCAST_ROWS + 1).count() <= BROADCAST_ROWS
+
+
+def gated(df: DataFrame, small: bool) -> DataFrame:
+    """`df` as the gated side of a join: broadcast when `small` (the
+    `broadcastable` answer), else pinned to a sort-merge shuffle join, so
+    AQE cannot broadcast it under autoBroadcastJoinThreshold."""
+    return F.broadcast(df) if small else df.hint("merge")
 
 
 def default_driver_mem() -> str:

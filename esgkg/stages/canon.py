@@ -21,7 +21,8 @@ target upgrades this to surface-form merging at web scale:
 4. **C4 rewrite** — `map_surfaces` replaces columns through the canonical
    map (left join, identity fallback): subj and obj of the triples here,
    the node names in `graph.materialize_nodes_from_stats`. The map is
-   broadcast while `session.broadcastable` says it is small, else shuffled.
+   broadcast while `session.broadcastable` says it is small, else a
+   sort-merge shuffle join (`session.gated`).
 """
 
 from __future__ import annotations
@@ -423,9 +424,9 @@ def map_surfaces(df: DataFrame, canon: DataFrame,
     The map is one row per DISTINCT corpus surface — unbounded at web scale
     — so it is broadcast only while `session.broadcastable` says it is
     small, one probe for all of `cols` (the pipeline checkpoints the map
-    before this). Above the bound every lookup is a shuffle join on the
+    before this). Above the bound every lookup is a sort-merge join on the
     surface key; AQE splits residual skew."""
-    c = F.broadcast(canon) if _session.broadcastable(canon) else canon
+    c = _session.gated(canon, _session.broadcastable(canon))
     out = df
     for col in cols:
         out = out.join(

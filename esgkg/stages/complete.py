@@ -6,17 +6,30 @@ contract per /root/reference/scripts/03_knowledge_completion.py:76-84 and
 (node, prob) with prob in [0,1]) with Adamic-Adar + common-neighbor scoring
 over the materialized edge table:
 
-    und(a, z) ⋈ und(b, z) on z        -- triangle-style self-join
-    → groupBy(a, b): sum(1/ln(deg z)), count(*)
+    m(a, z) ⋈ m(b, z) on z            -- triangle-style self-join
+    → groupBy(a, b): count(*), Σ 1/ln(deg z)
     → anti-join existing edges        -- only propose NEW links
     → row_number() ≤ k per source     -- T3 window top-k
 
-Scale notes: the self-join key is the shared neighbor z; hub vertices are the
-skew risk, so z-degree is capped (`MAX_DEGREE`) — standard practice since a
-z with degree d contributes d² candidate pairs while its 1/ln(d) weight is
-negligible. AQE skew-join covers residual imbalance. Both Adamic-Adar
-scorers broadcast while `session.broadcastable` says their neighbor or edge
-table is small, and shuffle above that.
+One core serves all three scorers. Its input is a distinct membership list
+m(n, z), "n is adjacent to the shared vertex z": the undirected edge list
+for `adamic_adar`, the (left, right) edge list for `bipartite_adamic_adar`,
+and the rows whose z is a neighbor of the source for `predict_links`.
+`_neighbors` checkpoints the list, asks `session.broadcastable` once, keeps
+the z with 2 ≤ deg ≤ `MAX_DEGREE` and hash-partitions the rows on z;
+`_pairs` self-joins them on z; `_score` sums the weights.
+
+Scale notes: hub vertices are the skew risk, so z-degree is capped
+(`MAX_DEGREE`) — a z with degree d contributes d² candidate pairs while its
+1/ln(d) weight is negligible. While the gate says the list is small the
+degree table is broadcast and the self-join is a shuffled-hash join; above
+it both are pinned to sort-merge shuffle joins. AQE skew-join covers
+residual imbalance.
+
+The score does not depend on summation order: each weight splits exactly
+into two integers at 2^-40 and 2^-80, the integers are summed exactly as
+longs, and the two sums become one double once per pair. The same rows give
+the same bits on any core count or partitioning.
 """
 
 from __future__ import annotations
@@ -44,58 +57,81 @@ def undirected(edges: DataFrame) -> DataFrame:
     )
 
 
-def adamic_adar(edges: DataFrame, top_k: int = 10) -> DataFrame:
-    """(src, dst, common_neighbors, aa_score, prob, rank) — proposed links.
+def _neighbors(members: DataFrame) -> tuple[DataFrame, bool, DataFrame]:
+    """The degree/neighbor step over a distinct (n, z) membership list:
+    (the checkpointed list, the gate's answer for it, its (z, n, deg) rows
+    whose z has 2 ≤ deg ≤ MAX_DEGREE, hash-partitioned on z).
 
-    Size-gated join strategy: while `session.broadcastable` says the
-    neighbor table is small, the triangle self-join broadcasts one side
-    (the explosion stays map-side and the only shuffle is the
-    partially-aggregated groupBy); above it — a
-    web-scale edge table is the whole graph, which must never be shipped to
-    every executor — it runs as a repartitioned self-join on the shared
-    vertex z with AQE skew-split handling the residual imbalance the
-    `MAX_DEGREE` hub cap has already bounded."""
-    # und feeds the degree table, the neighbor lists AND the existing-edge
-    # anti-join — checkpoint so the distinct shuffle runs once. Eager
-    # localCheckpoint rather than persist(): checkpointed RDDs are released
-    # by the ContextCleaner as soon as the result DataFrame is unreachable,
-    # so repeated calls in a long-lived session don't accumulate executor
-    # storage the way never-unpersisted caches do.
-    und = undirected(edges).localCheckpoint(eager=True)
-    deg = und.groupBy(F.col("a").alias("z")).agg(F.count("*").alias("deg"))
-    # neighbor lists keyed by the shared vertex z
-    nbrs = und.select(F.col("b").alias("z"), F.col("a").alias("n"))
-    nbrs = nbrs.join(
-        F.broadcast(deg.filter(F.col("deg") <= MAX_DEGREE)), "z"
-    )  # hub cap: drops negligible-weight, quadratic-cost hubs
-    # round-robin repartition before the checkpoint: the neighbor table is
-    # byte-small (AQE coalesces it to ~1 partition) but the pair self-join
-    # explodes deg² rows per z — per-partition CPU, so spread z rows evenly
-    par = edges.sparkSession.sparkContext.defaultParallelism
-    nbrs = nbrs.repartition(par).localCheckpoint(eager=True)
-    l = nbrs.alias("l")
-    r = (
-        F.broadcast(nbrs.alias("r"))
-        if _session.broadcastable(nbrs)  # cheap: checkpointed above
-        else nbrs.repartition("z").alias("r")
+    The list is checkpointed once (it feeds the degree table, both join
+    sides and the callers' anti-joins) and probed once; the probe is cheap
+    on the checkpoint and also bounds the degree table's size."""
+    m = members.localCheckpoint(eager=True)
+    small = _session.broadcastable(m)
+    deg = (
+        m.groupBy("z")
+        .agg(F.count("*").alias("deg"))
+        .filter(F.col("deg").between(2, MAX_DEGREE))  # hub cap
     )
-    cand = (
-        l.join(r, (F.col("l.z") == F.col("r.z")) & (F.col("l.n") < F.col("r.n")))
-        .select(
-            F.col("l.n").alias("src"),
-            F.col("r.n").alias("dst"),
-            F.col("l.z").alias("z"),
-            F.col("l.deg").alias("deg_z"),
-        )
-        .filter(F.col("deg_z") >= 2)
+    par = m.sparkSession.sparkContext.defaultParallelism
+    return m, small, m.join(_session.gated(deg, small), "z").repartition(par, "z")
+
+
+def _pairs(members: DataFrame) -> tuple[DataFrame, bool, DataFrame]:
+    """`_neighbors`, then its rows paired on the shared z: (a, b, deg), one
+    row per z that a < b share.
+
+    Both sides are co-partitioned on z, so while the list is small a
+    shuffled-hash join replaces sort-merge's two Sorts with one hash build
+    per partition (measured ~6% faster warm and 2.5x faster cold than
+    sort-merge on the sf0.1 co-purchase graph, identical rows); above the
+    bound a partition's build side is no longer provably small, and
+    sort-merge's graceful spill is worth the sorts."""
+    m, small, nb = _neighbors(members)
+    r = nb.hint("shuffle_hash" if small else "merge").alias("r")
+    pairs = nb.alias("l").join(
+        r, (F.col("l.z") == F.col("r.z")) & (F.col("l.n") < F.col("r.n"))
+    ).select(F.col("l.n").alias("a"), F.col("r.n").alias("b"),
+             F.col("l.deg").alias("deg"))
+    return m, small, pairs
+
+
+def _score(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """(*keys, common, aa_score): per group of `rows`, the row count and
+    Σ 1/ln(deg).
+
+    The sum is exact, so it does not depend on the order of its terms: the
+    weight w = 2^-40·hi + 2^-80·lo splits exactly into two integers
+    (hi = ⌊2^40·w⌋; lo is the next 40 bits, exact while w ≥ 2^-28),
+    both are summed as longs and combined once. Exact while a pair shares
+    fewer than 2^22 vertices (the hi sum stays below 2^63)."""
+    x = F.lit(2.0 ** 40) / F.log("deg")  # 2^40·w, bit-equal
+    hi = F.floor(x)
+    lo = F.round((x - hi) * 2.0 ** 40).cast("long")
+    return rows.groupBy(*keys).agg(
+        F.count("*").alias("common"),
+        F.sum(hi).alias("hi"),
+        F.sum(lo).alias("lo"),
+    ).select(
+        *keys, "common",
+        (F.col("hi") * 2.0 ** -40 + F.col("lo") * 2.0 ** -80).alias("aa_score"),
     )
-    scored = cand.groupBy("src", "dst").agg(
-        F.count("*").alias("common_neighbors"),
-        F.sum(1.0 / F.log(F.col("deg_z"))).alias("aa_score"),
+
+
+def adamic_adar(edges: DataFrame, top_k: int = 10) -> DataFrame:
+    """(src, dst, common_neighbors, aa_score, prob, rank) — proposed links:
+    the top_k new links per source by Adamic-Adar score over the undirected
+    graph."""
+    und, small, pairs = _pairs(
+        undirected(edges).select(F.col("a").alias("n"), F.col("b").alias("z"))
+    )
+    scored = _score(pairs, ["a", "b"]).toDF(
+        "src", "dst", "common_neighbors", "aa_score"
     )
     # only links that don't already exist (either direction: und covers both)
-    existing = und.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    new_links = scored.join(existing, ["src", "dst"], "left_anti")
+    existing = und.select(F.col("n").alias("src"), F.col("z").alias("dst"))
+    new_links = scored.join(
+        _session.gated(existing, small), ["src", "dst"], "left_anti"
+    )
     w = Window.partitionBy("src").orderBy(
         F.desc("aa_score"), F.desc("common_neighbors"), F.asc("dst")
     )
@@ -117,38 +153,24 @@ def predict_links(edges: DataFrame, source_id: int,
     descending. Backed by the Adamic-Adar scorer instead of the GNN.
 
     Per-source contract → per-source plan: only the source's 2-hop
-    neighborhood is scored (z ∈ N(source), candidates ∈ N(z)); the full
-    graph is touched just twice — the undirected projection and the global
-    degree table the 1/ln(deg) weights need — never a graph-wide AA."""
+    neighborhood is scored, never a graph-wide AA. The membership list
+    holds every row of each z ∈ N1(source), so a z's degree counted on it
+    is its global degree, and scoring reads the graph once, for the
+    undirected projection. Every z of the list is shared with the source, so the
+    candidates are its other members, with no pair join."""
     und = undirected(edges).localCheckpoint(eager=True)
-    deg = und.groupBy(F.col("a").alias("z")).agg(F.count("*").alias("deg"))
-    n1 = (
-        und.filter(F.col("a") == source_id)
-        .select(F.col("b").alias("z"))
-        .distinct()
-    )
-    nbrs = (
-        und.select(F.col("b").alias("z"), F.col("a").alias("n"))
+    n1 = und.filter(F.col("a") == source_id).select(F.col("b").alias("z"))
+    _, _, nb = _neighbors(
+        und.select(F.col("a").alias("n"), F.col("b").alias("z"))
         .join(F.broadcast(n1), "z")  # z restricted to N1(source): small
-        .join(
-            F.broadcast(deg.filter(F.col("deg") <= MAX_DEGREE)), "z"
-        )
-        .filter(F.col("n") != source_id)
-        .filter(F.col("deg") >= 2)
     )
     scored = (
-        nbrs.groupBy("n")
-        .agg(
-            F.count("*").alias("common_neighbors"),
-            F.sum(1.0 / F.log(F.col("deg"))).alias("aa_score"),
-        )
+        _score(nb.filter(F.col("n") != source_id), ["n"])
         # propose only NEW links: drop existing neighbors of the source
         .join(n1.withColumnRenamed("z", "n"), "n", "left_anti")
     )
     rows = (
-        scored.orderBy(
-            F.desc("aa_score"), F.desc("common_neighbors"), F.asc("n")
-        )
+        scored.orderBy(F.desc("aa_score"), F.desc("common"), F.asc("n"))
         .limit(top_k)
         .withColumn("prob", 1.0 - F.exp(-F.col("aa_score")))
         .select("n", "prob")
@@ -178,56 +200,14 @@ def bipartite_adamic_adar(edges: DataFrame, left: str,
     shared right-side neighbors, weight 1/ln(degree of shared neighbor).
     Returns (a, b, common, aa_score) with a < b and common ≥ MIN_SHARED.
 
-    Same triangle-join shape as `adamic_adar`, reused for e.g. the
-    customer–part co-purchase graph in the driver's differential checks.
-    `MAX_DEGREE` caps the shared-neighbor degree, mirroring `adamic_adar`: a
-    right-side hub with degree d emits d² pairs while contributing a
-    negligible 1/ln(d) weight — dropping hubs bounds the blowup (the round-1
-    scale-killer on boilerplate-dense graphs).
-
-    Plan shape: the distinct edge list is checkpointed once (it feeds the
-    degree table AND both join sides), the degree dimension is broadcast
-    while small (size-gated — it is one row per right-side key, unbounded
-    at web scale), and the self-join input is hash-partitioned on the
-    shared key so the pair explosion is co-located. Measured 2x faster
-    than the join-then-self-join shape on the sf0.1 co-purchase graph."""
-    e = (
-        edges.select(F.col(left).alias("c"), F.col(right).alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    The same core as `adamic_adar` over the (left, right) list, used for
+    e.g. q13's customer–part co-purchase graph; `MAX_DEGREE` drops the
+    right-side hubs (the round-1 scale-killer on boilerplate-dense
+    graphs)."""
+    _, _, pairs = _pairs(
+        edges.select(F.col(left).alias("n"), F.col(right).alias("z")).distinct()
     )
-    # cheap: checkpointed; the edge count bounds the deg-table size
-    small = _session.broadcastable(e)
-    deg = e.groupBy("p").agg(F.count("*").alias("deg_p"))
-    deg = deg.filter((F.col("deg_p") >= 2) & (F.col("deg_p") <= MAX_DEGREE))
-    if small:
-        deg = F.broadcast(deg)
-    par = edges.sparkSession.sparkContext.defaultParallelism
-    ed = e.join(deg, "p").repartition(par, "p")
-    l = ed.alias("l")
-    # size-gated shuffled-hash join for the pair self-join (guide §3.1):
-    # both sides are co-partitioned on p, so SHJ replaces the two
-    # sort-merge Sorts with one per-partition hash build — measured ~6%
-    # faster warm and 2.5x faster on the cold first execution (no sort
-    # codegen to JIT) at sf0.1, identical rows. Gated by the same edge
-    # count as the degree broadcast: above the threshold a partition's
-    # build side is no longer provably small, and sort-merge's graceful
-    # spill is worth the sorts.
-    r = ed.hint("shuffle_hash").alias("r") if small else ed.alias("r")
-    return (
-        l.join(r, (F.col("l.p") == F.col("r.p")) & (F.col("l.c") < F.col("r.c")))
-        .select(
-            F.col("l.c").alias("a"),
-            F.col("r.c").alias("b"),
-            F.col("l.deg_p").alias("deg_p"),
-        )
-        .groupBy("a", "b")
-        .agg(
-            F.count("*").alias("common"),
-            F.sum(1.0 / F.log(F.col("deg_p"))).alias("aa_score"),
-        )
-        .filter(F.col("common") >= MIN_SHARED)
-    )
+    return _score(pairs, ["a", "b"]).filter(F.col("common") >= MIN_SHARED)
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,8 @@ Replaces the reference's Neo4j layer
 
 Size-gated joins: the node build maps raw names through the canonical map
 with `canon.map_surfaces`, and the J3 name dimension is broadcast while
-`session.broadcastable` says the node table is small, shuffled otherwise.
+`session.broadcastable` says the node table is small, else pinned to a
+sort-merge shuffle join (`session.gated`).
 
 ids are deterministic 64-bit name hashes (stable across runs/executors —
 never monotonically_increasing_id, which is partition-layout dependent).
@@ -192,28 +193,13 @@ def materialize_edges(
         # size-gated: broadcast the name dimension only while it is small
         names = nodes.select("name", "id")
         small = _session.broadcastable(nodes)  # cheap: nodes is checkpointed
-
-        def _dim(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if small else df
-
-        resolved = (
-            all_edges.join(
-                _dim(
-                    names.withColumnRenamed(
-                        "name", "src_name"
-                    ).withColumnRenamed("id", "src")
-                ),
-                "src_name",
-            )
-            .join(
-                _dim(
-                    names.withColumnRenamed(
-                        "name", "dst_name"
-                    ).withColumnRenamed("id", "dst")
-                ),
-                "dst_name",
-            )
-        )
+        src = names.withColumnRenamed("name", "src_name").withColumnRenamed(
+            "id", "src")
+        dst = names.withColumnRenamed("name", "dst_name").withColumnRenamed(
+            "id", "dst")
+        resolved = all_edges.join(
+            _session.gated(src, small), "src_name"
+        ).join(_session.gated(dst, small), "dst_name")
     return (
         resolved.groupBy("src", "dst", "relation")
         .agg(F.max("confidence").alias("confidence"), F.min("url").alias("url"))

@@ -18,17 +18,10 @@ def _triples(spark, n=120):
 
 
 def _executed_plan(df) -> str:
-    """The executed physical plan of `df`, run with Spark's own size-based
-    broadcast off (AQE would turn these tiny shuffle joins into broadcast
-    joins at run time), so a BroadcastHashJoin in it comes from a
-    broadcast hint."""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = df.sparkSession.conf.get(key)
-    df.sparkSession.conf.set(key, "-1")
-    try:
-        df.collect()
-    finally:
-        df.sparkSession.conf.set(key, old)
+    """The executed physical plan of `df`, after AQE's run-time re-plan:
+    Spark's own size-based broadcast stays on, so a shuffle branch of the
+    gate must survive it."""
+    df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -53,15 +46,28 @@ def test_adamic_adar_shuffle_equals_broadcast(spark, monkeypatch):
         [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5), (2, 5), (5, 6)],
         "src long, dst long",
     )
+    buys = spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 10), (2, 11), (3, 11), (3, 12), (2, 12),
+         (4, 12), (4, 10)],
+        "cust long, part long",
+    )
     a = complete.adamic_adar(edges, top_k=5)
+    bip_a = complete.bipartite_adamic_adar(buys, "cust", "part")
+    assert "BroadcastHashJoin" in _executed_plan(a)
+    assert "BroadcastHashJoin" in _executed_plan(bip_a)
     monkeypatch.setattr(session, "BROADCAST_ROWS", 0)
     b = complete.adamic_adar(edges, top_k=5)
+    bip_b = complete.bipartite_adamic_adar(buys, "cust", "part")
+    assert "BroadcastHashJoin" not in _executed_plan(b)
+    assert "BroadcastHashJoin" not in _executed_plan(bip_b)
     key = lambda r: (r.src, r.dst)
     got_a = {key(r): (r.common_neighbors, round(r.aa_score, 9), r.rank)
              for r in a.collect()}
     got_b = {key(r): (r.common_neighbors, round(r.aa_score, 9), r.rank)
              for r in b.collect()}
     assert got_a == got_b and got_a
+    rows_a = sorted(map(tuple, bip_a.collect()))
+    assert rows_a == sorted(map(tuple, bip_b.collect())) and rows_a
 
 
 def test_materialize_shuffle_equals_broadcast(spark, monkeypatch):
