@@ -477,9 +477,6 @@ def _q26_group_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q27_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gap-based sessionization over the events stream (30-min inactivity
     # boundary): lag window -> boundary flag -> running session index.
-    # The stateful-streaming analog is
-    # streaming.sessionize_stream_event_time; the batch semantics here are
-    # the oracle-checkable ground truth.
     from pyspark.sql import Window
 
     e = _t(spark, sf_dir, "events").withColumn(
@@ -602,8 +599,7 @@ def _q31_evaluation_harness(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q32_embedding_similarity_pairs(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     # embedding-cosine near-dup, EXACT variant (oracle-checkable): bounded
-    # self-join + JVM cosine (simsearch.dot) in double precision. The
-    # LSH-blocked scale path is dedup.embedding_near_dup_pairs.
+    # self-join + JVM cosine (simsearch.dot) in double precision.
     from esgkg.ops import simsearch
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)

@@ -29,7 +29,6 @@ import html as _htmllib
 import re
 import struct
 import unicodedata
-from typing import Iterable
 
 import numpy as np
 
@@ -255,60 +254,6 @@ def extract_triples(text: str, url: str) -> list[tuple[str, str, str, str]]:
     return [(s, p, o, url) for s, p, o in dict.fromkeys(rels)]
 
 
-class AhoCorasick:
-    """Minimal deterministic Aho-Corasick automaton for multi-pattern
-    substring search — the P3 scale path (SURVEY.md §2.2): one pass over the
-    text regardless of dictionary size, vs k× contains() for k keywords."""
-
-    def __init__(self, patterns: dict[str, object]) -> None:
-        # trie: list of dicts char -> state; out: state -> payloads
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[list[object]] = [[]]
-        self.fail: list[int] = [0]
-        for pat in sorted(patterns):
-            state = 0
-            for ch in pat:
-                nxt = self.goto[state].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    self.out.append([])
-                    self.fail.append(0)
-                    nxt = len(self.goto) - 1
-                    self.goto[state][ch] = nxt
-                state = nxt
-            self.out[state].append(patterns[pat])
-        # BFS to build failure links
-        from collections import deque
-
-        q = deque()
-        for s in self.goto[0].values():
-            self.fail[s] = 0
-            q.append(s)
-        while q:
-            r = q.popleft()
-            for ch, s in self.goto[r].items():
-                q.append(s)
-                f = self.fail[r]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[s] = self.goto[f].get(ch, 0)
-                if self.fail[s] == s:
-                    self.fail[s] = 0
-                self.out[s] = self.out[s] + self.out[self.fail[s]]
-
-    def search(self, text: str) -> set[object]:
-        """All payloads whose pattern occurs in text (presence only)."""
-        state = 0
-        hits: set[object] = set()
-        for ch in text:
-            while state and ch not in self.goto[state]:
-                state = self.fail[state]
-            state = self.goto[state].get(ch, 0)
-            for payload in self.out[state]:
-                hits.add(payload)
-        return hits
-
-
 def categorize(text: str) -> list[str]:
     """Multi-label E/S/G category per the reference keyword predicate
     (/root/reference/scripts/05_text_extraction.py:85-106)."""
@@ -320,7 +265,7 @@ def categorize(text: str) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic hashing (minhash / simhash / fingerprint / embeddings)
+# Deterministic hashing (minhash / embeddings)
 # ---------------------------------------------------------------------------
 
 _MERSENNE = (1 << 61) - 1
@@ -473,27 +418,6 @@ def edit_similarity(a: str, b: str) -> float:
             )
         prev = cur
     return 1.0 - prev[la] / lb
-
-
-def simhash64(tokens: Iterable[str]) -> int:
-    """64-bit SimHash over token stream."""
-    acc = np.zeros(64, dtype=np.int64)
-    for t in tokens:
-        h = stable_hash64(t, seed=31)
-        bits = np.array([(h >> i) & 1 for i in range(64)], dtype=np.int64)
-        acc += bits * 2 - 1
-    out = 0
-    for i in range(64):
-        if acc[i] > 0:
-            out |= 1 << i
-    return out - (1 << 63)  # signed for Spark LongType
-
-
-def fingerprint64(text: str) -> int:
-    """Document content fingerprint (signed 64-bit blake2b)."""
-    return struct.unpack(
-        "<q", hashlib.blake2b(text.encode("utf-8"), digest_size=8).digest()
-    )[0]
 
 
 # ---------------------------------------------------------------------------

@@ -1075,41 +1075,3 @@ def _extract(media: DataFrame, decode, schema: T.StructType) -> DataFrame:
             yield pd.DataFrame(rows, columns=schema.fieldNames())
 
     return media.mapInPandas(run, schema=schema)
-
-
-def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled frame index
-    (the actual frame decode is the same stub). Demonstrates the 1→many
-    Arrow-batched expansion shape used for real video pipelines."""
-    _session.ensure_shipped(media.sparkSession)
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_idx", T.IntegerType(), False),
-            T.StructField("frame_fp", T.LongType(), False),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "video" or payload is None:
-                    continue
-                b = bytes(payload)
-                n_frames = max(1, len(b) // 16)
-                for fi in range(0, n_frames, every_n):
-                    fp = struct.unpack(
-                        "<q",
-                        hashlib.blake2b(
-                            b[fi * 16 : (fi + 1) * 16], digest_size=8
-                        ).digest(),
-                    )[0]
-                    rows.append((int(mid), fi, fp))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame_fp"])
-
-    return media.mapInPandas(run, schema=schema)

@@ -5,12 +5,12 @@
 * LSH-bucketed ANN — the scale path: random-hyperplane signatures bucket the
   corpus; queries probe only their bucket (and neighbors), turning an O(N)
   scan into an O(N/2^b) probe. Deterministic planes (seeded).
-* IVF-style variant — coarse centroids via deterministic seeding, probe the
-  nearest `nprobe` lists.
+* batch k-NN join — Arrow-batched matmul per partition against a broadcast
+  query matrix, pre-reduced to top-k per partition.
 
 Every operator reads the embeddings table's (vec_id, embedding) columns.
-The random planes and centroids are seeded by module constants, so an
-index built once matches every later probe.
+The random planes are seeded by a module constant, so an index built once
+matches every later probe.
 
 All scoring math is double-precision and sequential-order stable so the
 DuckDB differential oracle can reproduce values bit-for-bit.
@@ -31,7 +31,6 @@ from .. import session as _session
 N_TABLES = 12      # LSH tables per signature
 ANN_PLANES = 6     # bits per table in ann_topk's index
 LSH_SEED = 1234
-IVF_SEED = 4321
 
 
 def lit_vector(v) -> Column:
@@ -59,11 +58,6 @@ def _batch_matrix(pdf: pd.DataFrame) -> np.ndarray:
     return np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
 
 
-def _unit_rows(m: np.ndarray) -> np.ndarray:
-    """Rows scaled to unit L2 norm; a zero row stays zero."""
-    return m / np.clip(np.linalg.norm(m, axis=1, keepdims=True), 1e-12, None)
-
-
 def cosine_topk(embeddings: DataFrame, qvec: list[float],
                 k: int = 10) -> DataFrame:
     """Exact brute-force cosine top-k: (id, score) ordered desc, id-tiebreak.
@@ -80,13 +74,12 @@ def cosine_topk(embeddings: DataFrame, qvec: list[float],
     )
 
 
-def _lsh_planes(dim: int, n_planes: int) -> np.ndarray:
+def _lsh_planes(dim: int) -> np.ndarray:
     rng = np.random.RandomState(LSH_SEED)
-    return rng.standard_normal((N_TABLES, dim, n_planes))
+    return rng.standard_normal((N_TABLES, dim, ANN_PLANES))
 
 
-def hyperplane_signatures(embeddings: DataFrame,
-                          n_planes: int = ANN_PLANES) -> DataFrame:
+def hyperplane_signatures(embeddings: DataFrame) -> DataFrame:
     """(id, table, bucket) multi-table random-hyperplane LSH signatures —
     L independent tables of b bits each (standard recall amplification:
     P(candidate) = 1-(1-p^b)^L for per-plane agreement p)."""
@@ -98,7 +91,7 @@ def hyperplane_signatures(embeddings: DataFrame,
             T.StructField("bucket", T.IntegerType(), False),
         ]
     )
-    pows = 1 << np.arange(n_planes)
+    pows = 1 << np.arange(ANN_PLANES)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         planes = None
@@ -106,7 +99,7 @@ def hyperplane_signatures(embeddings: DataFrame,
             if len(pdf) == 0:
                 continue
             if planes is None:
-                planes = _lsh_planes(len(pdf["embedding"].iloc[0]), n_planes)
+                planes = _lsh_planes(len(pdf["embedding"].iloc[0]))
             mat = _batch_matrix(pdf)
             ids = pdf["vec_id"].astype(np.int64).to_numpy()
             frames = []
@@ -131,13 +124,13 @@ def ann_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
     bucket (within `probe_hamming` bits) with the query in ANY table.
 
     `signatures`: a precomputed (id, table, bucket) table from
-    `hyperplane_signatures` at its default `n_planes` (caller's contract).
+    `hyperplane_signatures`.
     The signature table is the ANN *index*: at corpus scale it is
     materialized once and probed by every query; recomputing it per query
     re-hashes the whole corpus (the round-2 scale flag). Compute-if-absent
     keeps the single-query call self-contained."""
     q = np.asarray(qvec, dtype=np.float64)
-    planes = _lsh_planes(len(q), ANN_PLANES)
+    planes = _lsh_planes(len(q))
     pows = 1 << np.arange(ANN_PLANES)
     probe_rows = []
     for t in range(N_TABLES):
@@ -183,7 +176,7 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
     rewrite_triples' broadcast gate — the limit(n+1) collect never ships
     more than n+1 rows even when the caller passes a huge DataFrame). For a
     genuinely large probe side, block-partition the queries and union
-    per-block joins, or use the LSH/IVF index paths."""
+    per-block joins, or use the LSH index path."""
     _session.ensure_shipped(embeddings.sparkSession)
     qrows = (
         queries.select("vec_id", "embedding").limit(max_queries + 1).collect()
@@ -193,7 +186,7 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
             f"the kNN probe (queries) side exceeds max_queries="
             f"{max_queries} in scored_topk_per_partition; it is "
             "collected+broadcast and must be small (raise max_queries "
-            "deliberately, or use ann/ivf indexes)"
+            "deliberately, or use the ann index)"
         )
     qids = np.asarray([int(r[0]) for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
@@ -215,7 +208,11 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            mat = _unit_rows(_batch_matrix(pdf))
+            mat = _batch_matrix(pdf)
+            # unit rows; a zero row stays zero
+            mat = mat / np.clip(
+                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12, None
+            )
             scores = qm @ mat.T  # (Q, B)
             vids = pdf["vec_id"].to_numpy().astype(np.int64)
             b = scores.shape[1]
@@ -262,151 +259,3 @@ def pairwise_topk_join(embeddings: DataFrame, queries: DataFrame,
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
-
-
-def _seeded_centroids(dim: int, n_lists: int) -> np.ndarray:
-    rng = np.random.RandomState(IVF_SEED)
-    cents = rng.standard_normal((n_lists, dim))
-    return cents / np.linalg.norm(cents, axis=1, keepdims=True)
-
-
-def ivf_train_centroids(embeddings: DataFrame, n_lists: int = 64,
-                        train_iters: int = 1) -> np.ndarray:
-    """Spherical-k-means-trained IVF centroids: `train_iters` distributed
-    Lloyd iterations seeded from the deterministic codebook. Each iteration
-    is one pass — executors assign their partition's (normalized) vectors to
-    the nearest current centroid and emit PER-PARTITION partial sums
-    (n_lists rows of (list_id, n, sumvec) per partition, vectorized
-    np.add.at — never the corpus), which the driver reduces into the new
-    normalized means (empty lists keep their previous centroid). The
-    returned (n_lists × dim) array is driver-small by construction and
-    plugs into ivf_assign/ivf_topk via their `centroids` parameter."""
-    _session.ensure_shipped(embeddings.sparkSession)
-    first = embeddings.select("embedding").first()
-    if first is None:
-        raise ValueError("cannot train IVF centroids on an empty corpus")
-    cents = _seeded_centroids(len(first[0]), n_lists)
-    sc = embeddings.sparkSession.sparkContext
-    schema = T.StructType(
-        [
-            T.StructField("list_id", T.IntegerType(), False),
-            T.StructField("n", T.LongType(), False),
-            T.StructField("sums", T.ArrayType(T.DoubleType()), False),
-        ]
-    )
-    for _ in range(max(0, train_iters)):
-        bc = sc.broadcast(cents)
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            c = bc.value
-            counts = np.zeros(len(c), dtype=np.int64)
-            sums = np.zeros_like(c)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                mat = _unit_rows(_batch_matrix(pdf))
-                lists = np.argmax(mat @ c.T, axis=1)
-                np.add.at(sums, lists, mat)
-                np.add.at(counts, lists, 1)
-            nz = np.nonzero(counts)[0]
-            yield pd.DataFrame(
-                {
-                    "list_id": nz.astype(np.int32),
-                    "n": counts[nz],
-                    "sums": [sums[i].tolist() for i in nz],
-                }
-            )
-
-        partials = (
-            embeddings.select("embedding")
-            .mapInPandas(run, schema=schema)
-            .collect()
-        )
-        new = cents.copy()
-        tot_n = np.zeros(len(cents), dtype=np.int64)
-        tot_s = np.zeros_like(cents)
-        for r in partials:
-            tot_n[r.list_id] += r.n
-            tot_s[r.list_id] += np.asarray(r.sums)
-        nz = tot_n > 0
-        means = tot_s[nz] / tot_n[nz, None]
-        new[nz] = _unit_rows(means)
-        cents = new
-        bc.destroy()
-    return cents
-
-
-def ivf_assign(embeddings: DataFrame, n_lists: int = 64,
-               centroids: np.ndarray | None = None) -> DataFrame:
-    """IVF coarse assignment: (id, list_id) — each vector joins the list of
-    its nearest coarse centroid. Default centroids are deterministic seeded
-    Gaussian directions (the cheap ingest baseline); pass the output of
-    `ivf_train_centroids` as `centroids` for trained lists — the assignment
-    math is identical. The assignment table is the IVF *index*: materialized
-    once, probed by every query."""
-    _session.ensure_shipped(embeddings.sparkSession)
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("list_id", T.IntegerType(), False),
-        ]
-    )
-    bc = (
-        embeddings.sparkSession.sparkContext.broadcast(
-            np.asarray(centroids, dtype=np.float64)
-        )
-        if centroids is not None
-        else None
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cents = bc.value if bc is not None else None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if cents is None:
-                dim = len(pdf["embedding"].iloc[0])
-                cents = _seeded_centroids(dim, n_lists)
-            mat = _unit_rows(_batch_matrix(pdf))
-            lists = np.argmax(mat @ cents.T, axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {"id": pdf["vec_id"].astype("int64"), "list_id": lists}
-            )
-
-    return embeddings.select("vec_id", "embedding").mapInPandas(
-        run, schema=schema
-    )
-
-
-def ivf_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
-             n_lists: int = 64, nprobe: int = 8,
-             assignments: DataFrame | None = None,
-             centroids: np.ndarray | None = None) -> DataFrame:
-    """IVF approximate top-k: score only vectors whose coarse list is among
-    the query's `nprobe` nearest lists — the scan shrinks ~n_lists/nprobe.
-    `assignments` accepts the materialized `ivf_assign` table
-    (compute-if-absent), mirroring `ann_topk`'s signature reuse;
-    `centroids` accepts the trained codebook from `ivf_train_centroids`
-    (caller contract: the same centroids that built `assignments`)."""
-    q = np.asarray(qvec, dtype=np.float64)
-    q = q / max(float(np.linalg.norm(q)), 1e-12)
-    cents = (
-        np.asarray(centroids, dtype=np.float64)
-        if centroids is not None
-        else _seeded_centroids(len(q), n_lists)
-    )
-    probe_lists = [
-        int(i) for i in np.argsort(-(cents @ q), kind="stable")[:nprobe]
-    ]
-    spark = embeddings.sparkSession
-    probes = F.broadcast(
-        spark.createDataFrame([(i,) for i in probe_lists], "list_id int")
-    )
-    assign = assignments if assignments is not None else ivf_assign(
-        embeddings, n_lists, centroids
-    )
-    cand_ids = assign.join(probes, "list_id").select("id")
-    cand = embeddings.join(
-        cand_ids.withColumnRenamed("id", "vec_id"), "vec_id", "left_semi"
-    )
-    return cosine_topk(cand, qvec, k)

@@ -49,10 +49,6 @@ WS_CLASS = "[ \\t\\n\\r\\f\\x0B\\u00A0\\u3000]+"
 # "dist_cc" — observability hook for tests asserting the distributed branch
 # actually runs at bench scale
 LAST_STRATEGY: str | None = None
-# whether the most recent connected_components call used the driver
-# union-find fast path ("local") or the iterative-join fixpoint
-# ("distributed")
-LAST_CC_STRATEGY: str | None = None
 
 # LSH and verification parameters. MinHash signature length, LSH bands and
 # shingle width fix the candidate recall curve; the conjunctive verify
@@ -243,8 +239,9 @@ def verify_pairs(pairs: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(pairs: DataFrame) -> DataFrame:
-    """Min-label propagation over (a, b) edges → (surface, canonical).
+def connected_components(pairs: DataFrame) -> tuple[DataFrame, bool]:
+    """Min-label propagation over (a, b) edges → ((surface, canonical),
+    on_driver).
 
     canonical = lexicographically smallest surface in the component
     (deterministic representative).
@@ -256,17 +253,17 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     the distributed fixpoint runs: each round is one join + one groupBy
     (both on the node key, so AQE reuses the partitioning), labels move one
     hop per round, and the loop runs until a round changes no label (G7),
-    with a localCheckpoint every CHECKPOINT_EVERY rounds to cut lineage."""
-    global LAST_CC_STRATEGY
+    with a localCheckpoint every CHECKPOINT_EVERY rounds to cut lineage.
+    `on_driver` says which of the two ran."""
     spark = pairs.sparkSession
     # single job: grab up to threshold+1 rows; only fall back to the
     # distributed fixpoint when the pair graph is genuinely large
     head = pairs.limit(PAIR_THRESHOLD + 1).collect()
     if len(head) <= PAIR_THRESHOLD:
-        LAST_CC_STRATEGY = "local"
         out = sorted(_min_label_components(head).items())
-        return spark.createDataFrame(out, "surface string, canonical string")
-    LAST_CC_STRATEGY = "distributed"
+        return spark.createDataFrame(
+            out, "surface string, canonical string"
+        ), True
     edges = (
         pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .union(pairs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -298,7 +295,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
             labels = new_labels
     return labels.select(
         F.col("node").alias("surface"), F.col("label").alias("canonical")
-    )
+    ), False
 
 
 def canonical_map_local(surfaces: list[str]) -> dict[str, str]:
@@ -400,12 +397,11 @@ def canonical_map(surfaces: DataFrame,
     pairs = verify_pairs(
         candidate_pairs(pool, assume_distinct=assume_distinct)
     ).select("a", "b")
-    comp = connected_components(pairs)
-    local_cc = LAST_CC_STRATEGY == "local"
-    LAST_STRATEGY = "dist_pairs" if local_cc else "dist_cc"
+    comp, on_driver = connected_components(pairs)
+    LAST_STRATEGY = "dist_pairs" if on_driver else "dist_cc"
     # the union-find result is tiny (≤ PAIR_THRESHOLD pairs) → broadcast it
     # into the identity join over the full vocabulary
-    comp = F.broadcast(comp) if local_cc else comp
+    comp = F.broadcast(comp) if on_driver else comp
     return (
         all_s.join(comp, "surface", "left")
         .select(

@@ -44,9 +44,15 @@ TEXT_SCHEMA = T.StructType(
 )
 
 
-def pages_from_ids(ids: DataFrame, seed: int, n_groups: int) -> DataFrame:
-    """One pages row per `id` of `ids` (batch or streaming): the pure
-    `synth.make_page` per id, Arrow-batched."""
+def synth_pages(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
+    """Deterministic distributed pages table: one row per id in [0, n), the
+    pure `synth.make_page` per id, Arrow-batched. The org pool scales with n
+    (synth.default_groups) so downstream graph stages grow with the
+    corpus."""
+    _session.ensure_shipped(spark)
+    from esgkg import synth
+
+    n_groups = synth.default_groups(n)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from esgkg import synth
@@ -55,20 +61,10 @@ def pages_from_ids(ids: DataFrame, seed: int, n_groups: int) -> DataFrame:
             rows = [synth.make_page(int(i), seed, n_groups) for i in pdf["id"]]
             yield pd.DataFrame(rows, columns=[f.name for f in PAGES_SCHEMA])
 
-    return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
-def synth_pages(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
-    """Deterministic distributed pages table: one row per id in [0, n).
-    The org pool scales with n (synth.default_groups) so downstream graph
-    stages grow with the corpus."""
-    _session.ensure_shipped(spark)
-    from esgkg import synth
-
     ids = spark.range(
         0, n, numPartitions=spark.sparkContext.defaultParallelism
     )
-    return pages_from_ids(ids, seed, synth.default_groups(n))
+    return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
 
 
 def extract_text(pages: DataFrame) -> DataFrame:

@@ -1,11 +1,7 @@
-"""Tests: U3 predict_links contract, AC large-dictionary categorizer,
-salted aggregation, BFS path accumulation."""
+"""Tests: U3 predict_links contract, BFS path accumulation, U4 relation
+inference."""
 
-from pyspark.sql import functions as F
-
-from esgkg import kernel, oracle
-from esgkg.ops import skew
-from esgkg.stages import complete, corpus, graph, sections
+from esgkg.stages import complete, graph
 
 
 def test_predict_links_reference_contract(spark):
@@ -27,51 +23,6 @@ def test_predict_links_reference_contract(spark):
     # descending probability
     probs = [p for _, p in links]
     assert probs == sorted(probs, reverse=True)
-
-
-def test_aho_corasick_matches_python_in():
-    texts = [kernel.page_text(__import__("esgkg.synth", fromlist=["synth"]).make_page(i)["html"]) for i in range(40)]
-    from esgkg import vocab
-
-    ac = kernel.AhoCorasick(
-        {kw: cat for cat, kws in vocab.CATEGORY_KEYWORDS.items() for kw in kws}
-    )
-    for t in texts:
-        assert ac.search(t) == set(kernel.categorize(t))
-
-
-def test_categorize_large_equals_native(spark):
-    text_df = corpus.extract_text(corpus.synth_pages(spark, 120))
-    native = {
-        (r.url, r.category)
-        for r in sections.categorize(text_df).collect()
-    }
-    ac = {
-        (r.url, r.category)
-        for r in sections.categorize_large(text_df).collect()
-    }
-    assert ac == native
-
-
-def test_salted_agg_equals_plain(spark):
-    df = spark.range(100000).select(
-        (F.col("id") % 7).alias("k"), (F.col("id") % 13).alias("v")
-    )
-    plain = {
-        (r.k, r["count"]) for r in df.groupBy("k").count().collect()
-    }
-    salted = {
-        (r.k, r["count"]) for r in skew.salted_count(df, ["k"]).collect()
-    }
-    assert salted == plain
-    plain_s = {
-        (r.k, r.s) for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()
-    }
-    salted_s = {
-        (r.k, r.s)
-        for r in skew.salted_sum(df, ["k"], F.col("v"), "s").collect()
-    }
-    assert salted_s == plain_s
 
 
 def test_bfs_accumulates_paths(spark):

@@ -1,7 +1,6 @@
 """Round-2 evaluator operators vs hand-computed reference semantics
 (/root/reference/src/evaluation/metrics.py:46-65, 185-265)."""
 
-import math
 import re
 
 from esgkg.stages import metrics
@@ -139,52 +138,6 @@ def test_embed_nodes_incremental_reuses_cached_vectors(spark):
     assert got[2] == full[2] and got[3] == full[3]  # filled by the encoder
 
 
-def test_sessionize_stream_matches_batch_closed_sessions(spark, tmp_path):
-    from esgkg import streaming
-
-    # events: user 1 has three sessions, user 2 has one; times offset from
-    # 0 like _LATE_BATCHES (an event at the initial watermark is dropped)
-    rows = []
-    eid = 0
-    for user, tsecs in [
-        (1, [0, 100, 200, 5000, 5100, 99999]),
-        (2, [10, 20]),
-    ]:
-        for ts in tsecs:
-            rows.append((user, _B + ts, eid))
-            eid += 1
-    src = str(tmp_path / "events_src")
-    spark.createDataFrame(
-        rows, "user_id long, tsec long, event_id long"
-    ).coalesce(1).write.parquet(src)
-
-    events = (
-        spark.readStream.schema("user_id long, tsec long, event_id long")
-        .parquet(src)
-    )
-    q = (
-        streaming.sessionize_stream_event_time(
-            events, gap_sec=1800, watermark_sec=3600
-        )
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(60)
-    q.stop()
-    assert done, "availableNow query did not terminate"
-    got = {
-        (r.user_id, r.session_idx, r.n_events, r.duration_sec)
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    # the batch rule's closed sessions: the watermark (last event - 3600)
-    # closes user 1's (0..200) and (5000..5100) and user 2's (10..20); only
-    # user 1's trailing session at 99999 stays open
-    assert got == {(1, 1, 3, 200), (1, 2, 2, 100), (2, 1, 2, 10)}
-
-
 def test_export_viz_writes_valid_dot(spark, tmp_path):
     from esgkg.stages import graph
 
@@ -309,68 +262,3 @@ def test_synth_test_cases_shape_and_truth(spark):
     rag_case = cases["rag_cases"][0]
     assert "A概念" in rag_case["context_concepts"]
     assert rag_case["reference_answer"]
-
-
-# times offset from 0 — an event exactly AT the initial watermark (t=0)
-# is dropped by the stateful-op late filter.
-_B = 100000
-_LATE_BATCHES = [
-    [(1, _B + 0, 0), (1, _B + 500, 1), (9, _B + 4000, 2)],
-    # u1's +300 arrives LATE (within watermark)
-    [(1, _B + 300, 3), (9, _B + 8000, 4)],
-    [(1, _B + 50000, 5), (9, _B + 12000, 6)],
-]
-
-
-def _run_batched(spark, tmp_path, make_query, tag):
-    """Feed _LATE_BATCHES as THREE deterministic micro-batches: one
-    availableNow run per batch against a shared checkpoint (the state store
-    and watermark persist across restarts), so arrival order is exact —
-    plain maxFilesPerTrigger ordering proved nondeterministic."""
-    src = str(tmp_path / f"src_{tag}")
-    ckpt = str(tmp_path / f"ckpt_{tag}")
-    out = str(tmp_path / f"out_{tag}")
-    for rows in _LATE_BATCHES:
-        spark.createDataFrame(
-            rows, "user_id long, tsec long, event_id long"
-        ).coalesce(1).write.mode("append").parquet(src)
-        events = (
-            spark.readStream.schema(
-                "user_id long, tsec long, event_id long"
-            ).parquet(src)
-        )
-        q = (
-            make_query(events)
-            .writeStream.format("parquet")  # file sink: recovery-capable
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = q.awaitTermination(120)
-        q.stop()
-        assert done, "availableNow query did not terminate"
-    return {
-        (r.user_id, r.session_idx, r.n_events, r.duration_sec)
-        for r in spark.read.parquet(out).collect()
-    }
-
-
-def test_sessionize_event_time_handles_late_data(spark, tmp_path):
-    """The sessionizer must place the late event (+300, within the
-    watermark) into its true session — matching the batch oracle's
-    (n_events=3, duration=500) — although it arrives after +500."""
-    from esgkg import streaming
-
-    got = _run_batched(
-        spark, tmp_path,
-        lambda ev: streaming.sessionize_stream_event_time(
-            ev, gap_sec=1000, watermark_sec=4000
-        ),
-        "et",
-    )
-    got_u1 = {row for row in got if row[0] == 1}
-    # batch oracle over u1's closed events [+0, +300, +500]: one session,
-    # 3 events, duration 500; [+50000] stays open (watermark never passes)
-    assert got_u1 == {(1, 1, 3, 500)}

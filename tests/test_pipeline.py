@@ -154,10 +154,9 @@ def test_cc_matches_networkx(spark):
         ("x", "y"),
     ]
     df = spark.createDataFrame(pairs, "a string, b string")
-    got = {
-        r.surface: r.canonical
-        for r in canon.connected_components(df).collect()
-    }
+    cc, on_driver = canon.connected_components(df)
+    assert on_driver is True
+    got = {r.surface: r.canonical for r in cc.collect()}
     g = nx.Graph(pairs)
     for comp in nx.connected_components(g):
         labels = {got[n] for n in comp}
@@ -172,11 +171,9 @@ def test_cc_distributed_fixpoint_runs_to_convergence(spark, monkeypatch):
     chain = [f"s{i:02d}" for i in range(30)]
     df = spark.createDataFrame(list(zip(chain, chain[1:])), "a string, b string")
     monkeypatch.setattr(canon, "PAIR_THRESHOLD", 0)
-    got = {
-        r.surface: r.canonical
-        for r in canon.connected_components(df).collect()
-    }
-    assert canon.LAST_CC_STRATEGY == "distributed"
+    comp, on_driver = canon.connected_components(df)
+    assert on_driver is False
+    got = {r.surface: r.canonical for r in comp.collect()}
     assert got == {s: "s00" for s in chain}
 
 

@@ -1,9 +1,5 @@
 """Tests: GraphRAG read path, eval/structural metrics, ontology JSON
-round-trip, streaming ingest facade, and ops (dedup/simsearch/textstats/
-multimodal)."""
-
-import shutil
-import tempfile
+round-trip, and ops (dedup/simsearch/textstats/multimodal)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,38 +91,6 @@ def test_ontology_json_roundtrip(spark, kg, tmp_path):
     assert a == b
 
 
-def test_streaming_ingest(spark):
-    from esgkg import streaming
-
-    base = tempfile.mkdtemp(prefix="esgkg_stream_")
-    try:
-        q = streaming.start_ingest(spark, base, trigger_seconds=1)
-        import time
-
-        deadline = time.time() + 60
-        n = 0
-        while time.time() < deadline:
-            time.sleep(2)
-            try:
-                n = spark.read.parquet(f"{base}/stream_triples").count()
-            except Exception:
-                continue
-            if n > 0:
-                break
-        q.stop()
-        assert n > 0
-        text = spark.read.parquet(f"{base}/stream_text")
-        # streamed extraction matches the batch oracle for the same ids
-        from esgkg import oracle
-
-        got = {r.url: r.text for r in text.collect()}
-        gold = oracle.gold_text(max(int(u.rsplit("/", 1)[1]) for u in got) + 1)
-        for url, t in got.items():
-            assert gold[url] == t
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 # ---------------------------------------------------------------------------
 # ops
 # ---------------------------------------------------------------------------
@@ -150,39 +114,6 @@ def test_exact_and_minhash_dedup(spark):
     }
     assert (0, 1) in pairs and (0, 2) in pairs and (1, 2) in pairs
     assert not any(3 in p for p in pairs)
-    clusters = {
-        r.doc_id: r.cluster_id
-        for r in dedup.minhash_dedup_components(
-            docs, jaccard_threshold=0.7
-        ).collect()
-    }
-    assert clusters[0] == clusters[1] == clusters[2]
-
-
-def test_minhash_dedup_components_numeric_min_representative(spark):
-    """The cluster representative is the numerically smallest doc_id, not
-    the smallest id as a string ("10" < "9")."""
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    docs = spark.createDataFrame(
-        [(9, text), (10, text), (11, text)], "doc_id long, text string"
-    )
-    clusters = {
-        r.doc_id: r.cluster_id
-        for r in dedup.minhash_dedup_components(docs).collect()
-    }
-    assert clusters == {9: 9, 10: 9, 11: 9}
-
-
-def test_simhash_near_dup(spark):
-    rows = [
-        (0, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-        (1, "alpha beta gamma delta epsilon zeta eta theta iota kappax"),
-        (2, "totally different words entirely unrelated content here now"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = {(r.a, r.b) for r in dedup.simhash_near_dup_pairs(docs, max_hamming=8).collect()}
-    assert (0, 1) in pairs
-    assert (0, 2) not in pairs and (1, 2) not in pairs
 
 
 def test_ann_recall_vs_brute(spark):
@@ -205,10 +136,6 @@ def test_knn_join_self_nearest(spark):
 
 
 def test_textstats(spark):
-    import hashlib
-
-    from esgkg import kernel
-
     texts = {0: "Hello world, this is the test!", 1: "気候変動は重要です"}
     docs = spark.createDataFrame(
         sorted(texts.items()), "doc_id long, text string"
@@ -217,13 +144,6 @@ def test_textstats(spark):
     assert ts[0].n_ws_tokens == 6
     li = {r.id: r.lang_pred for r in textstats.lang_id(docs).collect()}
     assert li == {0: "latin", 1: "ja"}
-    fp = {r.id: r for r in textstats.fingerprints(docs).collect()}
-    assert fp[0].md5_fp != fp[1].md5_fp
-    for i, t in texts.items():
-        assert fp[i].md5_fp == hashlib.md5(t.encode()).hexdigest()
-        assert fp[i].blake_fp == kernel.fingerprint64(t)
-    q = {r.id: r for r in textstats.quality_scores(docs).collect()}
-    assert 0 <= q[0].punct_ratio < 0.2
 
 
 def test_textstats_empty_text_has_no_tokens(spark):
@@ -234,9 +154,6 @@ def test_textstats_empty_text_has_no_tokens(spark):
     )
     ts = {r.id: r.n_ws_tokens for r in textstats.token_stats(docs).collect()}
     assert ts == {0: 0, 1: 0, 2: 2}
-    q = {r.id: r for r in textstats.quality_scores(docs).collect()}
-    assert {i: q[i].n_tokens for i in q} == {0: 0, 1: 0, 2: 2}
-    assert q[0].mean_token_len == 0.0 and q[2].mean_token_len == 4.0
 
 
 def test_multimodal_plumbing(spark):
@@ -245,115 +162,9 @@ def test_multimodal_plumbing(spark):
     rows = feats.collect()
     assert len(rows) == 60
     assert all(64 <= r.width < 256 for r in rows)
-    frames = multimodal.frame_sample(media, every_n=3)
-    f_rows = frames.collect()
-    assert f_rows and all(r.frame_idx % 3 == 0 for r in f_rows)
     # real decode is stubbed
     with pytest.raises(NotImplementedError):
         multimodal.decode_image(b"xx", fake=False)
-
-
-def test_ivf_topk_all_probes_equals_brute_and_reuses_index(spark):
-    """IVF with nprobe == n_lists probes every list → must equal exact
-    brute force; with a precomputed assignment table the probe plan must
-    not re-run the assignment UDF (index reuse, like ann_topk)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    pool = emb.filter(F.col("vec_id") != 0)
-    brute = [(r.id, round(r.score, 9))
-             for r in simsearch.cosine_topk(pool, qvec, k=10).collect()]
-    full = [(r.id, round(r.score, 9))
-            for r in simsearch.ivf_topk(pool, qvec, k=10, n_lists=16,
-                                        nprobe=16).collect()]
-    assert full == brute
-    assign = simsearch.ivf_assign(pool, n_lists=16).localCheckpoint(eager=True)
-    df = simsearch.ivf_topk(pool, qvec, k=10, n_lists=16, nprobe=16,
-                            assignments=assign)
-    reused = [(r.id, round(r.score, 9)) for r in df.collect()]
-    assert reused == brute
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "pandas" not in plan.lower()
-    # narrow probe actually shrinks the scanned candidate set
-    n_cand = (
-        assign.join(
-            spark.createDataFrame([(i,) for i in range(4)], "list_id int"),
-            "list_id",
-        ).count()
-    )
-    assert n_cand < pool.count()
-
-
-def test_embedding_near_dup_detects_semantic_duplicates(spark):
-    """LSH-blocked embedding-cosine dedup must find the planted near-dup
-    pairs (cosine ≈ 1) and nothing below threshold — equal to exact brute
-    force on the fixture."""
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    base = rng.standard_normal((6, 32))
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, [float(x) for x in v]))
-        # ids 100+i are near-copies of i (tiny perturbation)
-        rows.append((100 + i, [float(x) for x in v + 0.01 * rng.standard_normal(32)]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = {(r.a, r.b) for r in dedup.embedding_near_dup_pairs(
-        df, threshold=0.95).collect()}
-    # exact brute force over the 12-vector fixture
-    import itertools
-
-    vecs = {i: np.asarray(v, dtype=np.float64) for i, v in rows}
-    exact = set()
-    for a, b in itertools.combinations(sorted(vecs), 2):
-        va, vb = vecs[a], vecs[b]
-        cos = float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
-        if cos >= 0.95:
-            exact.add((a, b))
-    assert got == exact
-    assert {(i, 100 + i) for i in range(6)} <= got
-
-
-def test_ivf_trained_centroids_recall_and_exactness(spark):
-    """One-pass-per-iteration Lloyd training (ivf_train_centroids) must (a)
-    keep the all-probes-equals-brute exactness invariant and (b) reach at
-    least the untrained codebook's recall at the same narrow nprobe
-    (round-3 verdict item 6)."""
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).localCheckpoint(eager=True)
-    cents = simsearch.ivf_train_centroids(emb, n_lists=16, train_iters=2)
-    assert cents.shape[0] == 16
-    qs = emb.filter(F.col("vec_id") < 8).collect()
-
-    def mean_recall(centroids):
-        assign = simsearch.ivf_assign(
-            emb, n_lists=16, centroids=centroids
-        ).localCheckpoint(eager=True)
-        tot = 0.0
-        for q in qs:
-            qv = [float(x) for x in q.embedding]
-            brute = {r.id for r in simsearch.cosine_topk(emb, qv, k=10).collect()}
-            got = {
-                r.id
-                for r in simsearch.ivf_topk(
-                    emb, qv, k=10, n_lists=16, nprobe=4,
-                    assignments=assign, centroids=centroids,
-                ).collect()
-            }
-            tot += len(got & brute) / 10.0
-        return tot / len(qs)
-
-    r_trained = mean_recall(cents)
-    r_untrained = mean_recall(None)
-    assert r_trained >= r_untrained
-    # exactness with every list probed, trained codebook
-    qvec = [float(x) for x in qs[0].embedding]
-    brute = [(r.id, round(r.score, 9))
-             for r in simsearch.cosine_topk(emb, qvec, k=10).collect()]
-    full = [(r.id, round(r.score, 9))
-            for r in simsearch.ivf_topk(emb, qvec, k=10, n_lists=16,
-                                        nprobe=16, centroids=cents).collect()]
-    assert full == brute
 
 
 def test_decode_image_real_bmp_and_png(spark):

@@ -170,46 +170,6 @@ def test_manifest_top_k_change_recomputes_links(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_simhash_bucket_cap_bounds_blowup(spark):
-    """A boilerplate-skewed corpus (one dominant near-identical template)
-    must not produce a quadratic pair set: with the cap, the hot band bucket
-    is dropped; distinct near-dup pairs outside it survive."""
-    import random
-
-    boiler = [(i, "lorem ipsum dolor sit amet " * 10) for i in range(300)]
-    rng = random.Random(3)
-    words = ["spark", "shuffle", "partition", "join", "window", "aggregate",
-             "broadcast", "exchange", "codegen", "arrow"]
-    toks = [rng.choice(words) + str(rng.randrange(50)) for _ in range(200)]
-    edited = list(toks)
-    edited[100] = "changedtoken"  # 1-token edit → hamming ≈ 1 on 200 tokens
-    pair = [(1000, " ".join(toks)), (1001, " ".join(edited))]
-    docs = spark.createDataFrame(boiler + pair, "doc_id long, text string")
-    got = dedup.simhash_near_dup_pairs(docs, max_bucket=64).collect()
-    # 300 identical docs -> C(300,2)=44850 pairs without the cap
-    assert len(got) < 1000
-    assert (1000, 1001) in {(r.a, r.b) for r in got}
-    # uncapped control on a small clean set still finds the pair
-    small = spark.createDataFrame(pair, "doc_id long, text string")
-    assert {(r.a, r.b) for r in dedup.simhash_near_dup_pairs(small).collect()} == {
-        (1000, 1001)
-    }
-
-
-def test_simhash_bucket_cap_boundary(spark):
-    """max_bucket is inclusive: 64 identical docs fill each band bucket to
-    exactly the cap and all C(64, 2) pairs survive; a 65th makes every
-    bucket oversized and no pair survives."""
-    text = "lorem ipsum dolor sit amet consectetur adipiscing elit"
-    for n, want in ((64, 64 * 63 // 2), (65, 0)):
-        docs = spark.createDataFrame(
-            [(i, text) for i in range(n)], "doc_id long, text string"
-        )
-        got = dedup.simhash_near_dup_pairs(docs, max_bucket=64).collect()
-        assert len(got) == want
-        assert all(r.hamming == 0 for r in got)
-
-
 def test_exact_dedup_hash_keys_match_text_grouping(spark):
     docs = spark.createDataFrame(
         [(1, "x"), (2, "x"), (3, "y"), (4, "z"), (5, "y"), (6, "x")],

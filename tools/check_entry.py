@@ -16,7 +16,6 @@ import json
 import math
 import sys
 import time
-from datetime import datetime, timezone
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -198,9 +197,6 @@ def main():
     out_path = REPO / "CORRECTNESS_local.json"
     if not only:
         results["_meta"] = {
-            "generated_at": datetime.now(timezone.utc).isoformat(
-                timespec="seconds"
-            ),
             "sf_dir": sf_dir,
             "n_pass": n_pass,
             "n_fail": n_fail,

@@ -58,8 +58,10 @@ def canon_at_scale(spark, n_surfaces: int) -> dict:
     vocabulary scale (≥5M distinct surfaces) where the driver union-find
     shortcut cannot apply — n_groups/2 verified pairs exceed PAIR_THRESHOLD,
     so banding, verification AND the iterative-join CC fixpoint all run
-    distributed. Asserts the strategy markers and the exact expected merge
-    count (every 2-variant group collapses to its base)."""
+    distributed. Reports the rung (`strategy`: dist_pairs is the driver
+    union-find over the verified pairs, dist_cc the CC fixpoint) and the
+    exact expected merge count (every 2-variant group collapses to its
+    base)."""
     import time as _time
 
     from esgkg.stages import canon
@@ -79,7 +81,6 @@ def canon_at_scale(spark, n_surfaces: int) -> dict:
         "merged": n_merged,
         "expected_merged": n_surfaces // 2,
         "strategy": canon.LAST_STRATEGY,
-        "cc_strategy": canon.LAST_CC_STRATEGY,
     }
 
 
