@@ -1,16 +1,18 @@
-"""Deduplication operators over a document table (doc_id, text).
+"""Deduplication operators over a document table (doc_id, text), and the
+MinHash-LSH blocking core that canonicalization shares.
 
 * exact      — hash groupBy; keeper = min(doc_id) per identical text.
-* minhash    — MinHash+LSH near-dup: shingle → minhash → band → bucket join
-               → exact-Jaccard verify, plus an exact content-hash pass over
-               oversized buckets (the signatures of canonicalization, tuned
-               for documents).
+* lsh_candidates — MinHash-LSH blocking: banded signatures → one groupBy of
+               bucket member arrays under the MAX_BUCKET cap → pairs emitted
+               map-side, plus an exact-key pass over the whole pool. The
+               candidate generator of `minhash_near_dup_pairs` and of
+               `canon.candidate_pairs`; each puts its own verifier on top.
+* minhash    — near-dup documents: `lsh_candidates` → exact-Jaccard verify.
 * char jaccard — exact verified similarity on bounded candidate sets.
 
 Scale notes: both near-dup families are blocking-based (no all-pairs cross
-join). The MinHash bucket join runs under a bucket-size cap, which bounds
-the pair explosion from boilerplate-heavy corpora (the classic web-dedup
-skew).
+join). The bucket-size cap bounds the pair explosion from boilerplate-heavy
+corpora (the classic web-dedup skew).
 """
 
 from __future__ import annotations
@@ -18,11 +20,22 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import session as _session
+
+# LSH blocking, shared by canonicalization and document dedup (both of
+# canon's rungs read these when called, so one monkeypatch reaches both):
+# MinHash signature length and band count fix the candidate recall curve.
+K = 32
+BANDS = 16
+# LSH buckets with more members are dropped (skew guard: a bucket of n
+# members emits n² candidate pairs)
+MAX_BUCKET = 64
+# character shingle width of document near-dup signatures and verify
+SHINGLE = 5
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -44,81 +57,97 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_near_dup_pairs(docs: DataFrame, k: int = 32, bands: int = 16,
-                           shingle: int = 5,
-                           jaccard_threshold: float = 0.7,
-                           max_bucket: int = 64) -> DataFrame:
-    """Near-duplicate id pairs via MinHash-LSH + exact-Jaccard verify.
+def lsh_candidates(rows: DataFrame, ngram: int,
+                   exact_key: Column) -> DataFrame:
+    """Candidate pairs (a, b), a < b, not yet distinct, over `(key, text)`
+    rows with unique keys. Rows whose text is empty or null get no pairs.
 
-    Shingles are character n-grams of the document text (word-shingles are a
-    one-line change in the kernel). Signatures come from
-    `kernel.minhash_signatures_batch`, the function canonicalization uses.
-    Every pair that shares a kept band bucket reaches the exact-Jaccard
-    verify, which alone decides precision.
+    Banding: char-`ngram` MinHash signatures (from the batch kernel) split
+    into BANDS band hashes. One shuffle groups band rows into sorted member
+    arrays, buckets over MAX_BUCKET members are dropped (skew guard), and
+    pairs are emitted MAP-SIDE from each array with higher-order functions,
+    so the band rows are shuffled once.
 
-    Oversized band buckets (boilerplate skew) are excluded from the
-    quadratic pair join; their members are diverted to an EXACT
-    content-hash pass — identical texts in a dropped bucket still pair
-    (jaccard 1.0, pairing each doc to the min-id keeper of its hash group,
-    so the recovery emits O(n) rows, never O(n²)). Near-but-not-identical
-    members of a dropped bucket remain the accepted recall loss of the
-    cap — that is the skew/recall trade every web-scale dedup makes."""
-    _session.ensure_shipped(docs.sparkSession)
-
-    bands_schema = T.StructType(
+    Exact recovery: rows with an equal `exact_key` (a Column over `text`)
+    pair to their group's min key — O(n) rows, never O(n²) — in one groupBy
+    over the whole pool that does not read the band table, so the banding
+    chain evaluates once. Identical texts have identical signatures and
+    share every bucket, so a content-hash key restores exactly what the cap
+    drops for them; a coarser key (canon's whitespace-stripped surface)
+    also pairs the variants it equates. Near-but-not-equal members of a
+    dropped bucket remain the accepted recall loss of the cap (the trade
+    every web-scale dedup makes)."""
+    spark = rows.sparkSession
+    _session.ensure_shipped(spark)
+    schema = T.StructType(
         [
-            T.StructField("id", T.LongType(), False),
+            T.StructField("key", rows.schema["key"].dataType, False),
             T.StructField("band_id", T.IntegerType(), False),
             T.StructField("band_hash", T.LongType(), False),
         ]
     )
 
-    def mk_bands(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from esgkg import kernel
 
         for pdf in batches:
-            pdf = pdf[pdf["text"].fillna("") != ""]
             sigs = kernel.minhash_signatures_batch(
-                list(pdf["text"]), k=k, ngram=shingle
+                list(pdf["text"]), k=K, ngram=ngram
             )
-            rows = [
-                (int(i), bi, bh)
-                for i, sig in zip(pdf["doc_id"], sigs)
-                for bi, bh in enumerate(kernel.band_hashes(sig, bands))
-            ]
-            yield pd.DataFrame(rows, columns=["id", "band_id", "band_hash"])
+            yield pd.DataFrame(
+                [
+                    (key, bi, bh)
+                    for key, sig in zip(pdf["key"], sigs)
+                    for bi, bh in enumerate(kernel.band_hashes(sig, BANDS))
+                ],
+                columns=["key", "band_id", "band_hash"],
+            )
 
-    # checkpointed: the band rows feed the size histogram, both join sides
-    # and the dropped rows
-    bands_rows = docs.select("doc_id", "text").mapInPandas(
-        mk_bands, schema=bands_schema
-    ).localCheckpoint(eager=True)
-    bucket = ["band_id", "band_hash"]
-    sizes = bands_rows.groupBy(*bucket).agg(F.count("*").alias("n"))
-    kept = bands_rows.join(
-        sizes.filter(F.col("n") <= max_bucket).select(*bucket), bucket
+    live = rows.select("key", "text").filter(F.col("text") != "")
+    # explicit repartition: AQE coalesces a byte-tiny pool to ~1 partition,
+    # but the minhash kernel is CPU-heavy per row — spread it across cores
+    par = spark.sparkContext.defaultParallelism
+    ms = F.col("ms")
+    buckets = (
+        live.repartition(par).mapInPandas(run, schema=schema)
+        .groupBy("band_id", "band_hash")
+        .agg(F.sort_array(F.collect_list("key")).alias("ms"))
+        .filter((F.size(ms) >= 2) & (F.size(ms) <= MAX_BUCKET))
     )
-    dropped = bands_rows.join(
-        sizes.filter(F.col("n") > max_bucket).select(*bucket), bucket
+    pair_arrays = F.transform(
+        ms,
+        lambda x, i: F.transform(
+            F.slice(ms, i + F.lit(2), F.size(ms)),
+            lambda y: F.struct(x.alias("a"), y.alias("b")),
+        ),
     )
-    l, r = kept.alias("l"), kept.alias("r")
-    pairs = l.join(r, [F.col("l.band_id") == F.col("r.band_id"),
-                       F.col("l.band_hash") == F.col("r.band_hash"),
-                       F.col("l.id") < F.col("r.id")]).select(
-        F.col("l.id").alias("a"), F.col("r.id").alias("b")
+    lsh = buckets.select(F.explode(F.flatten(pair_arrays)).alias("p"))
+    exact = (
+        live.groupBy(exact_key.alias("x"))
+        .agg(F.sort_array(F.collect_list("key")).alias("ms"))
+        .filter(F.size(ms) >= 2)
+        .select(
+            ms[0].alias("a"), F.explode(F.slice(ms, 2, F.size(ms))).alias("b")
+        )
     )
-    cand = pairs.distinct().join(
-        docs.select(F.col("doc_id").alias("a"), F.col("text").alias("ta")), "a"
-    ).join(
-        docs.select(F.col("doc_id").alias("b"), F.col("text").alias("tb")), "b"
-    )
+    return lsh.select("p.a", "p.b").unionByName(exact)
 
-    verify_schema = T.StructType(
-        [
-            T.StructField("a", T.LongType(), False),
-            T.StructField("b", T.LongType(), False),
-            T.StructField("jaccard", T.DoubleType(), False),
-        ]
+
+def minhash_near_dup_pairs(docs: DataFrame,
+                           jaccard_threshold: float = 0.7) -> DataFrame:
+    """Near-duplicate (a, b, jaccard) document pairs, a < b: `lsh_candidates`
+    over SHINGLE-char shingles with the md5 of the text as the exact key,
+    then an exact-Jaccard verify, which alone decides precision. Identical
+    texts pair at jaccard 1.0 even when every bucket they share was capped
+    (each to the min doc_id of its text)."""
+    cand = lsh_candidates(
+        docs.select(F.col("doc_id").alias("key"), "text"),
+        SHINGLE,
+        F.md5("text"),
+    ).distinct()
+    texts = docs.select("doc_id", "text")
+    cand = cand.join(texts.toDF("a", "ta"), "a").join(
+        texts.toDF("b", "tb"), "b"
     )
 
     def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -127,34 +156,13 @@ def minhash_near_dup_pairs(docs: DataFrame, k: int = 32, bands: int = 16,
         for pdf in batches:
             out = pdf[["a", "b"]].copy()
             out["jaccard"] = [
-                kernel.jaccard(ta, tb, shingle)
+                kernel.jaccard(ta, tb, SHINGLE)
                 for ta, tb in zip(pdf["ta"], pdf["tb"])
             ]
             yield out
 
-    verified = (
-        cand.mapInPandas(verify, schema=verify_schema)
-        .filter(F.col("jaccard") >= jaccard_threshold)
-    )
-    dd = docs.select(
-        F.col("doc_id").alias("id"), F.md5(F.col("text")).alias("h")
-    ).join(dropped.select("id").distinct(), "id")
-    keep = dd.groupBy("h").agg(F.min("id").alias("keep_id"))
-    exact_pairs = (
-        dd.join(keep, "h")
-        .filter(F.col("id") != F.col("keep_id"))
-        .select(
-            F.col("keep_id").alias("a"),
-            F.col("id").alias("b"),
-            F.lit(1.0).alias("jaccard"),
-        )
-    )
-    # a pair can appear in both passes (caught in a small bucket AND an
-    # oversized one) — keep one row per (a, b), preferring the exact pass
-    return (
-        verified.unionByName(exact_pairs)
-        .groupBy("a", "b")
-        .agg(F.max("jaccard").alias("jaccard"))
+    return cand.mapInPandas(verify, "a long, b long, jaccard double").filter(
+        F.col("jaccard") >= jaccard_threshold
     )
 
 

@@ -53,6 +53,13 @@ def default_driver_mem() -> str:
     return f"{min(kb // 4 // 1024, 4096)}m"
 
 
+def default_cores() -> int:
+    """Local-mode core count: $SPARK_GRAFT_CPUS, else the CPUs this process
+    may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def _pkg_blobs() -> tuple[str, list[tuple[str, bytes]]]:
     """(content digest, [(archive name, source bytes)]) of the esgkg
     package's .py files."""
@@ -103,7 +110,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")

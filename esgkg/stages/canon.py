@@ -6,12 +6,14 @@ The reference canonicalizes only by exact name equality (Neo4j MERGE {name},
 identity, /root/reference/src/knowledge_graph/ontology.py:91). The build
 target upgrades this to surface-form merging at web scale:
 
-1. **C1 blocking** — per-surface MinHash signatures (deterministic universal
-   hashing, esgkg.kernel.minhash_signatures_batch) split into LSH bands;
-   band buckets become join keys. Skew control: bucket sizes are bounded by
-   MAX_BUCKET (oversized buckets are dropped — hub surfaces like
-   boilerplate strings would otherwise produce quadratic pair blowup), and
-   the pair self-join runs under AQE skew-join.
+1. **C1 blocking** — `dedup.lsh_candidates`, the MinHash-LSH core shared
+   with document dedup: per-surface MinHash signatures (deterministic
+   universal hashing, esgkg.kernel.minhash_signatures_batch) split into
+   LSH bands, one groupBy into bucket arrays, pairs emitted map-side.
+   Skew control: buckets over `dedup.MAX_BUCKET` members are dropped (hub
+   surfaces like boilerplate strings would otherwise produce quadratic
+   pair blowup), and a whitespace-normalized exact pass recovers what the
+   cap drops for equal surfaces.
 2. **C2 verify** — exact char-3gram Jaccard AND edit similarity on
    candidate pairs (vectorized pandas UDF), threshold filter.
 3. **C3 connected components** — driver union-find for a pair graph of at
@@ -38,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import session as _session
+from ..ops import dedup
 
 # whitespace class for the normalized-exact recovery pass — spelled out
 # explicitly because Java's \s is ASCII-only while Python's is Unicode-aware
@@ -50,34 +53,21 @@ WS_CLASS = "[ \\t\\n\\r\\f\\x0B\\u00A0\\u3000]+"
 # actually runs at bench scale
 LAST_STRATEGY: str | None = None
 
-# LSH and verification parameters. MinHash signature length, LSH bands and
-# shingle width fix the candidate recall curve; the conjunctive verify
-# thresholds fix purity. Every rung (driver and distributed) uses these same
-# values, so the rungs stay byte-equal.
-K = 32
-BANDS = 16
+# Verification parameters. The shingle width (with `dedup.K`/`BANDS`) fixes
+# the candidate recall curve; the conjunctive verify thresholds fix purity.
+# Every rung (driver and distributed) uses these same values, so the rungs
+# stay byte-equal.
 NGRAM = 3
 JACCARD_THRESHOLD = 0.5
 EDIT_THRESHOLD = 0.88
 # distributed CC fixpoint: cut lineage and test for convergence every
 # CHECKPOINT_EVERY rounds
 CHECKPOINT_EVERY = 3
-# LSH buckets with more members are dropped (skew guard: a bucket of n
-# surfaces emits n² candidate pairs)
-MAX_BUCKET = 64
 # verified pair graphs of at most this many edges finish with the driver
 # union-find; larger ones take the distributed CC fixpoint
 PAIR_THRESHOLD = 200_000
 # column order of the canonical triples table
 TRIPLE_COLUMNS = ("subj", "pred", "obj", "url", "confidence")
-
-_BANDS_SCHEMA = T.StructType(
-    [
-        T.StructField("surface", T.StringType(), False),
-        T.StructField("band_id", T.IntegerType(), False),
-        T.StructField("band_hash", T.LongType(), False),
-    ]
-)
 
 
 def _min_label_components(pairs) -> dict[str, str]:
@@ -106,95 +96,37 @@ def candidate_pairs(surfaces: DataFrame,
     """LSH candidate pairs (a < b) over the `surface` column, already
     filtered by edit similarity ≥ EDIT_THRESHOLD.
 
-    Banding: per-surface MinHash signatures split into BANDS band hashes
-    (mapInPandas over the batch-vectorized kernel). One shuffle then groups
-    band rows into buckets (collect_list), the size cap drops buckets over
-    MAX_BUCKET (skew guard), and pairs are emitted MAP-SIDE from each
-    bucket array with higher-order functions — no band self-join, no second
-    pass over the band table (the round-1 shape needed a size-histogram
-    groupBy + a join + a sort-merge self-join over the same rows, three
-    shuffles of fixed latency that dominated wall time at vocabulary scale).
-
-    Exact recovery: what the cap would lose that is still O(n)-recoverable
-    is diverted through a whitespace-normalized EXACT pass over the whole
-    surface pool (one extra groupBy on the tiny distinct-surface set, no
-    dependency on the band table, so the lazy banding chain still evaluates
-    once). Surfaces equal after whitespace stripping pair to the group's
-    min surface — O(n) rows, never O(n²) — and flow through the SAME
-    conjunctive verification as LSH candidates, so purity is unchanged; a
-    near-identical pair whose bucket was dropped still merges. Near-but-not-
-    normalized-equal members of a dropped bucket remain the accepted recall
-    loss of the cap (the trade every web-scale dedup makes). Mirrors
-    dedup.minhash_near_dup_pairs' oversized-bucket exact-hash recovery —
-    by normalized surface rather than content hash because the surface pool
-    is already distinct (an exact-duplicate pass would recover nothing).
+    Blocking is `dedup.lsh_candidates` with each surface as both key and
+    text. Its exact key is the whitespace-stripped surface: the surface pool
+    is already distinct, so an exact-text pass would recover nothing, but
+    whitespace variants of one surface that share only dropped buckets
+    still pair (to the group's min surface) and flow through the SAME
+    conjunctive verification as LSH candidates, so purity is unchanged.
 
     The JVM edit-similarity filter runs BEFORE the dedup shuffle: a pair
-    colliding in several bands is exploded several times, but only
+    colliding in several bands is emitted several times, but only
     survivors reach the distinct, and it drops the ~99% of candidates that
     share a legal-suffix shingle but nothing else before any python verify.
 
-    `assume_distinct` skips the per-surface dedup shuffle (shared by the
-    banding and recovery passes) when the caller guarantees one row per
-    surface — e.g. the pipeline's surface_stats groupBy output, where a
-    redundant distinct is a full vocabulary shuffle job of fixed latency."""
-    _session.ensure_shipped(surfaces.sparkSession)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from esgkg import kernel
-
-        for pdf in batches:
-            ss = [s for s in pdf["surface"] if s]
-            # batch-vectorized signatures (pytest-asserted byte-identical
-            # to the scalar kernel) — the banding hot path
-            sigs = kernel.minhash_signatures_batch(ss, k=K, ngram=NGRAM)
-            rows = []
-            for s, sig in zip(ss, sigs):
-                for bi, bh in enumerate(kernel.band_hashes(sig, BANDS)):
-                    rows.append((s, bi, bh))
-            yield pd.DataFrame(rows, columns=["surface", "band_id", "band_hash"])
-
+    `assume_distinct` skips the per-surface dedup shuffle when the caller
+    guarantees one row per surface — e.g. the pipeline's surface_stats
+    groupBy output, where a redundant distinct is a full vocabulary shuffle
+    job of fixed latency."""
     pool = surfaces.select("surface")
     if not assume_distinct:
         pool = pool.distinct()
-    # explicit repartition: AQE coalesces the (byte-tiny) distinct output to
-    # ~1 partition, but the minhash kernel is CPU-heavy per row — spread it
-    # across all cores regardless of byte size
-    par = surfaces.sparkSession.sparkContext.defaultParallelism
-    b = pool.repartition(par).mapInPandas(run, schema=_BANDS_SCHEMA)
-    buckets = (
-        b.groupBy("band_id", "band_hash")
-        .agg(F.sort_array(F.collect_list("surface")).alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= MAX_BUCKET))
-    )
-    ms = F.col("ms")
-    pair_arrays = F.transform(
-        ms,
-        lambda x, i: F.transform(
-            F.slice(ms, i + F.lit(2), F.size(ms)),
-            lambda y: F.struct(x.alias("a"), y.alias("b")),
-        ),
-    )
-    lsh = (
-        buckets.select(F.explode(F.flatten(pair_arrays)).alias("p"))
-        .select("p.a", "p.b")
-    )
-    norm_groups = (
-        pool
-        .groupBy(F.regexp_replace(F.col("surface"), WS_CLASS, "").alias("nk"))
-        .agg(F.sort_array(F.collect_list("surface")).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    rec = norm_groups.select(
-        F.col("ms")[0].alias("a"),
-        F.explode(F.slice(F.col("ms"), 2, F.size(F.col("ms")))).alias("b"),
+    s = F.col("surface")
+    cand = dedup.lsh_candidates(
+        pool.select(s.alias("key"), s.alias("text")),
+        NGRAM,
+        F.regexp_replace(F.col("text"), WS_CLASS, ""),
     )
     # JVM levenshtein counts UTF-16 code units, equal to the kernel's DP
     # for BMP text
     edit_sim = F.lit(1.0) - F.levenshtein(F.col("a"), F.col("b")) / F.greatest(
         F.length("a"), F.length("b"), F.lit(1)
     )
-    return lsh.unionByName(rec).filter(edit_sim >= EDIT_THRESHOLD).distinct()
+    return cand.filter(edit_sim >= EDIT_THRESHOLD).distinct()
 
 
 def verify_pairs(pairs: DataFrame) -> DataFrame:
@@ -308,13 +240,13 @@ def canonical_map_local(surfaces: list[str]) -> dict[str, str]:
 
     pool = [s for s in surfaces if s]
     buckets: dict[tuple[int, int], list[str]] = defaultdict(list)
-    sigs = kernel.minhash_signatures_batch(pool, k=K, ngram=NGRAM)
+    sigs = kernel.minhash_signatures_batch(pool, k=dedup.K, ngram=NGRAM)
     for s, sig in zip(pool, sigs):
-        for bi, bh in enumerate(kernel.band_hashes(sig, BANDS)):
+        for bi, bh in enumerate(kernel.band_hashes(sig, dedup.BANDS)):
             buckets[(bi, bh)].append(s)
     cands: set[tuple[str, str]] = set()
     for members in buckets.values():
-        if len(members) <= MAX_BUCKET:
+        if len(members) <= dedup.MAX_BUCKET:
             cands.update(itertools.combinations(sorted(set(members)), 2))
     # whitespace-normalized exact recovery, as in candidate_pairs
     norm_groups: dict[str, list[str]] = defaultdict(list)

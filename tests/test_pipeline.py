@@ -448,6 +448,16 @@ def test_default_driver_mem_is_quarter_of_host_at_most_4g(monkeypatch):
     assert sized(256 * 1024 * 1024) == "4096m"  # capped at 4 GiB
 
 
+def test_default_cores_is_usable_host_cpus(monkeypatch):
+    from esgkg import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert session.default_cores() == 3  # the CPUs this process may use
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    assert session.default_cores() == 2
+
+
 def test_manifest_concurrent_commits(spark):
     """Stages committed from concurrent driver threads (build_kg commits
     nodes and edges from two) each land exactly one manifest row."""

@@ -291,23 +291,27 @@ def test_canonical_map_distributed_rung_purity_at_scale(spark):
     assert merged / n_multi >= 0.97
 
 
-def test_minhash_oversized_bucket_exact_recovery(spark):
+def test_minhash_oversized_bucket_exact_recovery(spark, monkeypatch):
     """Identical boilerplate that lands in dropped (oversized) LSH buckets
-    must still dedup via the exact content-hash diversion — O(n) recovery
-    rows pairing each doc to its hash-group keeper."""
+    must still dedup via the exact content-hash pass — O(n) recovery rows
+    pairing each doc to its hash-group keeper. Empty and null texts pair
+    with nothing, though the exact pass spans the whole pool."""
     boiler = [(i, "the same boilerplate page body " * 20) for i in range(200)]
     near = [
         (900, "a distinctive document about adaptive query execution here"),
         (901, "a distinctive document about adaptive query execution there"),
     ]
-    docs = spark.createDataFrame(boiler + near, "doc_id long, text string")
-    pairs = dedup.minhash_near_dup_pairs(
-        docs, shingle=5, jaccard_threshold=0.6, max_bucket=32
-    ).collect()
+    blank = [(950, ""), (951, ""), (952, None), (953, None)]
+    docs = spark.createDataFrame(
+        boiler + near + blank, "doc_id long, text string"
+    )
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 32)
+    pairs = dedup.minhash_near_dup_pairs(docs, jaccard_threshold=0.6).collect()
     got = {(r.a, r.b) for r in pairs}
     # every boilerplate doc pairs with the keeper (id 0): exactly 199 rows
     assert {(0, i) for i in range(1, 200)} <= got
     assert (900, 901) in got
+    assert not any(i in p for p in got for i in (950, 951, 952, 953))
     # recovery is linear, not quadratic: no (1, 2)-style non-keeper pairs
     # beyond what small buckets legitimately emit
     assert len(got) < 500
@@ -404,7 +408,7 @@ def test_canon_oversized_bucket_whitespace_recovery(spark, monkeypatch):
     df = spark.createDataFrame(
         [(s,) for s in [base] + variants], "surface string"
     )
-    monkeypatch.setattr(canon, "MAX_BUCKET", 4)
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 4)
     cm_local = {
         r.surface: r.canonical
         for r in canon.canonical_map(df).collect()
@@ -428,27 +432,15 @@ def test_minhash_band_agreement_prefilter(spark):
         (2, "совершенно другой документ о другом содержании " * 8),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    kw = dict(shingle=5, jaccard_threshold=0.7)
-    strict = {(r.a, r.b) for r in dedup.minhash_near_dup_pairs(docs, **kw).collect()}
+    strict = {
+        (r.a, r.b)
+        for r in dedup.minhash_near_dup_pairs(docs, jaccard_threshold=0.7)
+        .collect()
+    }
     assert (0, 1) in strict and not any(2 in p for p in strict)
 
 
-def test_minhash_prefilter_clamps_to_band_count(spark):
-    """With a single band, one collision is enough: an identical pair is
-    found, not dropped for lack of a second agreeing band."""
-    # identical texts: with bands=1 a collision needs the FULL signature to
-    # agree, so only an identical pair reliably lands in one bucket
-    text = "adaptive query execution re-plans the physical stage graph " * 8
-    docs = spark.createDataFrame(
-        [(0, text), (1, text)], "doc_id long, text string"
-    )
-    pairs = dedup.minhash_near_dup_pairs(
-        docs, bands=1, k=32, shingle=5, jaccard_threshold=0.7,
-    ).collect()
-    assert {(r.a, r.b) for r in pairs} == {(0, 1)}
-
-
-def test_minhash_prefilter_capped_bucket_interaction(spark):
+def test_minhash_prefilter_capped_bucket_interaction(spark, monkeypatch):
     """A true near-dup pair whose agreeing bands mostly land in oversized
     (capped) buckets must still reach verify through the one band bucket
     that survives the cap."""
@@ -461,9 +453,8 @@ def test_minhash_prefilter_capped_bucket_interaction(spark):
     # and the texts differ, so the exact-recovery pass cannot rescue them
     near = [(900, base + " aa"), (901, base + " ab")]
     docs = spark.createDataFrame(boiler + near, "doc_id long, text string")
-    pairs = dedup.minhash_near_dup_pairs(
-        docs, shingle=5, jaccard_threshold=0.7, max_bucket=8,
-    ).collect()
+    monkeypatch.setattr(dedup, "MAX_BUCKET", 8)
+    pairs = dedup.minhash_near_dup_pairs(docs, jaccard_threshold=0.7).collect()
     got = {(r.a, r.b) for r in pairs}
     assert (900, 901) in got
     # the boilerplate group still pairs via the exact recovery pass

@@ -4,7 +4,8 @@ verification and CC fixpoint rungs all run (the pipeline's own vocabulary
 takes the driver rung). The per-stage timings of the pipeline tail come from
 `perfbench/run.py --workload kg_build --trace 1`.
 
-Usage: python tools/profile_tail.py --cores 16 --surfaces 5000000
+Usage: python tools/profile_tail.py --surfaces 5000000 [--cores N]
+(--cores defaults to `session.default_cores()`, as `get_spark` does)
 """
 
 from __future__ import annotations
@@ -85,16 +86,15 @@ def canon_at_scale(spark, n_surfaces: int) -> dict:
 
 
 def main() -> None:
+    from esgkg.session import default_cores, get_spark
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cores", type=int, default=16)
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument(
         "--surfaces", type=int, required=True,
         help="number of distinct synthetic surfaces to canonicalize",
     )
     args = ap.parse_args()
-
-    from esgkg.session import get_spark
-
     spark = get_spark(cores=args.cores, app=f"canonscale{args.cores}")
     out = canon_at_scale(spark, args.surfaces)
     print(json.dumps({"cores": args.cores, **out}))
