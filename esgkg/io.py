@@ -81,9 +81,8 @@ class ParquetCatalog:
         ]
 
     def write(self, df: DataFrame, name: str,
-              partition_by: list[str] | None = None,
-              mode: str = "overwrite") -> None:
-        w = df.write.mode(mode)
+              partition_by: list[str] | None = None) -> None:
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))

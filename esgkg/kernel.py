@@ -317,10 +317,13 @@ def minhash_signature(s: str, k: int = 32, ngram: int = 3) -> np.ndarray:
     return sig
 
 
+# grams per affine-transform chunk of `minhash_signatures_batch`: bounds its
+# (grams × k) uint64 intermediate at 200k × 32 × 8 B ≈ 51 MB
+MAX_GRAMS_PER_CHUNK = 200_000
+
+
 def minhash_signatures_batch(strings: list[str], k: int = 32,
-                             ngram: int = 3,
-                             max_grams_per_chunk: int = 200_000
-                             ) -> np.ndarray:
+                             ngram: int = 3) -> np.ndarray:
     """Vectorized `minhash_signature` over a batch → (len(strings), k)
     int64, row-for-row BYTE-IDENTICAL to the scalar function (pytest
     asserts equality): same sorted-shingle order, same uint64 wrap-around
@@ -330,8 +333,9 @@ def minhash_signatures_batch(strings: list[str], k: int = 32,
     instead of k tiny-array ops per string, and the per-shingle blake2b
     base hash is memoized across the batch (surface vocabularies repeat
     shingles heavily). ~10x on vocabulary-shaped batches — this is the
-    banding hot path of canonicalization. Chunked by total gram count so
-    the intermediate matrix stays bounded regardless of batch/text size."""
+    banding hot path of canonicalization. Chunked by total gram count
+    (`MAX_GRAMS_PER_CHUNK`, read when called) so the intermediate matrix
+    stays bounded regardless of batch/text size."""
     if k not in _MH_CACHE:
         _MH_CACHE[k] = _minhash_params(k)
     a, b = _MH_CACHE[k]
@@ -370,7 +374,7 @@ def minhash_signatures_batch(strings: list[str], k: int = 32,
         bases.append(hs)
         counts.append(len(hs))
         pending += len(hs)
-        if pending >= max_grams_per_chunk:
+        if pending >= MAX_GRAMS_PER_CHUNK:
             flush()
     flush()
     return out
@@ -429,13 +433,14 @@ def edit_similarity(a: str, b: str) -> float:
 EMBED_DIM = 64
 
 
-def hash_embed(text: str, dim: int = EMBED_DIM) -> np.ndarray:
-    """Char-3gram feature hashing into `dim` buckets with ±1 signs, L2-normed."""
-    v = np.zeros(dim, dtype=np.float64)
+def hash_embed(text: str) -> np.ndarray:
+    """Char-3gram feature hashing into `EMBED_DIM` buckets with ±1 signs,
+    L2-normed."""
+    v = np.zeros(EMBED_DIM, dtype=np.float64)
     norm = unicodedata.normalize("NFKC", text).lower()
     grams = [norm[i : i + 3] for i in range(max(1, len(norm) - 2))]
     for g in grams:
         h = stable_hash64(g, seed=5)
-        v[h % dim] += 1.0 if (h >> 32) & 1 else -1.0
+        v[h % EMBED_DIM] += 1.0 if (h >> 32) & 1 else -1.0
     n = np.linalg.norm(v)
     return (v / n if n > 0 else v).astype(np.float32)

@@ -30,7 +30,10 @@ from .. import session as _session
 
 N_TABLES = 12      # LSH tables per signature
 ANN_PLANES = 6     # bits per table in ann_topk's index
+PROBE_HAMMING = 1  # ann_topk also probes buckets within this many bits
 LSH_SEED = 1234
+# cap on the collected+broadcast probe side of the batch k-NN join
+MAX_QUERIES = 100_000
 
 
 def lit_vector(v) -> Column:
@@ -118,10 +121,9 @@ def hyperplane_signatures(embeddings: DataFrame) -> DataFrame:
 
 
 def ann_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
-             probe_hamming: int = 1,
              signatures: DataFrame | None = None) -> DataFrame:
     """Multi-table LSH approximate top-k: score only vectors that share a
-    bucket (within `probe_hamming` bits) with the query in ANY table.
+    bucket (within `PROBE_HAMMING` bits) with the query in ANY table.
 
     `signatures`: a precomputed (id, table, bucket) table from
     `hyperplane_signatures`.
@@ -136,7 +138,7 @@ def ann_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
     for t in range(N_TABLES):
         qb = int(((q @ planes[t]) > 0).dot(pows))
         buckets = {qb}
-        if probe_hamming >= 1:
+        if PROBE_HAMMING >= 1:
             for i in range(ANN_PLANES):
                 buckets.add(qb ^ (1 << i))
         for b in buckets:
@@ -156,8 +158,7 @@ def ann_topk(embeddings: DataFrame, qvec: list[float], k: int = 10,
 
 
 def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
-                              k: int = 5,
-                              max_queries: int = 100_000) -> DataFrame:
+                              k: int = 5) -> DataFrame:
     """The map side of the batch k-NN join: per PARTITION, the exact top-k
     corpus neighbors of every query — (query_id, id, score), at most Q×k
     rows per non-empty partition (the partial-reduce contract a global
@@ -171,22 +172,22 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
     reduced to exactly Q×k rows per partition with one pandas sort.
 
     The queries side is collected and broadcast (the 'probe table'
-    contract), so it must be driver-small: `max_queries` fails loud instead
-    of OOMing the driver on a misused corpus-sized probe side (mirrors
-    rewrite_triples' broadcast gate — the limit(n+1) collect never ships
-    more than n+1 rows even when the caller passes a huge DataFrame). For a
-    genuinely large probe side, block-partition the queries and union
-    per-block joins, or use the LSH index path."""
+    contract), so it must be driver-small: `MAX_QUERIES` (read when
+    called) fails loud instead of OOMing the driver on a misused
+    corpus-sized probe side (the limit(n+1) collect never ships more than
+    n+1 rows even when the caller passes a huge DataFrame). For a genuinely
+    large probe side, block-partition the queries and union per-block
+    joins, or use the LSH index path."""
     _session.ensure_shipped(embeddings.sparkSession)
     qrows = (
-        queries.select("vec_id", "embedding").limit(max_queries + 1).collect()
+        queries.select("vec_id", "embedding").limit(MAX_QUERIES + 1).collect()
     )
-    if len(qrows) > max_queries:
+    if len(qrows) > MAX_QUERIES:
         raise ValueError(
-            f"the kNN probe (queries) side exceeds max_queries="
-            f"{max_queries} in scored_topk_per_partition; it is "
-            "collected+broadcast and must be small (raise max_queries "
-            "deliberately, or use the ann index)"
+            f"the kNN probe (queries) side exceeds MAX_QUERIES="
+            f"{MAX_QUERIES} in scored_topk_per_partition; it is "
+            "collected+broadcast and must be small (block-partition the "
+            "queries, or use the ann index)"
         )
     qids = np.asarray([int(r[0]) for r in qrows], dtype=np.int64)
     qmat = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
@@ -243,7 +244,7 @@ def scored_topk_per_partition(embeddings: DataFrame, queries: DataFrame,
 
 
 def pairwise_topk_join(embeddings: DataFrame, queries: DataFrame,
-                       k: int = 5, max_queries: int = 100_000) -> DataFrame:
+                       k: int = 5) -> DataFrame:
     """Batch k-NN join: for every query vector, the top-k corpus neighbors.
 
     Arrow-batched matrix multiply per partition against a broadcast query
@@ -251,7 +252,7 @@ def pairwise_topk_join(embeddings: DataFrame, queries: DataFrame,
     'probe table' shape). The map side pre-reduces to ≤ Q×k rows per
     partition (`scored_topk_per_partition`); the window is the final
     exact reduce over Q×k×partitions rows, not Q×N."""
-    scored = scored_topk_per_partition(embeddings, queries, k, max_queries)
+    scored = scored_topk_per_partition(embeddings, queries, k)
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("id"))

@@ -23,6 +23,7 @@ confidence) after the read, so the stored format is the same everywhere.
 from __future__ import annotations
 
 import os
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -81,10 +82,13 @@ def build_kg(
     if base_dir is not None:
         runner = manifest.Runner(spark, ParquetCatalog(base_dir))
         fp = fingerprint(n_pages, seed)
-    scratch = f"/dev/shm/esgkg-bench-{os.getpid()}" if os.path.isdir(
+    root = f"/dev/shm/esgkg-bench-{os.getpid()}" if os.path.isdir(
         "/dev/shm"
     ) else f"/tmp/esgkg-bench-{os.getpid()}"
-    _register_scratch_cleanup(scratch)
+    _register_scratch_cleanup(root)
+    # one scratch directory per memoized build: a later build must not
+    # overwrite the files behind the DataFrames the memo hands out again
+    scratch = f"{root}/{uuid.uuid4().hex}"
 
     def keep(name: str, make, how: str, partition_by=None,
              params: str = "") -> DataFrame:
@@ -147,7 +151,6 @@ def build_kg(
     stats = graph.surface_stats(linked).persist()
     # assume_distinct: stats is a groupBy output (one row per surface by
     # construction) — canonical_map skips its own distinct+localCheckpoint
-    # plus the banding/recovery dedup shuffles
     cmap = keep(
         "canon_map",
         lambda: canon.canonical_map(

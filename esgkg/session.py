@@ -107,15 +107,13 @@ def ensure_shipped(spark: SparkSession) -> None:
 def get_spark(
     cores: int | None = None,
     app: str = "esgkg",
-    shuffle_partitions: int | None = None,
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     cores = cores or default_cores()
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.default.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -91,10 +91,10 @@ def _min_label_components(pairs) -> dict[str, str]:
     return {n: find(n) for n in parent}
 
 
-def candidate_pairs(surfaces: DataFrame,
-                    assume_distinct: bool = False) -> DataFrame:
+def candidate_pairs(surfaces: DataFrame) -> DataFrame:
     """LSH candidate pairs (a < b) over the `surface` column, already
-    filtered by edit similarity ≥ EDIT_THRESHOLD.
+    filtered by edit similarity ≥ EDIT_THRESHOLD. The caller passes a
+    distinct pool: `canonical_map`'s is distinct on both of its branches.
 
     Blocking is `dedup.lsh_candidates` with each surface as both key and
     text. Its exact key is the whitespace-stripped surface: the surface pool
@@ -106,18 +106,10 @@ def candidate_pairs(surfaces: DataFrame,
     The JVM edit-similarity filter runs BEFORE the dedup shuffle: a pair
     colliding in several bands is emitted several times, but only
     survivors reach the distinct, and it drops the ~99% of candidates that
-    share a legal-suffix shingle but nothing else before any python verify.
-
-    `assume_distinct` skips the per-surface dedup shuffle when the caller
-    guarantees one row per surface — e.g. the pipeline's surface_stats
-    groupBy output, where a redundant distinct is a full vocabulary shuffle
-    job of fixed latency."""
-    pool = surfaces.select("surface")
-    if not assume_distinct:
-        pool = pool.distinct()
+    share a legal-suffix shingle but nothing else before any python verify."""
     s = F.col("surface")
     cand = dedup.lsh_candidates(
-        pool.select(s.alias("key"), s.alias("text")),
+        surfaces.select(s.alias("key"), s.alias("text")),
         NGRAM,
         F.regexp_replace(F.col("text"), WS_CLASS, ""),
     )
@@ -298,8 +290,7 @@ def canonical_map(surfaces: DataFrame,
     surface_stats groupBy output). Skips this function's own
     distinct+localCheckpoint — at bench scale that pair of vocabulary-wide
     shuffle jobs is ~7 s of fixed latency paid identically at every core
-    count — and forwards the guarantee to candidate_pairs, whose banding
-    and whitespace-recovery passes drop their dedup shuffle."""
+    count."""
     # one distinct over the (large) surface stream feeds both the LSH pool
     # and the identity join — computed once, reused (skipped entirely when
     # the caller already holds the distinct, materialized pool)
@@ -326,9 +317,7 @@ def canonical_map(surfaces: DataFrame,
     # size probe, so no intermediate materialization is needed on the
     # dist_pairs rung (the common one). Only the rare dist_cc rung
     # (> PAIR_THRESHOLD verified pairs) re-evaluates the chain.
-    pairs = verify_pairs(
-        candidate_pairs(pool, assume_distinct=assume_distinct)
-    ).select("a", "b")
+    pairs = verify_pairs(candidate_pairs(pool)).select("a", "b")
     comp, on_driver = connected_components(pairs)
     LAST_STRATEGY = "dist_pairs" if on_driver else "dist_cc"
     # the union-find result is tiny (≤ PAIR_THRESHOLD pairs) → broadcast it

@@ -73,17 +73,17 @@ class Runner:
             fingerprint, set(self.catalog.files(stage))
         )
 
-    def _commit(self, stage: str, fingerprint: str,
-                metrics: dict | None = None) -> None:
+    def _commit(self, stage: str, fingerprint: str) -> None:
         """Commit the table `stage` as just written: its row count and
-        per-data-file counts come from the parquet footers."""
+        per-data-file counts come from the parquet footers. The `metrics`
+        column stays `{}` until a run report fills it."""
         per_file = self.catalog.data_files(stage)
         self.catalog.append_rows(MANIFEST, [{
             "stage": stage,
             "input_fingerprint": fingerprint,
             "row_count": sum(per_file.values()),
             "partition_counts": json.dumps(per_file, sort_keys=True),
-            "metrics": json.dumps(metrics or {}),
+            "metrics": "{}",
             "committed_at": time.time(),
         }], SCHEMA)
         self._latest[stage] = (fingerprint, set(per_file))
@@ -94,11 +94,10 @@ class Runner:
         fingerprint: str,
         produce: Callable[[], DataFrame],
         partition_by: list[str] | None = None,
-        metrics: dict | None = None,
     ) -> DataFrame:
         """Produce-or-resume one stage. Returns the stage's output table."""
         if self._committed(stage, fingerprint) and self.catalog.exists(stage):
             return self.catalog.read(self.spark, stage)
         self.catalog.write(produce(), stage, partition_by=partition_by)
-        self._commit(stage, fingerprint, metrics)
+        self._commit(stage, fingerprint)
         return self.catalog.read(self.spark, stage)

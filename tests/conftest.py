@@ -5,6 +5,6 @@ import pytest
 def spark():
     from esgkg.session import get_spark
 
-    s = get_spark(cores=8, app="esgkg-tests", shuffle_partitions=8)
+    s = get_spark(cores=8, app="esgkg-tests")
     yield s
     s.stop()

@@ -209,7 +209,7 @@ def test_org_regex_matches_variants():
             assert m and m.group(0) == s, s
 
 
-def test_minhash_batch_equals_scalar():
+def test_minhash_batch_equals_scalar(monkeypatch):
     """minhash_signatures_batch must be row-for-row byte-identical to the
     scalar minhash_signature — same sorted-shingle order, same uint64
     wrap-around affine transform — including empty/short/unicode edge
@@ -229,9 +229,8 @@ def test_minhash_batch_equals_scalar():
         scalar = kernel.minhash_signature(s, k=32, ngram=3)
         assert np.array_equal(batch[i], scalar), s
     # chunk boundary mid-batch must not change results
-    chunked = kernel.minhash_signatures_batch(
-        strings, k=32, ngram=3, max_grams_per_chunk=17
-    )
+    monkeypatch.setattr(kernel, "MAX_GRAMS_PER_CHUNK", 17)
+    chunked = kernel.minhash_signatures_batch(strings, k=32, ngram=3)
     assert np.array_equal(chunked, batch)
     # band hashes over batch rows equal band hashes over scalar sigs
     for i, s in enumerate(strings):

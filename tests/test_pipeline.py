@@ -433,6 +433,19 @@ def test_manifest_mode_same_columns_and_digests_as_bench_mode(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_second_bench_build_keeps_memoized_scratch(spark):
+    """A bench-mode build with other settings must not overwrite the
+    parquet scratch behind an earlier build that the memo hands out
+    again: the memoized DataFrames still read, with their first counts."""
+    tables = ("linked_triples", "triples", "edges")
+    first = pipeline.build_kg(spark, 60)
+    want = {t: first[t].count() for t in tables}
+    pipeline.build_kg(spark, 90)
+    again = pipeline.build_kg(spark, 60)
+    assert again is first
+    assert {t: again[t].count() for t in tables} == want
+
+
 def test_default_driver_mem_is_quarter_of_host_at_most_4g(monkeypatch):
     from esgkg import session
 
